@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. The JSON is (a) written to a file —
@@ -110,17 +109,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to every core: the driver benches on the full machine and
     // does not set SPARK_GRAFT_CPUS (a 4-thread default under-times by ~2×)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

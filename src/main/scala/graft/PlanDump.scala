@@ -1,24 +1,54 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Writes PLANS.md: formatted physical plans of the flagship queries at
-  * sf0.001 — committed evidence of the plan shapes SCALE.md claims
-  * (pushdown, broadcasts, single-cube exchange, map-side group limits)
-  * without needing to run anything. Regenerate with
-  * `sbt "runMain graft.PlanDump"` after plan-affecting changes. */
+/** Formatted physical plans as committed evidence, in two modes.
+  *
+  *  - `sbt "runMain graft.PlanDump"` rewrites PLANS.md: the flagship
+  *    queries at sf0.001 on local[4], the plan shapes SCALE.md claims
+  *    (pushdown, broadcasts, single-cube exchange, map-side group
+  *    limits). No spec reads the file; regenerate it after
+  *    plan-affecting changes.
+  *  - `sbt "runMain graft.PlanDump <tag> <outdir> <q1,q2,...>"` writes
+  *    `<outdir>/<q>_<tag>.txt` for each named declared query at
+  *    `SPARK_GRAFT_SF_DIR` (default sf0.1, the scale the bench runs:
+  *    local stats at sf0.001 can flip broadcast decisions) on
+  *    `SPARK_GRAFT_CPUS` cores (default: all). The before/after plans
+  *    under `plans/` were written this way. */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = args match {
+    case Array() => plansMd()
+    case Array(tag, outDir, names) =>
+      perQuery(tag, outDir, names.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    case _ => sys.error("usage: PlanDump [<tag> <outdir> <q1,q2,...>]")
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  // the insights NullSentinel begins with U+0000, which would make a
+  // committed file binary for git/grep: render control chars visibly
+  private def visible(text: String): String = text.flatMap {
+    case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
+    case c => f"\\x${c.toInt}%02x"
+  }
+
+  private def perQuery(tag: String, outDir: String, names: Seq[String]): Unit = {
+    val spark = GraftSession.local(GraftSession.cpus())
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val out = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.writeString(out, visible(formatted(SparkEntry.queries(name)(spark, dir))))
+      println(s"wrote $out")
+    }
+    spark.stop()
+  }
+
+  private def plansMd(): Unit = {
+    val spark = GraftSession.local(4)
     val dir = "/root/testdata/sf0.001"
     val picks = Seq(
       "q5_nation_revenue"       -> "star join: dims broadcast, fact-side shuffles on join keys only",
@@ -86,7 +116,7 @@ object PlanDump {
       "profile_drift_approx" -> "approx drift: two Expand-free approx snapshot panels + two exact-NDV validation legs, all crossing as broadcast 1-row aggregates — the NDV drift verdict compares the two sketch estimates; the corpus never joins")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of flagship queries (sf0.001)\n\n")
-    sb.append("Generated by `sbt \"runMain graft.PlanDump\"`; asserted in PlanSpec.\n")
+    sb.append("Generated by `sbt \"runMain graft.PlanDump\"`; evidence only, no spec reads this file.\n")
     picks.foreach { case (name, why) =>
       // dedup_minhash_lsh's declared query serves from the materialized
       // pair index (a bare scan once built); the committed evidence must
@@ -94,17 +124,9 @@ object PlanDump {
       val df =
         if (name == "dedup_minhash_lsh") ops.Dedup.dedupMinhashLsh(spark, dir)
         else SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
+      sb.append(s"\n## $name — $why\n\n```\n${formatted(df)}```\n")
     }
-    // the insights NullSentinel begins with U+0000, which would make the
-    // committed file binary for git/grep — render control chars visibly
-    val text = sb.toString.flatMap {
-      case c if c == '\n' || c == '\t' || c >= ' ' => c.toString
-      case c => f"\\x${c.toInt}%02x"
-    }
-    Files.writeString(Paths.get("PLANS.md"), text)
+    Files.writeString(Paths.get("PLANS.md"), visible(sb.toString))
     spark.stop()
     println("PLANS.md written")
   }

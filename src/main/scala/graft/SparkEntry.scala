@@ -16,46 +16,55 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("insights_orders_cube")(spark, "/root/testdata/sf0.001")
 
+  /** Each operator module's declared queries, in registry order. A name
+    * declared by two modules would be silently dropped by `++`; the
+    * registry spec checks the sizes add up. */
+  private[graft] lazy val moduleQueries: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
+    ops.Relational.queries,
+    insights.InsightsQueries.queries,
+    ops.Dedup.queries,
+    ops.Similarity.queries,
+    ops.TextAnalysis.queries,
+    ops.Events.queries,
+    ops.Temporal.queries,
+    ops.Multimodal.queries,
+    ops.Skew.queries,
+    ops.Pipeline.queries,
+    ops.Curation.queries,
+    ops.RelationalExt.queries,
+    ops.Tpch.queries,
+    ops.Layout.queries,
+    ops.Mining.queries,
+    ops.Calibrate.queries,
+    sources.SourceQueries.queries)
+
+  /** Each module's DuckDB oracles, in the order of [[moduleQueries]]. */
+  private[graft] lazy val moduleOracles: Seq[Map[String, String]] = Seq(
+    ops.Relational.oracleSql,
+    insights.InsightsQueries.oracleSql,
+    ops.Dedup.oracleSql,
+    ops.Similarity.oracleSql,
+    ops.TextAnalysis.oracleSql,
+    ops.Events.oracleSql,
+    ops.Temporal.oracleSql,
+    ops.Multimodal.oracleSql,
+    ops.Skew.oracleSql,
+    ops.Pipeline.oracleSql,
+    ops.Curation.oracleSql,
+    ops.RelationalExt.oracleSql,
+    ops.Tpch.oracleSql,
+    ops.Layout.oracleSql,
+    ops.Mining.oracleSql,
+    ops.Calibrate.oracleSql,
+    sources.SourceQueries.oracleSql)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++
-      insights.InsightsQueries.queries ++
-      ops.Dedup.queries ++
-      ops.Similarity.queries ++
-      ops.TextAnalysis.queries ++
-      ops.Events.queries ++
-      ops.Temporal.queries ++
-      ops.Multimodal.queries ++
-      ops.Skew.queries ++
-      ops.Pipeline.queries ++
-      ops.Curation.queries ++
-      ops.RelationalExt.queries ++
-      ops.Tpch.queries ++
-      ops.Layout.queries ++
-      ops.Mining.queries ++
-      ops.Calibrate.queries ++
-      sources.SourceQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    moduleQueries.reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. As of r6 every declared query has an
     * oracle entry (engine-specific sketch/RNG queries emit exact values
     * plus tolerance verdicts that the oracle asserts true). */
-  def oracleSql: Map[String, String] =
-    ops.Relational.oracleSql ++
-      insights.InsightsQueries.oracleSql ++
-      ops.Dedup.oracleSql ++
-      ops.Similarity.oracleSql ++
-      ops.TextAnalysis.oracleSql ++
-      ops.Events.oracleSql ++
-      ops.Temporal.oracleSql ++
-      ops.Multimodal.oracleSql ++
-      ops.Skew.oracleSql ++
-      ops.Pipeline.oracleSql ++
-      ops.Curation.oracleSql ++
-      ops.RelationalExt.oracleSql ++
-      ops.Tpch.oracleSql ++
-      ops.Layout.oracleSql ++
-      ops.Mining.oracleSql ++
-      ops.Calibrate.oracleSql ++
-      sources.SourceQueries.oracleSql
+  lazy val oracleSql: Map[String, String] = moduleOracles.reduce(_ ++ _)
 }

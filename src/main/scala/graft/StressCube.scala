@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object StressCube {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions","16").config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(16)
     val li = Tables.lineitem(spark, "/root/testdata/sf0.1").repartition(32)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cfg = insights.InsightsConfig(

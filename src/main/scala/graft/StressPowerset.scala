@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.insights.{InsightsEngine, PlayStore}
 
 /** The flagship-number driver (r6 verdict, next-round #1): the reference's
@@ -38,15 +37,7 @@ object StressPowerset {
     val variants: Seq[String] =
       (if (args.length > 2) args(2) else "dict,string").split(",").toSeq
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus())
 
     val cfg = PlayStore.cfg.copy(groupingCols = PlayStore.cfg.groupingCols.take(k))
     // Same input discipline as extractScale: explicit schema (no inference

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Calibrate, Dedup, Indexes}
 
@@ -35,16 +35,7 @@ object StressRebuild {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val scale = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else "/tmp/graft_rebuild"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus())
     def fmt(v: Double): String = (math.round(v * 1000) / 1000.0).toString
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()

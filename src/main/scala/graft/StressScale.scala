@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off scaling probe (not part of the declared suite): synthesizes an
@@ -211,16 +211,8 @@ object StressScale {
       val want = args(3).split(",").map(_.trim).toSet
       Probes.filter(p => want.contains(p._1))
     } else Probes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.local(cpus)
 
     // Re-key stride: the smallest power of 10 (>= 10M, the historical
     // constant) ABOVE the table's max key, so probe outputs can be fed
@@ -406,10 +398,10 @@ object StressScale {
     // so its cross-round numbers stay comparable.
     val partitionsCache = scala.collection.mutable.Map[String, Int]()
     def shufflePartitionsFor(name: String, dir: String): Int =
-      if (!name.startsWith("events_cooccurrence")) cpus.toInt
+      if (!name.startsWith("events_cooccurrence")) cpus
       else partitionsCache.getOrElseUpdate(dir, {
         val rows = spark.read.parquet(s"$dir/events.parquet").count()
-        math.max(cpus.toInt, math.min(4096, (3 * rows / 500000L).toInt + 1))
+        math.max(cpus, math.min(4096, (3 * rows / 500000L).toInt + 1))
       })
     def time(name: String,
         q: (org.apache.spark.sql.SparkSession, String) =>
@@ -421,7 +413,7 @@ object StressScale {
         val t0 = System.nanoTime()
         q(spark, dir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     }
     // warm up codegen/classloading before the first timed query
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -51,14 +51,24 @@ object Verify {
     * spark.stop() (observed: >3 min on a 1 s-budget cancel test), which
     * would re-create exactly the rc=124 failure mode this harness exists
     * to prevent. All results are already flushed to disk before this is
-    * called, so halting is safe. */
+    * called, so halting is safe. A clean stop exits normally instead, so
+    * the JVM's shutdown hooks delete the run's temp dirs (graft's,
+    * Spark's artifact dir, extracted native libs), still under a bound. */
   def stopAndHalt(spark: SparkSession, exitHook: () => Unit = () => ()): Unit = {
     val stopper = new Thread(() => spark.stop(), "graft-spark-stop")
     stopper.setDaemon(true)
     stopper.start()
     stopper.join(60000)
     exitHook()
-    Runtime.getRuntime.halt(0)
+    if (stopper.isAlive) {
+      // halt skips the shutdown hook that deletes the run's temp dirs
+      GraftSession.deleteTempDirs()
+      Runtime.getRuntime.halt(0)
+    }
+    val watchdog = new Thread(() => { Thread.sleep(30000); Runtime.getRuntime.halt(0) })
+    watchdog.setDaemon(true)
+    watchdog.start()
+    sys.exit(0)
   }
 
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -76,16 +86,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (mirrors Bench's SPARK_GRAFT_BENCH_ONLY):
     // the driver never sets it, so its runs stay full-surface

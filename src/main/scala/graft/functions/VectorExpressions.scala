@@ -1075,7 +1075,7 @@ object VectorExpressions {
     *    0 when n_tokens < 5.
     *
     * Bit-for-bit equal to the exploded formulation — the
-    * `textGopherRulesTwin` equivalence is pinned in
+    * `Twins.textGopherRulesTwin` equivalence is pinned in
     * VectorExpressionsSpec (fixture + adversarial tie/empty-token
     * cases). */
   case class GopherTextStats(child: Expression, stops: Seq[String])

@@ -861,7 +861,7 @@ object Curation {
     // this panel (HLLs into a HashAggregate leg, string min/max into
     // their own leg) was implemented and MEASURED SLOWER —
     // profile_tables_approx 2.2 → 3.0 s, profile_columns_approx
-    // 1.2 → 1.4 s. Probe (StressProbeR17): 4 HLL sketches are 2.4×
+    // 1.2 → 1.4 s. Probe (OPTIMIZATION_r17.md): 4 HLL sketches are 2.4×
     // FASTER under the interpreted SortAggregate (0.89 s) than under
     // HashAggregate (2.16 s) — each rsd-0.01 sketch is ~1.6 k long
     // buffer ATTRIBUTES and the hash path degrades with buffer width —
@@ -1034,7 +1034,7 @@ object Curation {
     // (gid, value) partial group carry FOUR rsd-0.01 HLL buffers
     // (~13 KB each): ~50 k groups × 52 KB of sketch churn — measured
     // 9.6 s isolated at sf0.1 (vs 2.8 s before the collapse). Fixed
-    // shape, from the StressProbeR17 measurements:
+    // shape, from the OPTIMIZATION_r17.md measurements:
     //   - the APPROX leg (HLLs + nulls + min/max + count) stays ONE
     //     aggregate on the interpreted SortAggregate path — measured
     //     2.4× FASTER than HashAggregate for rsd-0.01 sketches (each is
@@ -1120,7 +1120,7 @@ object Curation {
     // r17 (guide §1.1): the two per-snapshot aggregates now ride ONE
     // job — union the snapshots under a tag, group the whole panel by
     // the tag, pivot the 2 rows wide. The panel deliberately stays one
-    // SortAggregate (StressProbeR17: rsd-0.01 HLL sketches are 2.4×
+    // SortAggregate (OPTIMIZATION_r17.md: rsd-0.01 HLL sketches are 2.4×
     // faster there than under HashAggregate — each sketch is ~1.6 k
     // long buffer attributes and the hash path degrades with buffer
     // width; the "sort" is 2 groups over narrow rows). Zero Expand as

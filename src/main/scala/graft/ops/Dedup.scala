@@ -22,6 +22,16 @@ import graft.Tables._
   */
 object Dedup {
 
+  /** Jaccard threshold of the exact n-gram pair family: the posting
+    * join, both prefix joins and the verified LSH legs. */
+  private val JaccardT = 0.5
+  /** Their size-ratio prune `n_a <= n_b * SizeBand`: J(A,B) ≤ min/max,
+    * so J ≥ t implies max ≤ min/t, and the prune is lossless only while
+    * SizeBand ≥ 1/t. An Int, so the join predicate stays integer. */
+  private val SizeBand = 2
+  require(SizeBand * JaccardT >= 1.0,
+    s"size band $SizeBand drops true pairs at Jaccard threshold $JaccardT")
+
   /** Exact dedup: one group per distinct text, keeper = min doc_id.
     * Single hash-aggregate shuffle on the text (at scale: on a text
     * digest — grouping by md5 keeps shuffle rows narrow). */
@@ -75,7 +85,7 @@ object Dedup {
     * symmetric-Jaccard sibling of [[containmentPairs]]. */
   private[graft] def ngramJaccardHashPrefix(s: SparkSession, dir: String,
       hotDf: Long): DataFrame = {
-    val t = 0.5
+    val t = JaccardT
     val sh = shingled(documents(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ex0 = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
@@ -104,12 +114,13 @@ object Dedup {
     // is min(|A|−i, |B|−j) — a true pair always survives via its FIRST
     // common element (inside both prefixes by the theorem), deeper
     // matches are pruned in the join condition. Length-band and
-    // size-ratio prunes as in the posting join (lossless at J ≥ 0.5).
+    // size-ratio prunes as in the posting join (SizeBand).
     val need = (col("a.n_sh") + col("b.n_sh")) * lit(t / (1.0 + t))
     val candidates = prefix.as("a").join(prefix.as("b"),
         col("a.hk") === col("b.hk") && col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.n_chars") - col("b.n_chars")) <= lit(100) &&
-          col("a.n_sh") <= col("b.n_sh") * 2 && col("b.n_sh") <= col("a.n_sh") * 2 &&
+          col("a.n_sh") <= col("b.n_sh") * SizeBand &&
+          col("b.n_sh") <= col("a.n_sh") * SizeBand &&
           least(col("a.n_sh") - col("a.pos"), col("b.n_sh") - col("b.pos"))
             .cast("double") >= need)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
@@ -159,15 +170,15 @@ object Dedup {
       .filter(col("df") > hotDf).select(col("shingle"))
     val cold = sh.join(broadcast(hotShingles), Seq("shingle"), "left_anti")
     val hot = sh.join(broadcast(hotShingles), Seq("shingle"), "left_semi")
-    // size-ratio bound: J ≥ 0.5 implies max(|A|,|B|) ≤ 2·min(|A|,|B|)
-    // (J ≤ min/max), so the predicate prunes pairs pre-aggregation
-    // without changing the result set — the oracle is unchanged
+    // size-ratio bound (SizeBand): prunes pairs pre-aggregation without
+    // changing the result set — the oracle is unchanged
     def joinPairs(a: DataFrame, b: DataFrame, extra: Column): DataFrame =
       a.as("a").join(b.as("b"),
         col("a.shingle") === col("b.shingle") && extra &&
           col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.n_chars") - col("b.n_chars")) <= lit(100) &&
-          col("a.n_sh") <= col("b.n_sh") * 2 && col("b.n_sh") <= col("a.n_sh") * 2)
+          col("a.n_sh") <= col("b.n_sh") * SizeBand &&
+          col("b.n_sh") <= col("a.n_sh") * SizeBand)
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
           col("a.n_sh").as("a_n"), col("b.n_sh").as("b_n"))
     val coldPairs = joinPairs(cold, cold, lit(true))
@@ -183,7 +194,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"),
         (col("n_inter").cast("double") /
           (col("a_n") + col("b_n") - col("n_inter")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= JaccardT)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -197,7 +208,7 @@ object Dedup {
     * Same result set (and oracle) as `dedupNgramJaccard`; far fewer
     * pair-rows through the shuffle when shingle df is skewed. */
   def dedupNgramJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
-    val t = 0.5
+    val t = JaccardT
     val sh = shingled(documents(s, dir))
       // 8-byte key arrays ride the persisted index for the hashed
       // PRE-verify below (hashing only merges elements, so the hashed
@@ -229,7 +240,8 @@ object Dedup {
     val candidates = prefix.as("a").join(prefix.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.n_chars") - col("b.n_chars")) <= lit(100) &&
-          col("a.n_sh") <= col("b.n_sh") * 2 && col("b.n_sh") <= col("a.n_sh") * 2 &&
+          col("a.n_sh") <= col("b.n_sh") * SizeBand &&
+          col("b.n_sh") <= col("a.n_sh") * SizeBand &&
           (least(col("a.n_sh") - col("a.rnk"), col("b.n_sh") - col("b.rnk")) + 1)
             .cast("double") >= need)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
@@ -338,7 +350,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"),
         (size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
           size(array_union(col("a_sh"), col("b_sh"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= JaccardT)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -409,7 +421,7 @@ object Dedup {
       .select(col("new_id"), col("dup_of"),
         (size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
           size(array_union(col("a_sh"), col("b_sh"))).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= JaccardT)
       .orderBy(col("new_id"), col("dup_of"))
   }
 

@@ -114,8 +114,7 @@ object Indexes {
     if (hit != null) hit
     else {
       val path = Option(paths.get(key)).getOrElse {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft_index_$tag").toString
+        val p = graft.GraftSession.tempDir(s"graft_index_$tag")
         build.write.mode("overwrite").parquet(p)
         paths.putIfAbsent(key, p)
         paths.get(key)
@@ -142,8 +141,7 @@ object Indexes {
     if (hit != null) hit
     else {
       val path = Option(paths.get(key)).getOrElse {
-        val p = java.nio.file.Files
-          .createTempDirectory(s"graft_index_$tag").toString
+        val p = graft.GraftSession.tempDir(s"graft_index_$tag")
         write(p)
         writeStamp(p, stamp)
         paths.putIfAbsent(key, p)
@@ -212,14 +210,14 @@ object Indexes {
   /** Explicit index REBUILD at the calibrator's current parameters: a
     * fresh parquet dir (never an in-place overwrite of a dir readers may
     * be scanning), stamped with `stamp`, atomically swapped into the
-    * path map, cached scan dropped. The old dir is left for the temp-dir
-    * reaper — production would retire it after in-flight readers drain
+    * path map, cached scan dropped. The old dir stays until JVM exit
+    * (`GraftSession.tempDir`) — production would retire it after
+    * in-flight readers drain
     * (the table-format snapshot motion). Returns the new index scan. */
   private[graft] def rebuildIndex(s: SparkSession, dir: String, tag: String,
       stamp: Map[String, Long])(build: => DataFrame): DataFrame = {
     val key = (s, dir, tag)
-    val p = java.nio.file.Files
-      .createTempDirectory(s"graft_index_$tag").toString
+    val p = graft.GraftSession.tempDir(s"graft_index_$tag")
     build.write.mode("overwrite").parquet(p)
     writeStamp(p, stamp)
     paths.put(key, p)

@@ -922,7 +922,7 @@ object RelationalExt {
     * |distinct prices| × |flags| REGARDLESS of row count.
     * `l_returnflag` has ~3 distinct values, so the raw-row shape
     * (`sum(wt) over (partition by flag order by v)` directly on the full
-    * lineitem projection, the twin below) funnels the ENTIRE table into
+    * lineitem projection, the test-source `Twins.weightedMedianRaw`) funnels the ENTIRE table into
     * ~3 window partitions and sorts there — fine at sf0.1 (it measured
     * 0.4 s faster on the fixture's near-unique prices, r17), a skew
     * cliff at 100 TB. The histogram's hash aggregate does map-side
@@ -946,25 +946,6 @@ object RelationalExt {
     weightedMedianHistogram(lineitem(s, dir)
       .select(col("l_returnflag"), cents(col("l_extendedprice")).as("v"),
         col("l_quantity").cast("long").as("wt")))
-
-  /** Raw-row RANGE-frame formulation — the shape for corpora whose
-    * (flag, v) pairs are near-unique (the pre-aggregate is pure overhead
-    * there, r17 measurement). Equivalence twin for
-    * [[weightedMedianHistogram]]; not on the declared surface because
-    * its window partitions by the ~3-value flag over UNBOUNDED input —
-    * the 100 TB skew cliff the r17 verdict flagged. */
-  private[graft] def weightedMedianRaw(rows: DataFrame): DataFrame = {
-    val byFlag = Window.partitionBy(col("l_returnflag"))
-    rows
-      .withColumn("cw", sum(col("wt")).over(byFlag.orderBy(col("v"))))
-      .withColumn("total_weight", sum(col("wt")).over(byFlag))
-      .filter(col("cw") * 2 >= col("total_weight"))
-      .groupBy(col("l_returnflag"), col("total_weight"))
-      .agg(min(col("v")).as("weighted_median_cents"))
-      .select(col("l_returnflag"), col("total_weight"),
-        col("weighted_median_cents"))
-      .orderBy(col("l_returnflag"))
-  }
 
   /** Histogram formulation — THE DECLARED SHAPE (r18): pre-aggregates
     * (flag, v) before the window so the per-flag sort input is bounded

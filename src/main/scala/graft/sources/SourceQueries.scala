@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.GraftSession.tempDir
 import graft.Tables._
 
 /** Declared queries that put the non-parquet source/sink formats under
@@ -21,14 +22,11 @@ import graft.Tables._
   * drift hazard — SURVEY.md §1.2). */
 object SourceQueries {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   /** parquet → ORC → aggregate. ORC is Spark's other vectorized
     * columnar format: same pushdown/pruning behavior as parquet, so
     * the only thing under test is write/read fidelity. */
   def sourceOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("graft_orc_rt") + "/orders_orc"
+    val path = tempDir("graft_orc_rt") + "/orders_orc"
     Sources.writeOrc(orders(s, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
       col("o_totalprice")), path)
@@ -76,7 +74,7 @@ object SourceQueries {
     * the dictionary, where the fallback (and thus the bloom) happens
     * naturally and this option must NOT be set. */
   private[graft] def writeBloomOrders(s: SparkSession, dir: String): String = {
-    val path = tmpDir("graft_bloom_rt") + "/orders_bloom"
+    val path = tempDir("graft_bloom_rt") + "/orders_bloom"
     orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .write
@@ -92,7 +90,7 @@ object SourceQueries {
     * the aggregate must reproduce the parquet-side numbers bit-for-bit
     * or the oracle row goes red. */
   def sourceJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("graft_json_rt") + "/orders_json"
+    val path = tempDir("graft_json_rt") + "/orders_json"
     Sources.writeJson(orders(s, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
       cents(col("o_totalprice")).as("price_cents")), path)
@@ -124,7 +122,7 @@ object SourceQueries {
     * reuses the bucket partitioning — the whole query runs with no data
     * movement except the final tiny per-status rollup. */
   def sourceBucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = tmpDir("graft_bucketed")
+    val base = tempDir("graft_bucketed")
     orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         cents(col("o_totalprice")).as("price_cents"))
@@ -159,7 +157,7 @@ object SourceQueries {
     * are FILE-based — a literal in-memory dim would constant-fold into
     * static pruning and prove nothing. */
   def sourceDppJoin(s: SparkSession, dir: String): DataFrame = {
-    val base = tmpDir("graft_dpp")
+    val base = tempDir("graft_dpp")
     // the dim's key type must MATCH the inferred partition-column type
     // (int): a cast on the fact-side join key is not a bare partition
     // attribute, and the PartitionPruning rule passes on it silently
@@ -229,7 +227,7 @@ object SourceQueries {
     * pins the merged schema in a catalog/metastore and reads with an
     * explicit schema instead (the documented swap, same output). */
   def sourceSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val base = tmpDir("graft_schema_evo")
+    val base = tempDir("graft_schema_evo")
     val o = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"),
       col("o_orderpriority"))
     o.filter(col("o_orderkey") % 2 === 0).drop("o_orderpriority")
@@ -275,7 +273,7 @@ object SourceQueries {
     * SourcesSpec can re-read the same directory under PERMISSIVE and
     * prove the bad lines physically reach the reader. */
   private[graft] def writeCsvWithBadRows(s: SparkSession, dir: String): String = {
-    val path = tmpDir("graft_csv_rt") + "/orders_csv"
+    val path = tempDir("graft_csv_rt") + "/orders_csv"
     orders(s, dir).orderBy(col("o_orderkey")).limit(100)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
         col("o_orderpriority"))

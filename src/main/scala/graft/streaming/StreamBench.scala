@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-batch latency/throughput figures for the Structured Streaming
@@ -21,19 +20,9 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus())
 
-    val stage = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val stage = graft.GraftSession.tempDir("graft_stream")
     // SOAK mode (r6 verdict #7): SPARK_GRAFT_STREAM_REPLICATE=N unions N
     // time-SHIFTED copies of the events table (copy i moved forward by
     // i × (span + 1 h)) — a continuous multi-month event log, so a
@@ -87,7 +76,7 @@ object StreamBench {
         .outputMode(mode)
         .format("noop")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"ck_$name").toString)
+          graft.GraftSession.tempDir(s"ck_$name"))
         .start()
       val t0 = System.nanoTime()
       q.processAllAvailable()
@@ -138,8 +127,8 @@ object StreamBench {
       val cfg = InsightsConfig(
         groupingCols = Seq("event_type", "value"),
         buckets = Map("value" -> 100L))
-      val corePath = java.nio.file.Files.createTempDirectory("graft_soak_core").toString
-      val seenPath = java.nio.file.Files.createTempDirectory("graft_soak_seen").toString
+      val corePath = graft.GraftSession.tempDir("graft_soak_core")
+      val seenPath = graft.GraftSession.tempDir("graft_soak_seen")
       val checkEvery = math.max(nFiles / 5, 1)
       var checks = 0
       var checksOk = 0
@@ -152,7 +141,7 @@ object StreamBench {
       val q = src.writeStream
         .outputMode(Append)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ck_insights_view").toString)
+          graft.GraftSession.tempDir("ck_insights_view"))
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           val b0 = System.nanoTime()
           batch.write.mode("overwrite").parquet(s"$seenPath/b=$id")

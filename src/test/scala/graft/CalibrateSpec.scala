@@ -131,7 +131,7 @@ class CalibrateSpec extends AnyFunSuite {
     // 10x snapshot in its own dir (the layout path reads a corpus DIR):
     // bp = 1000 → the pruned scan reads blocks 0-9 only and must land on
     // the scanning pass's row bit-for-bit (same coin, same estimators)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune10x").toString
+    val tmp = GraftSession.tempDir("graft_prune10x")
     val docs = Tables.documents(spark, dir)
     (0 until 10).map { k =>
       if (k == 0) docs
@@ -354,8 +354,7 @@ class CalibrateSpec extends AnyFunSuite {
     assert(!Calibrate.storedCalibrationIsStale(spark, dir))
     // simulate a VIOLATED snapshot contract: a corpus dir whose
     // documents.parquet is overwritten in place after calibration
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_snapshot_demo").toString
+    val tmp = GraftSession.tempDir("graft_snapshot_demo")
     def writeDocs(n: Long): Unit = (1L to n)
       .map(id => (id, (1 to 12).map(i => s"d${id}_$i").mkString(" ")))
       .toDF("doc_id", "text")

@@ -7,24 +7,31 @@ class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.001"
 
-  lazy val brutePairs: Set[(Long, Long)] =
-    Dedup.dedupNgramJaccard(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+  // the plain inverted-index posting join (no hot shingles, so no salted
+  // route): a formulation independent of the prefix, LSH and incremental
+  // bodies the tests below pin against it
+  lazy val postingPairs: Set[(Long, Long)] =
+    Dedup.dedupNgramJaccardCapped(spark, dir, hotDf = Long.MaxValue, saltBuckets = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("planted near-dup pairs exist in the fixture") {
-    assert(brutePairs.nonEmpty)
+    assert(postingPairs.nonEmpty)
   }
 
   test("prefix-filtered Jaccard join equals the inverted-index join (lossless)") {
+    // both prefix orders: df-rarest-first and the declared hash order
     val prefix = Dedup.dedupNgramJaccardPrefix(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(prefix === brutePairs)
+    assert(prefix === postingPairs)
+    val hashPrefix = Dedup.dedupNgramJaccard(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(hashPrefix === postingPairs)
   }
 
   test("MinHash-LSH pairs equal the exact Jaccard pairs (verified candidates)") {
     val lsh = Dedup.dedupMinhashLsh(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lsh === brutePairs)
+    assert(lsh === postingPairs)
   }
 
   test("minhash verification applies the family's ±100-char length blocking (planted long/short pair)") {
@@ -62,7 +69,7 @@ class DedupSpec extends AnyFunSuite {
   test("incremental LSH probe equals the batch×corpus slice of the exact pairs") {
     // restriction of the full exact pair set to pairs with exactly one
     // endpoint in the batch (doc_id ≡ 0 mod 10), re-oriented (new, old)
-    val want = brutePairs.collect {
+    val want = postingPairs.collect {
       case (a, b) if a % 10 == 0 && b % 10 != 0 => (a, b)
       case (a, b) if b % 10 == 0 && a % 10 != 0 => (b, a)
     }
@@ -75,7 +82,7 @@ class DedupSpec extends AnyFunSuite {
   test("SimHash (bigram features) finds every planted near-dup pair") {
     val sim = Dedup.dedupSimhash(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(brutePairs.subsetOf(sim), s"missing: ${brutePairs.diff(sim)}")
+    assert(postingPairs.subsetOf(sim), s"missing: ${postingPairs.diff(sim)}")
   }
 
   test("hot-shingle df-cap + salted pair generation is result-identical") {
@@ -85,7 +92,7 @@ class DedupSpec extends AnyFunSuite {
     val capped = Dedup.dedupNgramJaccardCapped(spark, dir,
         hotDf = 1L, saltBuckets = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped === brutePairs)
+    assert(capped === postingPairs)
   }
 
   test("simhash signatures: <2-word docs are excluded, not crashed on") {

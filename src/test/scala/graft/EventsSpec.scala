@@ -227,7 +227,7 @@ class EventsSpec extends AnyFunSuite {
     // parquet like a real testdata regeneration would) must fail at the
     // loader with the observed type — not flow downstream un-normalized
     // into window/watermark arithmetic
-    val tornDir = java.nio.file.Files.createTempDirectory("graft_ts3").toString
+    val tornDir = GraftSession.tempDir("graft_ts3")
     Seq(1.7e9).toDF("ts").write.mode("overwrite").parquet(tornDir)
     val third = spark.read.parquet(tornDir)
     val ex = intercept[IllegalStateException] { Tables.normalizeTs(third) }

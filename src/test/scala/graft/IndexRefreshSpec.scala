@@ -215,7 +215,7 @@ class IndexRefreshSpec extends AnyFunSuite {
     // stamp mismatch on serve and rebuilds at the new rung.
     import org.apache.spark.sql.functions._
     import graft.ops.Calibrate
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rungflip").toString
+    val tmp = GraftSession.tempDir("graft_rungflip")
     def corpus(from: Long, until: Long) = spark.range(from, until).select(
       col("id").as("doc_id"),
       when(col("id").isin(498L, 499L), lit("alpha beta gamma delta epsilon"))
@@ -257,7 +257,7 @@ class IndexRefreshSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
     import graft.streaming.StreamingDedup
-    val tmp = java.nio.file.Files.createTempDirectory("graft_foreignstamp").toString
+    val tmp = GraftSession.tempDir("graft_foreignstamp")
     spark.range(200).select(col("id").as("doc_id"),
         concat(lit("p"), col("id").cast("string"), lit(" q"),
           col("id").cast("string"), lit(" r"), col("id").cast("string")).as("text"))

@@ -52,7 +52,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-ordered write round-trips rows unchanged") {
-    val path = java.nio.file.Files.createTempDirectory("graft_zw").toString + "/e"
+    val path = GraftSession.tempDir("graft_zw") + "/e"
     val src = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), pmod(col("user_id"), lit(256L)).as("ub"),
         hour(col("ts")).cast("long").as("hr"))
@@ -65,7 +65,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("partitioned z-ordered write: same data schema as unpartitioned, no _z") {
-    val base = java.nio.file.Files.createTempDirectory("graft_zwp").toString
+    val base = GraftSession.tempDir("graft_zwp")
     val src = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(256L)).as("ub"),

@@ -21,7 +21,7 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
       |""".stripMargin
 
   lazy val csvPath: String = {
-    val dir = Files.createTempDirectory("graft_golden")
+    val dir = java.nio.file.Paths.get(GraftSession.tempDir("graft_golden"))
     val f = dir.resolve("apps.csv")
     Files.writeString(f, fixtureCsv)
     f.toString
@@ -92,7 +92,7 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
     val extra = fixtureCsv +
       "5,x.y.z,DevD,dev4,,True,Card,CARD,10,False,0,0,200,1,False,False,10,4.7,2020\n" +
       "6,q.r.s,DevE,dev5,,True,Card,CARD,10,False,0,0,10,1,False,False,10,4.7,1950\n"
-    val dir = Files.createTempDirectory("graft_clean")
+    val dir = java.nio.file.Paths.get(GraftSession.tempDir("graft_clean"))
     Files.writeString(dir.resolve("apps.csv"), extra)
     val cleaned = PlayStore.clean(PlayStore.readCsv(spark, dir.toString + "/apps.csv"))
     // row 5: ratings=200 out of [0,100]; row 6: releasedYear 1950 < 1971
@@ -118,7 +118,7 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
   }
 
   test("extractCompat end-to-end: two-phase CSV output with the reference's Insights header") {
-    val out = Files.createTempDirectory("graft_compat").toString + "/insights"
+    val out = GraftSession.tempDir("graft_compat") + "/insights"
     val cfg2 = PlayStore.cfg.copy(groupingCols = Seq("genreId", "free"))
     PlayStore.extractCompat(spark, csvPath, out, config = cfg2)
     // final compacted file: header line "Insights" (reference writes
@@ -141,7 +141,7 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
   }
 
   test("extractScale end-to-end: explicit-schema read, cube output matches compat rows") {
-    val out = Files.createTempDirectory("graft_scale").toString + "/insights"
+    val out = GraftSession.tempDir("graft_scale") + "/insights"
     val cfg2 = PlayStore.cfg.copy(groupingCols = Seq("genreId", "free"))
     PlayStore.extractScale(spark, csvPath, out, config = cfg2)
     val rows = spark.read.option("header", false).csv(out)

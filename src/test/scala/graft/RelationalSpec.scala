@@ -56,7 +56,7 @@ class RelationalSpec extends AnyFunSuite {
     val fixture = Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), Tables.cents(col("l_extendedprice")).as("v"),
         col("l_quantity").cast("long").as("wt"))
-    assert(rowsOf(graft.ops.RelationalExt.weightedMedianRaw(fixture)) ===
+    assert(rowsOf(Twins.weightedMedianRaw(fixture)) ===
       rowsOf(graft.ops.RelationalExt.weightedMedianHistogram(fixture)))
     // duplicated-v corpus: every value appears many times, median lands
     // mid-tie; also a single-row group and an even/odd mass split
@@ -64,7 +64,7 @@ class RelationalSpec extends AnyFunSuite {
       ("A", 10L, 3L), ("A", 10L, 2L), ("A", 20L, 4L), ("A", 20L, 1L),
       ("A", 30L, 10L), ("B", 5L, 1L), ("C", 7L, 2L), ("C", 7L, 2L))
       .toDF("l_returnflag", "v", "wt")
-    assert(rowsOf(graft.ops.RelationalExt.weightedMedianRaw(dup)) ===
+    assert(rowsOf(Twins.weightedMedianRaw(dup)) ===
       rowsOf(graft.ops.RelationalExt.weightedMedianHistogram(dup)))
   }
 

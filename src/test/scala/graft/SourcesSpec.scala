@@ -34,7 +34,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("CSV and JSON round-trip preserve the relation (schema given)") {
-    val tmp = Files.createTempDirectory("graft_src").toString
+    val tmp = GraftSession.tempDir("graft_src")
     val orig = Tables.nation(spark, dir)
     Sources.writeJson(orig, s"$tmp/nation_json")
     Sources.writeCsv(orig, s"$tmp/nation_csv")
@@ -49,7 +49,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("malformed CSV rows: PERMISSIVE captures, DROPMALFORMED drops, FAILFAST throws") {
     import org.apache.spark.sql.types._
-    val tmp = Files.createTempDirectory("graft_bad").toString
+    val tmp = GraftSession.tempDir("graft_bad")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/data.csv"),
       "id,qty\n1,10\n2,notanumber\n3,30\n")
     val schema = StructType(Seq(
@@ -80,7 +80,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip preserves the relation") {
-    val tmp = Files.createTempDirectory("graft_orc").toString
+    val tmp = GraftSession.tempDir("graft_orc")
     val orig = Tables.customer(spark, dir)
     Sources.writeOrc(orig, s"$tmp/customer_orc")
     val back = Sources.orc(spark, s"$tmp/customer_orc")
@@ -100,7 +100,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet: planning-time partition pruning reaches the scan") {
-    val tmp = Files.createTempDirectory("graft_part").toString
+    val tmp = GraftSession.tempDir("graft_part")
     val events = Tables.events(spark, dir)
       .withColumn("day", expr("unix_micros(ts) div 86400000000"))
     Sources.writeParquetPartitioned(events, s"$tmp/events_by_day", Seq("day"))
@@ -121,7 +121,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("clustered parquet: every output file is internally sorted by the sort key") {
-    val tmp = Files.createTempDirectory("graft_clustered").toString
+    val tmp = GraftSession.tempDir("graft_clustered")
     val events = Tables.events(spark, dir)
       .withColumn("day", expr("unix_micros(ts) div 86400000000"))
       .withColumn("us", expr("unix_micros(ts)"))
@@ -141,7 +141,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("CSV schema inference matches explicit schema on clean data") {
-    val tmp = Files.createTempDirectory("graft_src2").toString
+    val tmp = GraftSession.tempDir("graft_src2")
     Sources.writeCsv(Tables.region(spark, dir), s"$tmp/region_csv")
     val inferred = Sources.csv(spark, s"$tmp/region_csv")
     assert(inferred.schema.map(_.dataType.typeName).toSet === Set("integer", "string"))

@@ -16,7 +16,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   private def runStream(residue: Int, sinkName: String): Set[(Long, Long, Double)] = {
     // stage the residue's docs as 3 files so the probe spans micro-batches
-    val staged = java.nio.file.Files.createTempDirectory("graft_dedup_feed").toString
+    val staged = GraftSession.tempDir("graft_dedup_feed")
     Tables.documents(spark, dir).filter(StreamingDedup.residuePred(residue))
       .repartition(3).write.mode("overwrite").parquet(staged)
     val stream = StreamingDedup.admissionFilter(spark, dir,

@@ -14,7 +14,7 @@ class StreamingSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
   // the file-source needs a directory; stage the single parquet file
   lazy val eventsPath: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
+    val d = java.nio.file.Paths.get(GraftSession.tempDir("graft_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
@@ -77,7 +77,7 @@ class StreamingSpec extends AnyFunSuite {
     // stage the documents parquet TWICE: every document arrives as a
     // duplicate, so the result only matches batch if the watermarked
     // digest-dedup state actually deduplicates across files
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_docs")
+    val d = java.nio.file.Paths.get(GraftSession.tempDir("graft_stream_docs"))
     for (n <- Seq("a", "b")) java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       d.resolve(s"documents_$n.parquet"))
@@ -128,7 +128,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch idempotent sink: replayed batch is a no-op, result == batch answer") {
     import graft.streaming.StreamingEvents
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val out = GraftSession.tempDir("graft_sink")
     val stream = StreamingEvents.readEventsStream(spark, eventsPath)
     val counts = stream.withWatermark("ts", "1 hour")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_events"))
@@ -155,10 +155,10 @@ class StreamingSpec extends AnyFunSuite {
       groupingCols = Seq("event_type", "value"),
       buckets = Map("value" -> 100L))
     // stage events as 4 files so the file source yields 4 micro-batches
-    val staged = java.nio.file.Files.createTempDirectory("graft_mv_src").toString
+    val staged = GraftSession.tempDir("graft_mv_src")
     Tables.events(spark, dir).repartition(4)
       .write.mode("overwrite").parquet(staged)
-    val corePath = java.nio.file.Files.createTempDirectory("graft_mv").toString
+    val corePath = GraftSession.tempDir("graft_mv")
     val schema = spark.read.parquet(staged).schema
     val stream = graft.Tables.normalizeTs(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")

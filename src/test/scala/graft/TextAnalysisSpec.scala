@@ -185,15 +185,15 @@ class TextAnalysisSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val weighted = TextAnalysis.tfidfWeighted(spark, dir)
     assert(rowsOf(TextAnalysis.tfidfBuckets(weighted, 8, 4)) ===
-      rowsOf(TextAnalysis.tfidfBucketsTwin(weighted, 8, 4)))
+      rowsOf(Twins.tfidfBucketsTwin(weighted, 8, 4)))
     val adv = Seq(
       (1L, "alpha", 5L), (1L, "beta", -5L), (1L, "gamma", 0L),
       (2L, "alpha", -7L), (2L, "delta", 7L),
       (3L, "epsilon", 1L)).toDF("doc_id", "term", "w")
     assert(rowsOf(TextAnalysis.tfidfBuckets(adv, 8, 4)) ===
-      rowsOf(TextAnalysis.tfidfBucketsTwin(adv, 8, 4)))
+      rowsOf(Twins.tfidfBucketsTwin(adv, 8, 4)))
     assert(rowsOf(TextAnalysis.tfidfBuckets(adv, 2, 12)) ===
-      rowsOf(TextAnalysis.tfidfBucketsTwin(adv, 2, 12)))
+      rowsOf(Twins.tfidfBucketsTwin(adv, 2, 12)))
   }
 
   test("tf-idf MinHash pairs reproduce the exact pair set bit-for-bit") {
@@ -308,7 +308,7 @@ class TextAnalysisSpec extends AnyFunSuite {
   test("guard-routed tf-idf pairs: exact route when the guard passes, LSH under drift") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_route").toString
+    val tmp = GraftSession.tempDir("graft_route")
     def write(sub: String, rows: Seq[(Long, String)]): String = {
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s0"))

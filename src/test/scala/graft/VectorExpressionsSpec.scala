@@ -314,7 +314,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     import spark.implicits._
     def assertSame(docs: org.apache.spark.sql.DataFrame): Unit = {
       val fused = graft.ops.TextAnalysis.gopherRulesFused(docs)
-      val twin = graft.ops.TextAnalysis.textGopherRulesTwin(docs)
+      val twin = Twins.textGopherRulesTwin(docs)
       assert(fused.exceptAll(twin).count() === 0)
       assert(twin.exceptAll(fused).count() === 0)
     }
