@@ -10,15 +10,12 @@ import graft.insights.PlayStore
   *
   * Usage: InsightsMain --csv_file_path <in.csv> --output_path <outdir>
   *          [--mode compat|scale] [--batch_size 128] [--num_partitions 2]
-  *          [--max_cols k] [--max_groups_per_col n]
+  *          [--max_cols k]
   *
-  * `--max_groups_per_col` overrides the scale-mode routing with a fixed
-  * NDV cut: grouping columns whose post-bucketing HLL distinct count
-  * exceeds it are treated as high-cardinality (iceberg support pruning /
-  * hybrid split — `PlayStore.extractScale`). Default is COST-BASED from
-  * the same stats pass: NDV > 4 × N/threshold routes to iceberg
-  * (`InsightsEngine.costBasedHighCard`), so the flag is only needed to
-  * force a specific plan.
+  * Scale mode (`PlayStore.extractScale`) runs one level-1 pass for N and
+  * each column's popular values, prints its `INSIGHTS route=` line, and
+  * cubes only the popular values of the columns that have any. There is
+  * no routing knob: the pruning is exact for every input.
   *
   * `--max_cols` truncates the grouping universe to the first k columns
   * (2^k−1 subsets). Compat mode literally replays the reference's
@@ -55,9 +52,7 @@ object InsightsMain {
         case "compat" => PlayStore.extractCompat(spark, csvPath, outPath,
           opts.get("batch_size").map(_.toInt).getOrElse(128),
           opts.get("num_partitions").map(_.toInt).getOrElse(2), cfg)
-        case "scale" => PlayStore.extractScale(spark, csvPath, outPath,
-          config = cfg,
-          maxGroupsPerCol = opts.get("max_groups_per_col").map(_.toLong))
+        case "scale" => PlayStore.extractScale(spark, csvPath, outPath, config = cfg)
         case other => sys.error(s"unknown --mode $other (compat|scale)")
       }
     } finally spark.stop()

@@ -11,14 +11,17 @@ import graft.insights.{InsightsEngine, PlayStore}
   * id→value columns functionally dependent).
   *
   * Variants timed (identical surviving-insight sets, require()-checked):
-  *  - dict:   `insightsCubeNativeDict` — the shipping scale-mode plan
+  *  - pruned: `insightsPruned` — the shipping scale-mode body: its own
+  *            level-1 pass (timed with it), then the dict cube over the
+  *            popular values of the columns that have any;
+  *  - dict:   `insightsCubeNativeDict` — the unpruned dict cube
   *            (count-only HashAggregate below the 2^14 Expand, value
   *            columns re-attached post-HAVING from broadcast dicts);
   *  - hybrid: `insightsHybrid(highCard={developerId}, dictValues=true)` —
-  *            what the CLI would route to if ≥2 columns were
-  *            high-cardinality, forced here onto the single wide column
-  *            to price the routing alternative at k=14 (2^13 = 8 192
-  *            loop subsets);
+  *            the cube+loop split on the single wide column (2^13 = 8 192
+  *            loop subsets at k=14);
+  *  - iceberg: `insightsCubeIceberg(highCard={developerId})` — pruning
+  *            on the wide column only;
   *  - string: `insightsCube` — the golden string-key sentinel cube, the
   *            r1-proven A/B sibling, priced at the same k.
   *
@@ -26,8 +29,8 @@ import graft.insights.{InsightsEngine, PlayStore}
   * aggregates and its driver planning alone takes minutes (SCALE.md) —
   * measured to k=10 in BASELINE.md's head-to-head instead.
   *
-  * Usage: runMain graft.StressPowerset <playstore.csv> [k=14] [variants=dict,string]
-  * (hybrid must be asked for explicitly: variants=dict,string,hybrid)
+  * Usage: runMain graft.StressPowerset <playstore.csv> [k=14] [variants=pruned,dict]
+  * (the others must be asked for explicitly: variants=pruned,dict,string,hybrid,iceberg)
   */
 object StressPowerset {
   def main(args: Array[String]): Unit = {
@@ -35,7 +38,7 @@ object StressPowerset {
       "usage: StressPowerset <playstore.csv> [k] [variants]"))
     val k = if (args.length > 1) args(1).toInt else 14
     val variants: Seq[String] =
-      (if (args.length > 2) args(2) else "dict,string").split(",").toSeq
+      (if (args.length > 2) args(2) else "pruned,dict").split(",").toSeq
 
     val spark = GraftSession.local(GraftSession.cpus())
 
@@ -49,9 +52,10 @@ object StressPowerset {
     val prepared = (if (prepared0.rdd.getNumPartitions < cores)
       prepared0.repartition(cores) else prepared0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (n, cards) = InsightsEngine.cardinalityStats(prepared, cfg)
+    val l1 = InsightsEngine.levelOne(prepared, cfg)
+    val n = l1.n
     println(s"POWERSET input_rows=$n k=$k subsets=${(1L << k) - 1} " +
-      s"cards=${cfg.groupingCols.map(c => s"$c:${cards(c)}").mkString(",")}")
+      s"threshold=${l1.threshold} kept=${l1.kept(cfg).mkString(",")}")
 
     // identical-OUTPUT check across variants, not just identical counts:
     // one extra aggregate per run folds the insight strings into an
@@ -83,6 +87,9 @@ object StressPowerset {
         f"hashsum=$hsum sec=$sec%.1f")
     }
     variants.foreach {
+      case "pruned" => time("pruned") {
+        InsightsEngine.insightsPruned(prepared, cfg)
+      }
       case "dict" => time("dict") {
         InsightsEngine.insightsCubeNativeDict(prepared, cfg, n)
       }

@@ -24,6 +24,10 @@ case class InsightsConfig(
     thresholdPercent: Double = 2.0) {
   /** All value columns, in canonical id-col order. */
   def valueCols: Seq[String] = groupingCols.flatMap(c => idValues.getOrElse(c, Nil))
+
+  /** The HAVING bound for `n` input rows: floor(p/100 * n), compared with
+    * `>=` (semantic #7). The level-1 pruning bound is the same number. */
+  def thresholdCount(n: Long): Long = math.floor(thresholdPercent / 100.0 * n).toLong
 }
 
 /** The reference's defining operator (SURVEY.md §2.1 O5-O15): for every
@@ -142,7 +146,7 @@ object InsightsEngine {
     * (reference main.py:328-360). Returns one DataFrame per batch. */
   def enumerateLoop(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
       batchSize: Int = 128, useFirst: Boolean = true): Seq[DataFrame] = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val bucketed = bucket(df, cfg.buckets) // idempotent if already bucketed
     allSubsets(cfg.groupingCols)
       .map(s => insightsForSubset(bucketed, cfg, s, threshold, useFirst))
@@ -174,7 +178,7 @@ object InsightsEngine {
   def insightsCube(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
       useFirst: Boolean = false, dictValues: Boolean = false): DataFrame = {
     if (dictValues) return insightsCubeDict(df, cfg, totalCount)
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val k = cfg.groupingCols.length
     require(k <= 30, s"cube over $k cols overflows grouping_id int range")
 
@@ -327,7 +331,7 @@ object InsightsEngine {
     * configs (count-only HashAggregate + post-filter dictionary join). */
   def insightsCubeNative(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
       useFirst: Boolean = false): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val k = cfg.groupingCols.length
     require(k <= 30, s"cube over $k cols overflows grouping_id int range")
 
@@ -415,7 +419,7 @@ object InsightsEngine {
     * materialized-view pair ([[cubeCoreNative]] writes, this serves). */
   def renderCoreNative(core: DataFrame, cfg: InsightsConfig,
       totalCount: Long): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     renderNative(filterCubedNative(core, cfg, threshold), cfg)
   }
 
@@ -436,30 +440,41 @@ object InsightsEngine {
     * term stays suppressed. */
   def insightsCubeNativeDict(df: DataFrame, cfg: InsightsConfig,
       totalCount: Long): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val bucketed = bucket(df, cfg.buckets)
+    dictCube(bucketed, bucketed, cfg, cfg.thresholdCount(totalCount))
+  }
+
+  /** The native-dict cube over `cubeInput`, display values from the
+    * dictionaries of `dictSource` (both already bucketed). */
+  private def dictCube(cubeInput: DataFrame, dictSource: DataFrame,
+      cfg: InsightsConfig, threshold: Long): DataFrame = {
     val k = cfg.groupingCols.length
     require(k <= 30, s"cube over $k cols overflows grouping_id int range")
-
-    val bucketed = bucket(df, cfg.buckets)
-    requireNonFloatKeys(bucketed, cfg)
-    val cubed = bucketed
+    requireNonFloatKeys(cubeInput, cfg)
+    val cubed = cubeInput
       .cube(cfg.groupingCols.map(c => col(s"`$c`")): _*)
       .agg(count(lit(1)).as("count"), grouping_id().as("gid"))
-    val filtered = filterCubedNative(cubed, cfg, threshold)
-
-    val withValues = cfg.groupingCols.filter(cfg.idValues.contains)
-      .foldLeft(filtered) { (d, idCol) =>
-        val vals = cfg.idValues(idCol)
-        val dict = bucketed
-          .filter(col(s"`$idCol`").isNotNull)
-          .groupBy(col(s"`$idCol`").as(s"__dict_$idCol"))
-          .agg(min(col(s"`${vals.head}`")).as(vals.head),
-            vals.tail.map(v => min(col(s"`$v`")).as(v)): _*)
-        d.join(broadcast(dict), col(s"`$idCol`") === col(s"__dict_$idCol"), "left")
-          .drop(s"__dict_$idCol")
-      }
-    renderNative(withValues, cfg)
+    renderNative(
+      attachDictionaries(filterCubedNative(cubed, cfg, threshold), dictSource, cfg), cfg)
   }
+
+  /** Re-attach each grouped id column's display values after the HAVING
+    * filter: a broadcast left join against a per-id dictionary of
+    * `source` (min value per non-null id). An id column aggregated away
+    * by the cube carries a NULL key, so the join attaches nothing and the
+    * term stays suppressed. */
+  private def attachDictionaries(filtered: DataFrame, source: DataFrame,
+      cfg: InsightsConfig): DataFrame =
+    cfg.groupingCols.filter(cfg.idValues.contains).foldLeft(filtered) { (d, idCol) =>
+      val vals = cfg.idValues(idCol)
+      val dict = source
+        .filter(col(s"`$idCol`").isNotNull)
+        .groupBy(col(s"`$idCol`").as(s"__dict_$idCol"))
+        .agg(min(col(s"`${vals.head}`")).as(vals.head),
+          vals.tail.map(v => min(col(s"`$v`")).as(v)): _*)
+      d.join(broadcast(dict), col(s"`$idCol`") === col(s"__dict_$idCol"), "left")
+        .drop(s"__dict_$idCol")
+    }
 
   /** ICEBERG support pruning — the high-cardinality answer that the
     * hybrid split approximates by brute force. The HAVING threshold is
@@ -489,10 +504,14 @@ object InsightsEngine {
     * is popular the T-cube input is empty and the whole dev-containing
     * half of the powerset is proven empty by one narrow aggregate.
     * Result ≡ `insightsCubeNativeDict` over the full config
-    * (equality-tested in InsightsRandomizedSpec). */
+    * (equality-tested in InsightsRandomizedSpec).
+    *
+    * No route calls it since `insightsPruned` prunes every column; kept
+    * for InsightsRandomizedSpec, PlanSpec's iceberg pin and
+    * StressPowerset's `iceberg` mode until the k=14 lattice numbers. */
   def insightsCubeIceberg(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
       highCard: Set[String]): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val h = cfg.groupingCols.filter(highCard)
     require(h.size <= 4, s"iceberg pruning over ${h.size} high-card columns " +
       "unions 2^|H| cubes — split the config instead")
@@ -528,18 +547,7 @@ object InsightsEngine {
       }
       val filtered = filterCubedNative(cubed, cfgT, threshold)
         .filter(allTGrouped)
-      val withValues = colsT.filter(cfg.idValues.contains)
-        .foldLeft(filtered) { (d, idCol) =>
-          val vals = cfg.idValues(idCol)
-          val dict = bucketed
-            .filter(col(s"`$idCol`").isNotNull)
-            .groupBy(col(s"`$idCol`").as(s"__dict_$idCol"))
-            .agg(min(col(s"`${vals.head}`")).as(vals.head),
-              vals.tail.map(v => min(col(s"`$v`")).as(v)): _*)
-          d.join(broadcast(dict), col(s"`$idCol`") === col(s"__dict_$idCol"), "left")
-            .drop(s"__dict_$idCol")
-        }
-      renderNative(withValues, cfgT)
+      renderNative(attachDictionaries(filtered, bucketed, cfgT), cfgT)
     }
     parts.reduce(_ unionAll _)
   }
@@ -551,7 +559,11 @@ object InsightsEngine {
     * a high-cardinality column runs as its own aggregate (loop mode,
     * where the per-subset group count stays bounded by the data, not
     * multiplied across 2^k subsets). Result ≡ full `insightsCube`
-    * (equality-tested in PlayStoreGoldenSpec). */
+    * (equality-tested in PlayStoreGoldenSpec).
+    *
+    * No route calls it since `insightsPruned`; kept for PlayStoreGoldenSpec,
+    * InsightsRandomizedSpec and StressPowerset's `hybrid` mode until the
+    * k=14 lattice numbers. */
   /** @param dictValues route the cube half through
     *   `insightsCubeNativeDict` (count-only HashAggregate below the
     *   Expand; id→value display via broadcast dictionaries) — pair it
@@ -560,7 +572,7 @@ object InsightsEngine {
   def insightsHybrid(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
       highCard: Set[String], useFirst: Boolean = false,
       dictValues: Boolean = false): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val lowCols = cfg.groupingCols.filterNot(highCard)
     // all-high-card edge: no subset lives entirely in the (empty) cube side
     val cubePart =
@@ -576,66 +588,121 @@ object InsightsEngine {
     (cubePart +: loopParts).reduce(_ unionAll _)
   }
 
-  /** ONE pass over the bucketed frame computing the total row count AND
-    * per-grouping-col approximate distinct counts (HLL sketches) — feeds
-    * both the HAVING threshold (the reference's single count action,
-    * O19) and the cube-vs-hybrid routing decision without a second scan
-    * of the input. */
-  def cardinalityStats(df: DataFrame, cfg: InsightsConfig): (Long, Map[String, Long]) = {
-    val bucketed = bucket(df, cfg.buckets)
-    val aggs = count(lit(1)).as("__n") +:
-      cfg.groupingCols.map(c => approx_count_distinct(col(s"`$c`")).as(c))
-    val row = bucketed.agg(aggs.head, aggs.tail: _*).collect()(0)
-    (row.getLong(0),
-      cfg.groupingCols.zipWithIndex
-        .map { case (c, i) => c -> row.getLong(i + 1) }.toMap)
+  /** The level-1 statistics of the insights lattice.
+    *
+    * @param n         total row count N (the reference's count action, O19)
+    * @param threshold `cfg.thresholdCount(n)`
+    * @param popular   per grouping column, its non-null values whose
+    *                  single-column group holds ≥ threshold rows, with those
+    *                  counts; empty when threshold < 1, where every value
+    *                  clears the HAVING and nothing is pruned */
+  case class LevelOne(n: Long, threshold: Long, popular: Map[String, Seq[(Any, Long)]]) {
+    def pruning: Boolean = threshold >= 1
+
+    /** The grouping columns that can appear in a surviving group, in
+      * canonical order: none when N = 0, all when nothing is pruned,
+      * otherwise those with at least one popular value. */
+    def kept(cfg: InsightsConfig): Seq[String] =
+      if (n == 0) Nil
+      else if (!pruning) cfg.groupingCols
+      else cfg.groupingCols.filter(c => popular(c).nonEmpty)
   }
 
-  /** Pick the high-cardinality grouping columns by measuring approximate
-    * distinct counts post-bucketing (one pass; HLL sketches). */
-  def detectHighCard(df: DataFrame, cfg: InsightsConfig,
-      maxGroupsPerCol: Long = 1000): Set[String] =
-    cardinalityStats(df, cfg)._2
-      .filter { case (_, n) => n > maxGroupsPerCol }.keySet
+  /** The level-1 aggregate: ONE grouping-sets aggregate over `()` and each
+    * single grouping column, carrying only count and grouping_id — a
+    * fixed-width HashAggregate over k+1 projections per row. */
+  def levelOneCounts(df: DataFrame, cfg: InsightsConfig): DataFrame = {
+    val k = cfg.groupingCols.length
+    require(k <= 30, s"cube over $k cols overflows grouping_id int range")
+    val bucketed = bucket(df, cfg.buckets)
+    requireNonFloatKeys(bucketed, cfg)
+    val cols = cfg.groupingCols.map(c => col(s"`$c`"))
+    bucketed
+      .groupingSets(Nil +: cols.map(Seq(_)), cols: _*)
+      .agg(count(lit(1)).as("count"), grouping_id().cast("long").as("gid"))
+  }
 
-  /** COST-BASED high-cardinality routing from the stats pass — no flag.
+  /** Level 1 of the Apriori/BUC lattice (Beyer & Ramakrishnan, SIGMOD
+    * 1999) from one pass over the input: N, the threshold, and each
+    * column's popular values. The aggregate is persisted for its two
+    * reads and unpersisted before returning. The driver receives at most
+    * k·(N/threshold) + 1 rows (at most N/threshold groups of one column,
+    * its null group included, can each hold ≥ threshold of its N rows;
+    * N/threshold ≤ 2·100/p once threshold ≥ 1), never a data-sized
+    * result. */
+  def levelOne(df: DataFrame, cfg: InsightsConfig): LevelOne = {
+    val k = cfg.groupingCols.length
+    val none = (1L << k) - 1 // gid of (): every column aggregated away
+    val counts = levelOneCounts(df, cfg).persist()
+    try {
+      // over empty input the grouping-sets output has no () row at all
+      val n = counts.filter(col("gid") === none).select("count").collect()
+        .headOption.fold(0L)(_.getLong(0))
+      val threshold = cfg.thresholdCount(n)
+      val popular =
+        if (threshold < 1) Map.empty[String, Seq[(Any, Long)]]
+        else {
+          val rows = counts
+            .filter(col("gid") =!= none && col("count") >= threshold).collect()
+          cfg.groupingCols.zipWithIndex.map { case (c, i) =>
+            val gid = none ^ (1L << (k - 1 - i))
+            c -> rows.toSeq.collect {
+              case r if r.getLong(k + 1) == gid && !r.isNullAt(i) => (r.get(i), r.getLong(k))
+            }
+          }.toMap
+        }
+      LevelOne(n, threshold, popular)
+    } finally counts.unpersist(blocking = true)
+  }
+
+  /** Scale-mode insights with level-1 pruning of EVERY column — the body
+    * `PlayStore.extractScale` runs. `count` is monotone under grouping
+    * refinement, so a group keyed on a value whose single-column count is
+    * below the threshold is itself below it. Each such value is mapped to
+    * NULL before the cube, and the data-null drop (semantic #4,
+    * `filterCubedNative`) removes the groups it lands in; groups keyed on
+    * popular values keep every row, so the result is exact. A column with
+    * no popular value leaves the cube (every subset containing it is
+    * empty), which halves the Expand per column dropped. The cube is the
+    * native-dict cube over the kept columns: a count-only HashAggregate,
+    * and display values from broadcast dictionaries that hold only
+    * popular ids (unpopular ids are NULL there too).
+    * Result ≡ `enumerateLoop` with `min` (InsightsRandomizedSpec).
     *
-    * The decision variable is the iceberg popular-value bound: at most
-    * `N / threshold` distinct values of any single column can clear the
-    * HAVING threshold (their single-column groups partition the N rows,
-    * each popular one holding ≥ threshold of them) — with the reference's
-    * 2 % threshold that is ≤ 50 values, independent of N. Iceberg pruning
-    * (`insightsCubeIceberg`) provably collapses a column's contribution to
-    * cube state from NDV to ≤ that bound, so it pays exactly when
-    * NDV ≫ bound; when NDV ≤ bound every value may be popular and the
-    * pruning pass is a pure cost. `margin` (default 4×) keeps borderline
-    * columns on the plain cube: a < 4× state reduction does not buy back
-    * the per-column popularity aggregate + semi-join.
-    *
-    * Degenerate guard: threshold < 1 (N below 1/threshold% rows) means the
-    * HAVING clause passes everything and NO value is prunable — route
-    * nothing. HLL error (~2–5 %) is immaterial at a 4× margin.
-    *
-    * Measured (BASELINE.md): the k=14 Play-Store corpus (developerId NDV
-    * 4 503, N 100 k → bound 50, cut 200) routes to iceberg under default
-    * flags — 1 396 s vs the dict cube's 1 992 s the old 10 000-row flag
-    * default picked. */
-  def costBasedHighCard(totalCount: Long, cards: Map[String, Long],
-      cfg: InsightsConfig, margin: Double = 4.0): Set[String] = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
-    if (threshold < 1) Set.empty
+    * The Expand runs BEFORE the first shuffle, so each task expands its
+    * input partition 2^|kept|-fold (SCALE.md): a small CSV arriving as one
+    * split would put the whole Expand and partial aggregate in ONE task.
+    * The cube input is re-balanced to the core count when the scan gives
+    * fewer splits; at scale, input splits bound it already. The
+    * dictionaries aggregate only popular ids and read the scan as is. */
+  def insightsPruned(df: DataFrame, cfg: InsightsConfig, l1: LevelOne): DataFrame = {
+    val kept = l1.kept(cfg)
+    if (kept.isEmpty) df.sparkSession.emptyDataFrame.select(lit("").as("insight"))
     else {
-      val popularBound = totalCount.toDouble / threshold
-      cards.filter { case (_, ndv) => ndv > margin * popularBound }.keySet
+      val bucketed = bucket(df, cfg.buckets)
+      val pruned =
+        if (!l1.pruning) bucketed
+        else bucketed.select(bucketed.columns.toSeq.map { c =>
+          if (kept.contains(c))
+            when(col(s"`$c`").isin(l1.popular(c).map(_._1): _*), col(s"`$c`")).as(c)
+          else col(s"`$c`")
+        }: _*)
+      val cores = df.sparkSession.sparkContext.defaultParallelism
+      val cubeInput =
+        if (pruned.rdd.getNumPartitions < cores) pruned.repartition(cores) else pruned
+      dictCube(cubeInput, pruned, cfg.copy(groupingCols = kept), l1.threshold)
     }
   }
+
+  def insightsPruned(df: DataFrame, cfg: InsightsConfig): DataFrame =
+    insightsPruned(df, cfg, levelOne(df, cfg))
 
   /** Dictionary-join variant of the cube (see `insightsCube(dictValues)`).
     * The cube aggregates count only; value columns are re-attached after
     * the HAVING filter from broadcast per-id dictionaries (min per id). */
   private def insightsCubeDict(df: DataFrame, cfg: InsightsConfig,
       totalCount: Long): DataFrame = {
-    val threshold = math.floor(cfg.thresholdPercent / 100.0 * totalCount).toLong
+    val threshold = cfg.thresholdCount(totalCount)
     val k = cfg.groupingCols.length
     require(k <= 30, s"cube over $k cols overflows grouping_id int range")
 

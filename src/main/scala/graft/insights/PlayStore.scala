@@ -126,59 +126,34 @@ object PlayStore {
     * literally; scale mode's output for value columns is one reproducible
     * member of the reference's nondeterministic output family.
     *
-    * Routing: one combined stats pass (count + per-column HLL) decides
-    * cube vs iceberg vs hybrid, COST-BASED by default
-    * (`InsightsEngine.costBasedHighCard`): a column routes to iceberg
-    * pruning when its NDV exceeds the popular-value bound N/threshold by
-    * a 4× margin — the condition under which pruning provably collapses
-    * its cube state (≤ 50 surviving values at the 2 % threshold). Pass
-    * `maxGroupsPerCol = Some(n)` to override with a fixed NDV cut.
-    *
-    * Why the split matters, measured (SCALE.md): ONE ~5000-distinct
-    * column at k=10 → cube 87–92 s vs hybrid 293 s (the cube absorbs a
-    * single wide column; hybrid just pays loop planning for the 2^(k-1)
-    * subsets containing it); TWO ~600k-distinct columns at k=8 → cube
-    * state explodes into the hundreds of millions and does not finish,
-    * hybrid stays bounded. Iceberg beats both when NDV ≫ N/threshold:
-    * k=14 corpus, dict cube 1 992 s vs iceberg 1 396 s, identical rows
-    * (BASELINE.md r7) — which default flags now pick automatically. */
+    * Pruning: one level-1 pass (`InsightsEngine.levelOne`, a grouping-sets
+    * count over `()` and each column) gives N and every column's popular
+    * values; the cube then sees each unpopular value as NULL and only
+    * the columns with a popular value (`InsightsEngine.insightsPruned`).
+    * It prints `INSIGHTS route=<pruned|cube|empty> n=… threshold=…
+    * kept=… popular=col:count,…` when that pass ends. The CSV is parsed
+    * once by the level-1 pass, once by the cube and once per kept id
+    * column's display dictionary: three times when one id column is
+    * kept. */
   def extractScale(spark: SparkSession, csvPath: String, outPath: String,
-      config: InsightsConfig = cfg,
-      maxGroupsPerCol: Option[Long] = None): Unit = {
+      config: InsightsConfig = cfg): Unit =
+    scaleInsights(spark, csvPath, config)
+      .write.mode(SaveMode.Overwrite).option("header", false).csv(outPath)
+
+  /** `extractScale` up to its write: runs the level-1 pass, prints the
+    * route line, and returns the planned insight rows. */
+  def scaleInsights(spark: SparkSession, csvPath: String,
+      config: InsightsConfig = cfg): DataFrame = {
     // scale mode reads with the explicit schema: no inference pass
     val prepared = prepare(readCsv(spark, csvPath, schema = Some(schema)))
-    val (n, cards) = InsightsEngine.cardinalityStats(prepared, config)
-    val highCard = maxGroupsPerCol match {
-      case Some(cut) => cards.filter { case (_, c) => c > cut }.keySet
-      case None      => InsightsEngine.costBasedHighCard(n, cards, config)
-    }
-    val route = if (highCard.isEmpty) "cube"
-      else if (highCard.size <= 4) "iceberg" else "hybrid"
-    println(s"INSIGHTS route=$route n=$n highCard=${highCard.toSeq.sorted.mkString(",")} " +
-      s"cards=${config.groupingCols.map(c => s"$c:${cards(c)}").mkString(",")}")
-    // The Expand runs BEFORE the first shuffle, so per-TASK expanded
-    // volume is rows-per-input-partition × 2^k (SCALE.md): a small CSV
-    // arriving as one split would put the entire Expand + partial agg in
-    // ONE task whose hash map degrades to a single-threaded sort. At
-    // 100 TB input splits bound this naturally (maxPartitionBytes); the
-    // CLI re-balances only when the scan gives fewer splits than cores.
-    val cores = spark.sparkContext.defaultParallelism
-    val balanced =
-      if (prepared.rdd.getNumPartitions < cores) prepared.repartition(cores)
-      else prepared
-    val insights =
-      if (highCard.isEmpty)
-        InsightsEngine.insightsCubeNativeDict(balanced, config, n)
-      else if (highCard.size <= 4)
-        // iceberg support pruning: rows with sub-threshold high-card
-        // values are provably dead for every subset containing that
-        // column (count is monotone under grouping refinement), so the
-        // high-card cubes see only the ≤ N/threshold popular values —
-        // result identical, state bounded (InsightsEngine scaladoc)
-        InsightsEngine.insightsCubeIceberg(balanced, config, n, highCard)
-      else
-        InsightsEngine.insightsHybrid(balanced, config, n, highCard,
-          useFirst = false, dictValues = true)
-    insights.write.mode(SaveMode.Overwrite).option("header", false).csv(outPath)
+    val l1 = InsightsEngine.levelOne(prepared, config)
+    val kept = l1.kept(config)
+    val route = if (kept.isEmpty) "empty" else if (l1.pruning) "pruned" else "cube"
+    val popular =
+      if (l1.pruning) config.groupingCols.map(c => s"$c:${l1.popular(c).size}").mkString(",")
+      else "all"
+    println(s"INSIGHTS route=$route n=${l1.n} threshold=${l1.threshold} " +
+      s"kept=${kept.mkString(",")} popular=$popular")
+    InsightsEngine.insightsPruned(prepared, config, l1)
   }
 }

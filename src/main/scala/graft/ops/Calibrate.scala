@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Cost-based calibration of the similarity-stack knobs — the
-  * `InsightsEngine.costBasedHighCard` motion applied to the LSH/banding
-  * family: ONE corpus stats pass derives every parameter the scaladocs'
+/** Cost-based calibration of the similarity-stack knobs — a stats-pass
+  * router applied to the LSH/banding family: ONE corpus stats pass derives every parameter the scaladocs'
   * corpus-size rules previously left as fixture-pinned constants
   * (reference behavior: the parameter-sizing guidance in the MinHash/LSH
   * literature, e.g. Leskovec–Rajaraman–Ullman ch. 3; the repo's own

@@ -245,7 +245,7 @@ object Mining {
     * delimiter-wrapped form, whose occurrences are character-disjoint,
     * so left-to-right replace-all (both engines) IS true BPE's greedy
     * left-to-right merge — see [[BpeDelim]]. The per-round argmax is a
-    * driver-side single-row fetch (like `detectHighCard`'s HLL scalar):
+    * driver-side single-row fetch:
     * 10 rows total cross the driver, never data.
     *
     * Scale: the working relation is (word, count) DISTINCT words — BPE

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.insights.{InsightsConfig, InsightsEngine}
 
 /** Randomized cross-mode equivalence for the core engine: on seeded
-  * random frames WITH NULLS in every grouping column, all four
-  * enumeration strategies (reference loop, single cube, hybrid split,
-  * dictionary-join cube) must produce the identical insight-string set.
+  * random frames WITH NULLS in every grouping column, every enumeration
+  * strategy (reference loop, single cube, hybrid split, dictionary-join
+  * cube, iceberg and level-1-pruned cubes) must produce the identical
+  * insight-string set.
   * This is the hardest part of the cube translation — data-null vs
   * grouping()-null disambiguation via the sentinel, per-subset null
   * rejection, id→value suppression — exercised on inputs no golden
@@ -54,6 +55,8 @@ class InsightsRandomizedSpec extends AnyFunSuite {
         highCard = Set("num")).collect().map(_.getString(0)).toSet
       val iceberg2 = InsightsEngine.insightsCubeIceberg(df, cfg, n,
         highCard = Set("cat", "num")).collect().map(_.getString(0)).toSet
+      val pruned = InsightsEngine.insightsPruned(df, cfg)
+        .collect().map(_.getString(0)).toSet
       // incremental: cube two disjoint splits, merge cores, re-threshold
       val incremental = InsightsEngine.insightsCubeIncremental(
         df.filter(pmod(coalesce(col("num"), lit(0L)), lit(2L)) === 0),
@@ -67,6 +70,7 @@ class InsightsRandomizedSpec extends AnyFunSuite {
       assert(nativeDict === loop, s"nativeDict != loop at seed $seed")
       assert(iceberg1 === loop, s"iceberg(num) != loop at seed $seed")
       assert(iceberg2 === loop, s"iceberg(cat,num) != loop at seed $seed")
+      assert(pruned === loop, s"pruned != loop at seed $seed")
       df.unpersist()
     }
   }
@@ -104,6 +108,12 @@ class InsightsRandomizedSpec extends AnyFunSuite {
     // pruning (the bound is count ≥ threshold, same ≥ as the HAVING)
     assert(loop.exists(_.contains("n_w_pop")))
     assert(loop.exists(_.contains("n_w_edge")))
+    val l1 = InsightsEngine.levelOne(df, cfgW)
+    assert(l1.n === 300 && l1.threshold === 6)
+    assert(l1.popular("wide").toMap === Map("w_pop" -> 75L, "w_edge" -> 6L))
+    val pruned = InsightsEngine.insightsPruned(df, cfgW, l1)
+      .collect().map(_.getString(0)).toSet
+    assert(pruned === loop)
     df.unpersist()
   }
 
@@ -132,8 +142,53 @@ class InsightsRandomizedSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSet
     val dict = InsightsEngine.insightsCube(df, cfg4, n, dictValues = true)
       .collect().map(_.getString(0)).toSet
+    val pruned = InsightsEngine.insightsPruned(df, cfg4)
+      .collect().map(_.getString(0)).toSet
     assert(cube === loop)
     assert(dict === loop)
+    assert(pruned === loop)
     df.unpersist()
+  }
+
+  test("pruned body on degenerate inputs: N = 0, threshold < 1, unpopular columns") {
+    import spark.implicits._
+    def loopOf(df: org.apache.spark.sql.DataFrame, c: InsightsConfig) =
+      InsightsEngine.enumerateLoop(df, c, df.count(), useFirst = false)
+        .reduce(_ unionAll _).collect().map(_.getString(0)).toSet
+    def prunedOf(df: org.apache.spark.sql.DataFrame, c: InsightsConfig) =
+      InsightsEngine.insightsPruned(df, c).collect().map(_.getString(0)).toSet
+    val rnd = new scala.util.Random(5L)
+    def frame(rows: Int) = (0 until rows).map(i => (
+      s"c${rnd.nextInt(3)}", s"id$i",
+      if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(100).toLong)))
+      .toDF("cat", "idc", "num")
+      .withColumn("val", concat(lit("name_"), col("idc")))
+
+    // N = 0: no () row in the level-1 output; nothing kept, no rows out
+    val empty = frame(0)
+    val l0 = InsightsEngine.levelOne(empty, cfg)
+    assert(l0.n === 0 && l0.kept(cfg).isEmpty)
+    assert(prunedOf(empty, cfg).isEmpty)
+
+    // threshold < 1 (N = 40 at 2 %): every value is popular, nothing is
+    // pruned and every column stays in the cube
+    val small = frame(40)
+    val ls = InsightsEngine.levelOne(small, cfg)
+    assert(ls.threshold === 0 && !ls.pruning && ls.kept(cfg) === cfg.groupingCols)
+    assert(prunedOf(small, cfg) === loopOf(small, cfg))
+
+    // the unique id column has no popular value and leaves the cube
+    val wide = frame(300)
+    val lw = InsightsEngine.levelOne(wide, cfg)
+    assert(lw.threshold === 6 && lw.popular("idc").isEmpty)
+    assert(lw.kept(cfg) === Seq("cat", "num"))
+    val loopW = loopOf(wide, cfg)
+    assert(loopW.nonEmpty && !loopW.exists(_.contains("name_")))
+    assert(prunedOf(wide, cfg) === loopW)
+
+    // no column has a popular value: empty output, as the loop gives
+    val cfgU = cfg.copy(groupingCols = Seq("idc"))
+    assert(InsightsEngine.levelOne(wide, cfgU).kept(cfgU).isEmpty)
+    assert(loopOf(wide, cfgU).isEmpty && prunedOf(wide, cfgU).isEmpty)
   }
 }

@@ -129,6 +129,33 @@ class PlanSpec extends AnyFunSuite {
       s"expected exactly 2 cubes (T=∅, T={nk}):\n$plan")
   }
 
+  test("extractScale: level-1 pass and pruned cube are HashAggregates; cube Expand has 2^|kept| projections") {
+    import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import insights.{InsightsEngine, PlayStore}
+    // Play-Store shape with 5 000 developer ids over 2 000 rows: no
+    // developerId clears the 2 % threshold, so it must leave the cube
+    val csv = GraftSession.tempDir("graft_plan_scale") + "/apps.csv"
+    SynthPlayStore.main(Array(csv, "2000", "5000"))
+    val cfg = PlayStore.cfg.copy(groupingCols = PlayStore.cfg.groupingCols.take(6))
+    val prepared = PlayStore.prepare(
+      PlayStore.readCsv(spark, csv, schema = Some(PlayStore.schema)))
+    val kept = InsightsEngine.levelOne(prepared, cfg).kept(cfg)
+    assert(kept.nonEmpty && !kept.contains("developerId"), s"kept: $kept")
+    def sortAboveExpand(p: SparkPlan) = p.collect {
+      case s: SortAggregateExec if s.find(_.isInstanceOf[ExpandExec]).isDefined => s }
+    def expandSizes(p: SparkPlan) =
+      p.collect { case e: ExpandExec => e.projections.size }
+    // the level-1 pass: () plus one set per column, count-only
+    val l1Plan = InsightsEngine.levelOneCounts(prepared, cfg).queryExecution.sparkPlan
+    assert(sortAboveExpand(l1Plan).isEmpty, s"SortAggregate in level-1:\n$l1Plan")
+    assert(expandSizes(l1Plan) === Seq(cfg.groupingCols.size + 1), s"plan:\n$l1Plan")
+    // the plan extractScale writes: ONE cube, over the kept columns only
+    val cubePlan = PlayStore.scaleInsights(spark, csv, cfg).queryExecution.sparkPlan
+    assert(sortAboveExpand(cubePlan).isEmpty, s"SortAggregate above the cube:\n$cubePlan")
+    assert(expandSizes(cubePlan) === Seq(1 << kept.size), s"plan:\n$cubePlan")
+  }
+
   test("loop-compat insights: one aggregate subtree per subset (reference shape)") {
     val o = Tables.orders(spark, dir)
     val batches = insights.InsightsEngine.enumerateLoop(o,

@@ -219,10 +219,6 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
         highCard = Set("developerId", "minInstalls"), dictValues = true)
       .collect().map(_.getString(0)).toSet
     assert(hybridDict === full)
-    // cardinality detector: everything in the 5-row fixture is low-card
-    assert(InsightsEngine.detectHighCard(prepared, cfg4) === Set.empty)
-    assert(InsightsEngine.detectHighCard(prepared, cfg4, maxGroupsPerCol = 1)
-      .nonEmpty)
     // all-high-card edge: pure loop mode, still equals the full cube
     val allLoop = InsightsEngine
       .insightsHybrid(prepared, cfg4, totalCount = 5,
@@ -231,22 +227,21 @@ class PlayStoreGoldenSpec extends AnyFunSuite {
     assert(allLoop === full)
   }
 
-  test("cost-based routing: NDV > 4×(N/threshold) routes to iceberg, degenerate N routes nothing") {
-    val cfg = PlayStore.cfg // thresholdPercent = 2 → popular bound = 50
-    // the measured k=14 corpus shape: N=100k, developerId NDV 4503,
-    // score NDV 6 — cut is 4×50 = 200, so developerId routes, score not
-    val cards = Map("developerId" -> 4503L, "score" -> 6L,
-      "minInstalls" -> 180L)
-    assert(InsightsEngine.costBasedHighCard(100000L, cards, cfg)
-      === Set("developerId"))
-    // borderline NDV (≤ margin × bound) stays on the plain cube
-    assert(InsightsEngine.costBasedHighCard(100000L,
-      Map("c" -> 200L), cfg) === Set.empty)
-    assert(InsightsEngine.costBasedHighCard(100000L,
-      Map("c" -> 201L), cfg) === Set("c"))
-    // threshold < 1 (N < 50 at 2%): HAVING passes everything, nothing is
-    // prunable — never route to iceberg regardless of NDV
-    assert(InsightsEngine.costBasedHighCard(5L,
-      Map("developerId" -> 1000000L), cfg) === Set.empty)
+  test("extractScale: N = 0 after the range filters writes an empty output") {
+    // every row fails `ratings` ∈ [0, 100]: the level-1 pass sees no rows
+    // and so no () row; the job must still write a (row-less) result
+    val dir = java.nio.file.Paths.get(GraftSession.tempDir("graft_empty"))
+    val lines = fixtureCsv.linesIterator.toSeq
+    val allOut = (lines.head +: lines.tail.map(
+      _.split(",", -1).updated(12, "500").mkString(","))).mkString("\n") + "\n"
+    Files.writeString(dir.resolve("apps.csv"), allOut)
+    val out = dir.toString + "/insights"
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout) {
+      PlayStore.extractScale(spark, dir.toString + "/apps.csv", out)
+    }
+    assert(stdout.toString.contains("INSIGHTS route=empty n=0 threshold=0 kept= "))
+    assert(new java.io.File(out, "_SUCCESS").exists())
+    assert(spark.read.schema("insight string").csv(out).count() === 0)
   }
 }
