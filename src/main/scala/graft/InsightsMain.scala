@@ -25,10 +25,28 @@ import graft.insights.PlayStore
   * handles the full 14 columns in one job.
   */
 object InsightsMain {
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+  private val Usage = "usage: InsightsMain --csv_file_path <in.csv> --output_path <outdir> " +
+    "[--mode compat|scale] [--batch_size 128] [--num_partitions 2] [--max_cols k]"
+
+  private val Keys =
+    Set("csv_file_path", "output_path", "mode", "batch_size", "num_partitions", "max_cols")
+
+  /** `--key value` pairs as a map. An odd argument count, a key without
+    * `--` or a key outside the usage line fails with the usage line, so a
+    * typo or a removed flag never runs silently with the defaults. */
+  private[graft] def parseArgs(args: Seq[String]): Map[String, String] = {
+    def fail(why: String) = throw new IllegalArgumentException(s"$why\n$Usage")
+    if (args.length % 2 != 0) fail(s"expected --key value pairs, got ${args.length} arguments")
+    args.grouped(2).map { pair =>
+      val (k, v) = (pair(0), pair(1))
+      if (!k.startsWith("--")) fail(s"expected a --key, got '$k'")
+      if (!Keys(k.drop(2))) fail(s"unknown option $k")
+      k.drop(2) -> v
     }.toMap
+  }
+
+  def main(args: Array[String]): Unit = {
+    val opts = parseArgs(args.toSeq)
     val csvPath = opts.getOrElse("csv_file_path",
       sys.error("--csv_file_path is required"))
     val outPath = opts.getOrElse("output_path",

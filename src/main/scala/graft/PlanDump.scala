@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Formatted physical plans as committed evidence, in two modes.
+/** Formatted physical plans, in two modes.
   *
-  *  - `sbt "runMain graft.PlanDump"` rewrites PLANS.md: the flagship
+  *  - `sbt "runMain graft.PlanDump"` writes PLANS.md: the flagship
   *    queries at sf0.001 on local[4], the plan shapes SCALE.md claims
   *    (pushdown, broadcasts, single-cube exchange, map-side group
-  *    limits). No spec reads the file; regenerate it after
-  *    plan-affecting changes.
+  *    limits). The file is generated on demand and git-ignored, so it
+  *    always reflects the code that wrote it.
   *  - `sbt "runMain graft.PlanDump <tag> <outdir> <q1,q2,...>"` writes
   *    `<outdir>/<q>_<tag>.txt` for each named declared query at
   *    `SPARK_GRAFT_SF_DIR` (default sf0.1, the scale the bench runs:

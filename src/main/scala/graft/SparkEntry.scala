@@ -2,11 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One declared query: its name, its builder over (session, parquet dir),
+  * and the DuckDB SQL that must return the same rows on the same tables. */
+final case class Declared(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
+/** Driver contract (SURVEY.md §7).
   *
-  * Aggregates the declared-query surface from the operator modules; every
-  * entry in `queries` that has a key in `oracleSql` is hash-checked by the
-  * driver against DuckDB at sf0.01.
+  * The declared-query surface is one list of [[Declared]] entries gathered
+  * from the operator modules; every query carries the DuckDB oracle the
+  * driver hash-checks it against at sf0.01.
   */
 object SparkEntry {
 
@@ -16,55 +23,41 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("insights_orders_cube")(spark, "/root/testdata/sf0.001")
 
-  /** Each operator module's declared queries, in registry order. A name
-    * declared by two modules would be silently dropped by `++`; the
-    * registry spec checks the sizes add up. */
-  private[graft] lazy val moduleQueries: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    ops.Relational.queries,
-    insights.InsightsQueries.queries,
-    ops.Dedup.queries,
-    ops.Similarity.queries,
-    ops.TextAnalysis.queries,
-    ops.Events.queries,
-    ops.Temporal.queries,
-    ops.Multimodal.queries,
-    ops.Skew.queries,
-    ops.Pipeline.queries,
-    ops.Curation.queries,
-    ops.RelationalExt.queries,
-    ops.Tpch.queries,
-    ops.Layout.queries,
-    ops.Mining.queries,
-    ops.Calibrate.queries,
-    sources.SourceQueries.queries)
+  /** Every operator module's declarations, in registry order. */
+  private[graft] lazy val declared: Seq[Declared] = Seq(
+    ops.Relational.declared,
+    insights.InsightsQueries.declared,
+    ops.Dedup.declared,
+    ops.Similarity.declared,
+    ops.TextAnalysis.declared,
+    ops.Events.declared,
+    ops.Temporal.declared,
+    ops.Multimodal.declared,
+    ops.Skew.declared,
+    ops.Pipeline.declared,
+    ops.Curation.declared,
+    ops.RelationalExt.declared,
+    ops.Tpch.declared,
+    ops.Layout.declared,
+    ops.Mining.declared,
+    ops.Calibrate.declared,
+    sources.SourceQueries.declared).flatten
 
-  /** Each module's DuckDB oracles, in the order of [[moduleQueries]]. */
-  private[graft] lazy val moduleOracles: Seq[Map[String, String]] = Seq(
-    ops.Relational.oracleSql,
-    insights.InsightsQueries.oracleSql,
-    ops.Dedup.oracleSql,
-    ops.Similarity.oracleSql,
-    ops.TextAnalysis.oracleSql,
-    ops.Events.oracleSql,
-    ops.Temporal.oracleSql,
-    ops.Multimodal.oracleSql,
-    ops.Skew.oracleSql,
-    ops.Pipeline.oracleSql,
-    ops.Curation.oracleSql,
-    ops.RelationalExt.oracleSql,
-    ops.Tpch.oracleSql,
-    ops.Layout.oracleSql,
-    ops.Mining.oracleSql,
-    ops.Calibrate.oracleSql,
-    sources.SourceQueries.oracleSql)
+  /** Keys declarations by name; a name declared twice fails here rather
+    * than one declaration silently replacing the other. */
+  private[graft] def byName(ds: Seq[Declared]): Map[String, Declared] = {
+    val dups = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    ds.map(d => d.name -> d).toMap
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  private lazy val registry: Map[String, Declared] = byName(declared)
+
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    moduleQueries.reduce(_ ++ _)
+    registry.map { case (n, d) => n -> d.build }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. As of r6 every declared query has an
-    * oracle entry (engine-specific sketch/RNG queries emit exact values
-    * plus tolerance verdicts that the oracle asserts true). */
-  lazy val oracleSql: Map[String, String] = moduleOracles.reduce(_ ++ _)
+  /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. Engine-specific sketch/RNG queries emit
+    * exact values plus tolerance verdicts that the oracle asserts true. */
+  lazy val oracleSql: Map[String, String] = registry.map { case (n, d) => n -> d.oracleSql }
 }

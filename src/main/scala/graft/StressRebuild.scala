@@ -47,7 +47,7 @@ object StressRebuild {
     // grown corpus: namespaced re-keyed copies (StressScale's null),
     // written to parquet so the rebuild reads a real snapshot dir
     val docs = spark.read.parquet(s"$base/documents.parquet")
-    val stride = Tables.rekeyStride(docs, "doc_id")
+    val stride = StressScale.rekeyStride(docs, "doc_id")
     (0 until scale).map { k =>
       if (k == 0) docs
       else docs.select(

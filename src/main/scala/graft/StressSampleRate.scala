@@ -42,7 +42,7 @@ object StressSampleRate {
     // the StressScale boilerplate null: namespaced copies + a fixed
     // (NOT namespaced) header on every 10th doc of every copy
     val docs = spark.read.parquet(s"$base/documents.parquet")
-    val stride = Tables.rekeyStride(docs, "doc_id")
+    val stride = StressScale.rekeyStride(docs, "doc_id")
     val header = (1 to 16).map(i => s"bplic$i").mkString(" ")
     (0 until scale).map { k =>
       if (k == 0) docs

@@ -50,6 +50,8 @@ import org.apache.spark.sql.functions._
   * probe-time cost like the declared bench does.
   */
 object StressScale {
+  private def declared(name: String) = name -> SparkEntry.queries(name)
+
   /** Declared queries probed as-is, plus the scale-calibrated tf-idf LSH
     * variant (16 tables × 12 planes — bits grow with log(corpus), the
     * production bucket-sizing rule; the declared 8×4 config is
@@ -64,7 +66,7 @@ object StressScale {
     // the df>=2 cut dedups GRAMS, islands are per-doc windows) and its
     // ~w-x-cheaper winnowing fingerprint sibling (map-only per doc)
     "dedup_substring_spans", "text_winnow_fingerprints")
-    .map(n => n -> SparkEntry.queries(n)) :+
+    .map(declared) :+
     ("text_tfidf_cosine_lsh_16x12" ->
       ((s: org.apache.spark.sql.SparkSession, d: String) =>
         ops.TextAnalysis.textTfidfCosineLshAt(s, d, 16, 12))) :+
@@ -100,17 +102,15 @@ object StressScale {
         ops.Calibrate.textTfidfCosineLshAuto(s, d))) :+
     // r13 second-decade targets (the r12 verdict's probe list): the
     // production 128-bit text signature and the guard-routed pair query
-    ("dedup_simhash128" -> SparkEntry.queries("dedup_simhash128")) :+
-    ("text_tfidf_pairs_routed" -> SparkEntry.queries("text_tfidf_pairs_routed")) :+
+    declared("dedup_simhash128") :+
+    declared("text_tfidf_pairs_routed") :+
     // r13: the events family's first scaling probes — user_id is
     // namespaced per copy so distinct users grow Sx at the same day
     // span (the null where exact WAU's 7x-user-set shuffle grows and
     // the HLL partials stay 7 x 4 KB per day: the predicted crossover)
-    ("events_sessionize" -> SparkEntry.queries("events_sessionize")) :+
-    ("events_dau_wau" -> SparkEntry.queries("events_dau_wau")) :+
-    ("events_dau_wau_hll_sketch" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) =>
-        ops.Events.dauWauHllSketchOnly(s, d))) :+
+    declared("events_sessionize") :+
+    declared("events_dau_wau") :+
+    declared("events_dau_wau_hll") :+
     // r13: the span cutter at the CALIBRATED df cap (one stats pass
     // picks the cap, like production; probe time includes it). Pair it
     // with SPARK_GRAFT_SCALE_BOILERPLATE=1, which plants a shared
@@ -126,7 +126,7 @@ object StressScale {
     // the calibrator picks once the md5 ladder saturates (measured at
     // the 10x probe); its 20-bit bands should hold the slope where
     // 128-bit's 10-bit bands start to bend candidate-bound
-    ("dedup_simhash256" -> SparkEntry.queries("dedup_simhash256")) :+
+    declared("dedup_simhash256") :+
     // the Jaccard posting family at the CALIBRATED hot-shingle cap
     // (completes the consumption story: all three derived knob families
     // have a probe consumer; includes the stats pass like production)
@@ -156,12 +156,10 @@ object StressScale {
     // scale (the routed simhash picks 256 at 100x = 500 k docs — the
     // probe measures the ROUTED production path, stored calibration
     // fetch included)
-    ("dedup_simhash512" -> SparkEntry.queries("dedup_simhash512")) :+
-    ("dedup_simhash_routed" -> SparkEntry.queries("dedup_simhash_routed")) :+
-    ("dedup_substring_spans_routed" ->
-      SparkEntry.queries("dedup_substring_spans_routed")) :+
-    ("dedup_ngram_jaccard_routed" ->
-      SparkEntry.queries("dedup_ngram_jaccard_routed")) :+
+    declared("dedup_simhash512") :+
+    declared("dedup_simhash_routed") :+
+    declared("dedup_substring_spans_routed") :+
+    declared("dedup_ngram_jaccard_routed") :+
     // r14 (r13 verdict #7): the Jaccard cap's WIN case — run with
     // SPARK_GRAFT_SCALE_BOILERPLATE=1 so the planted header's 14
     // 3-shingles carry df = n/10 (the namespaced null has no hot
@@ -177,22 +175,15 @@ object StressScale {
       ((s: org.apache.spark.sql.SparkSession, d: String) =>
         ops.Dedup.dedupNgramJaccardCapped(s, d,
           hotDf = 16L, saltBuckets = 8))) :+
-    // r15: the temporal self-join's volume question — run with
+    // the temporal self-join's volume question — run with
     // SPARK_GRAFT_SCALE_EVENTS_TIMEGROW=1, which scales events by
     // SHIFTING each copy's timestamps past the previous copy's span
     // (same users, Sx history per user — how a real user corpus grows)
     // instead of namespacing users. On that null the plain user_id
-    // self-join's volume sum n^2 grows Sx^2 per decade while the
-    // banded join's per-(user, 5-min bucket) density stays constant —
-    // so banded volume grows Sx. The pair probes measure exactly that
-    // separation; both are lossless (EventsSpec), so the slopes are
-    // the whole story.
-    ("events_cooccurrence_plain" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) =>
-        ops.Events.cooccurrenceFixedRoute(s, d, banded = false))) :+
-    ("events_cooccurrence_banded" ->
-      ((s: org.apache.spark.sql.SparkSession, d: String) =>
-        ops.Events.cooccurrenceFixedRoute(s, d, banded = true))) :+
+    // self-join's volume sum n^2 grows Sx^2 per decade, so the guard
+    // routes to the banded join, whose per-(user, 5-min bucket) density
+    // stays constant (BASELINE.md r15 has the plain-vs-banded slopes).
+    declared("events_cooccurrence_routed") :+
     // r15: the calibrated containment threshold priced against the
     // declared fixed-256 line (same lossless pair set; the knob moves
     // which shingles sort last in the prefix order, i.e. candidate
@@ -200,6 +191,23 @@ object StressScale {
     ("dedup_containment_routed" ->
       ((s: org.apache.spark.sql.SparkSession, d: String) =>
         ops.Calibrate.dedupContainmentRouted(s, d)))
+
+  /** Probe re-key stride: the smallest power of 10 that is ≥ the
+    * historical 10M floor AND strictly above the table's current max
+    * key, so S× probe copies never collide and a probe's output dir
+    * can be fed back as the base of a further scaling run (the
+    * third-decade chain: 100x output ids reach ~1e9, where a fixed 10M
+    * stride would collide copy k of id x with copy k' of id x'). One
+    * definition for the probe mains (StressScale, StressSampleRate,
+    * StressRebuild); `Curation.addedIdStride` is its documented
+    * expression-level twin. An empty table (null max) keeps the floor. */
+  private[graft] def rekeyStride(df: DataFrame, key: String): Long = {
+    val row = df.agg(max(col(key)).cast("long")).head()
+    val maxId = if (row.isNullAt(0)) 0L else row.getLong(0)
+    var s = 10000000L
+    while (s <= maxId) s *= 10
+    s
+  }
 
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -214,13 +222,6 @@ object StressScale {
     val cpus = GraftSession.cpus()
     val spark = GraftSession.local(cpus)
 
-    // Re-key stride: the smallest power of 10 (>= 10M, the historical
-    // constant) ABOVE the table's max key, so probe outputs can be fed
-    // back as the base of a further scaling run (the third-decade
-    // chain: 100x output ids reach ~1e9, where a fixed 10M stride
-    // would collide copy k of id x with copy k' of id x').
-    def strideFor(df: DataFrame, key: String): Long =
-      Tables.rekeyStride(df, key) // one shared rule (r16 review)
     def copiesWith(df: DataFrame, stride: Long)(
         rekey: (DataFrame, Int, Long) => DataFrame): DataFrame =
       (0 until scale).map(k => if (k == 0) df else rekey(df, k, stride))
@@ -262,7 +263,7 @@ object StressScale {
         .withColumn("n_chars", length(col("text")).cast("long"))
 
     lazy val docs = spark.read.parquet(s"$base/documents.parquet")
-    lazy val docStride = strideFor(docs, "doc_id")
+    lazy val docStride = rekeyStride(docs, "doc_id")
     if (needDocs) {
       withBoilerplate(copiesWith(docs, docStride) { (d, k, stride) =>
         d.select(
@@ -301,7 +302,7 @@ object StressScale {
 
     if (needEmb) {
       val emb = spark.read.parquet(s"$base/embeddings.parquet")
-      copiesWith(emb, strideFor(emb, "vec_id")) { (d, k, stride) =>
+      copiesWith(emb, rekeyStride(emb, "vec_id")) { (d, k, stride) =>
         d.select((col("vec_id") + lit(k * stride)).as("vec_id"),
           col("embedding"), col("label"))
       }.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
@@ -309,7 +310,7 @@ object StressScale {
 
     if (needOrders) {
       val orders = spark.read.parquet(s"$base/orders.parquet")
-      copiesWith(orders, strideFor(orders, "o_orderkey")) { (d, k, stride) =>
+      copiesWith(orders, rekeyStride(orders, "o_orderkey")) { (d, k, stride) =>
         d.withColumn("o_orderkey", col("o_orderkey") + lit(k * stride))
       }.write.mode("overwrite").parquet(s"$out/orders.parquet")
     }
@@ -332,8 +333,8 @@ object StressScale {
       val timeGrow =
         sys.env.get("SPARK_GRAFT_SCALE_EVENTS_TIMEGROW").contains("1")
       val ev0 = spark.read.parquet(s"$base/events.parquet")
-      val evStride = math.max(strideFor(ev0, "event_id"),
-        strideFor(ev0, "user_id"))
+      val evStride = math.max(rekeyStride(ev0, "event_id"),
+        rekeyStride(ev0, "user_id"))
       if (timeGrow) {
         val ev = Tables.normalizeTs(ev0)
         val span = ev.agg(

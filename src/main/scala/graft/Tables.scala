@@ -84,21 +84,4 @@ object Tables {
   def yearBetween(c: Column, lo: Int, hi: Int): Column =
     c >= lit(f"$lo%04d-01-01").cast("timestamp") &&
       c < lit(f"${hi + 1}%04d-01-01").cast("timestamp")
-
-  /** Probe re-key stride: the smallest power of 10 that is ≥ the
-    * historical 10M floor AND strictly above the table's current max
-    * key, so S× probe copies never collide and a probe's output dir
-    * can be fed back as the base of a further scaling run (the
-    * third-decade chain). ONE definition (r16 review: the rule existed
-    * as three hand-rolled loops across the probe mains plus
-    * `Curation.addedIdStride`'s expression-level replica — a rule
-    * change must now touch one Scala site plus that documented SQL
-    * twin). An empty table (null max) keeps the floor. */
-  private[graft] def rekeyStride(df: DataFrame, key: String): Long = {
-    val row = df.agg(max(col(key)).cast("long")).head()
-    val maxId = if (row.isNullAt(0)) 0L else row.getLong(0)
-    var s = 10000000L
-    while (s <= maxId) s *= 10
-    s
-  }
 }

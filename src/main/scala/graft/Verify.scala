@@ -101,6 +101,9 @@ object Verify {
     val budget = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "180").toLong
     val statusPath = Paths.get(s"$outDir/verify_status.jsonl")
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
+      // as in Bench: drop the previous query's persisted intermediates so
+      // they do not pile up across the whole surface
+      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val status = runBudgeted(spark, name, budget) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

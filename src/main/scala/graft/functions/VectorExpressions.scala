@@ -28,22 +28,37 @@ object VectorExpressions {
     * tasks in local mode, so a per-expression mutable field would race,
     * while a thread-local is safe under whole-stage codegen and the
     * interpreted path alike. `reset()` before handing out keeps a
-    * half-updated digest from a failed row from leaking into the next. */
-  private[functions] object Digests {
+    * half-updated digest from a failed row from leaking into the next.
+    *
+    * One digest per (thread, algo) means a second holder on the same
+    * thread would interleave its updates with the first's and corrupt
+    * both (ContentChunks holds its digest across a whole chunk loop). So
+    * `get` lends the digest out as a [[Lease]] and a second `get` of the
+    * same algorithm before `release()` throws; each caller releases in a
+    * `finally`, so a row that fails mid-digest does not leave it lent. */
+  private[graft] object Digests {
+    final class Lease private[Digests] (val md: java.security.MessageDigest) {
+      private[Digests] var held = false
+      def release(): Unit = held = false
+    }
+
     private val local =
-      new ThreadLocal[java.util.HashMap[String, java.security.MessageDigest]] {
-        override def initialValue() =
-          new java.util.HashMap[String, java.security.MessageDigest](4)
+      new ThreadLocal[java.util.HashMap[String, Lease]] {
+        override def initialValue() = new java.util.HashMap[String, Lease](4)
       }
-    def get(algo: String): java.security.MessageDigest = {
+
+    def get(algo: String): Lease = {
       val m = local.get()
-      var md = m.get(algo)
-      if (md == null) {
-        md = java.security.MessageDigest.getInstance(algo)
-        m.put(algo, md)
+      var lease = m.get(algo)
+      if (lease == null) {
+        lease = new Lease(java.security.MessageDigest.getInstance(algo))
+        m.put(algo, lease)
       }
-      md.reset()
-      md
+      if (lease.held) throw new IllegalStateException(
+        s"nested Digests.get($algo) on one thread: the $algo digest is already lent out")
+      lease.held = true
+      lease.md.reset()
+      lease
     }
   }
 
@@ -407,101 +422,20 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  /** Prefix-filter extraction for set-similarity joins in one compiled
-    * pass: order the shingle set by (is_hot, xxhash64, value) — hot
-    * shingles LAST so df-capped posting lists never enter a prefix,
-    * everything else in a fixed pseudo-random order — and return the
-    * first |S| − ceil(t·|S|) + 1 elements. Replaces a
-    * transform→array_sort→transform→slice HOF chain whose interpreted
-    * per-element lambdas measured ~8 s alone at sf0.1 (the same
-    * HOF-vs-native gap as WordShingles). Hash values come from Spark's
-    * own XxHash64Function (seed 42, the `xxhash64` builtin), so the
-    * order is bit-identical to the HOF form it replaces (equivalence
-    * pinned in VectorExpressionsSpec). `hot` is expected df-capped tiny
-    * (it rides a broadcast); the per-row set build is O(|hot|). */
-  case class HashOrderPrefix(left: Expression, right: Expression, t: Double)
-      extends BinaryExpression {
-    require(t > 0.0 && t <= 1.0)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = left.nullable || right.nullable
-
-    private def requireStringArray(dt: DataType): TypeCheckResult = dt match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"hash_order_prefix requires array<string> input, got ${other.catalogString}")
-    }
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireStringArray(left.dataType) match {
-        case TypeCheckResult.TypeCheckSuccess => requireStringArray(right.dataType)
-        case fail => fail
-      }
-
-    def compute(shinglesArr: ArrayData, hotArr: ArrayData): ArrayData = {
-      import org.apache.spark.unsafe.types.UTF8String
-      val n = shinglesArr.numElements()
-      val k = (n - math.ceil(n * t).toLong + 1).toInt
-      if (n == 0 || k <= 0) return new GenericArrayData(Array.empty[Any])
-      val hot = new java.util.HashSet[UTF8String](math.max(8, hotArr.numElements() * 2))
-      var i = 0
-      while (i < hotArr.numElements()) {
-        if (!hotArr.isNullAt(i)) hot.add(hotArr.getUTF8String(i))
-        i += 1
-      }
-      val strs = new Array[UTF8String](n)
-      val keys = new Array[Long](n)
-      val isHot = new Array[Boolean](n)
-      var m = 0 // null elements are skipped
-      i = 0
-      while (i < n) {
-        if (!shinglesArr.isNullAt(i)) {
-          val s = shinglesArr.getUTF8String(i)
-          strs(m) = s
-          keys(m) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-            .hash(s, StringType, 42L)
-          isHot(m) = hot.contains(s)
-          m += 1
-        }
-        i += 1
-      }
-      val idx = Array.tabulate[Integer](m)(Integer.valueOf)
-      java.util.Arrays.sort(idx, (a: Integer, b: Integer) => {
-        val ha = isHot(a); val hb = isHot(b)
-        if (ha != hb) { if (ha) 1 else -1 }
-        else {
-          val c = java.lang.Long.compare(keys(a), keys(b))
-          if (c != 0) c else strs(a).compareTo(strs(b))
-        }
-      })
-      val take = math.min(k, m)
-      val out = new Array[Any](take)
-      i = 0
-      while (i < take) { out(i) = strs(idx(i)); i += 1 }
-      new GenericArrayData(out)
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("prefixer", this, classOf[HashOrderPrefix].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-    }
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-      copy(left = l, right = r)
-  }
-
   /** Full (is_hot, xxhash64, value)-ordered hash-key array for prefix-
-    * filtered set-similarity joins — the sibling of `HashOrderPrefix`
-    * that keeps EVERY element and emits its xxhash64 key instead of the
-    * string. One `posexplode` over the result yields both join keys
+    * filtered set-similarity joins: every element's xxhash64 key (seed
+    * 42, the `xxhash64` builtin) in that order — hot shingles LAST so
+    * df-capped posting lists never enter a prefix, everything else in a
+    * fixed pseudo-random order. One compiled pass replaces a
+    * transform→array_sort→transform HOF chain whose interpreted
+    * per-element lambdas measured ~8 s alone at sf0.1. `hot` is
+    * expected df-capped tiny (it rides a broadcast). One `posexplode` over the result yields both join keys
     * (hk) and the element's RANK in the global prefix order (pos), which
     * is what the PPJoin positional filter needs on BOTH sides of the
     * candidate join: a pair's first common element at ranks (i, j)
     * bounds the overlap by min(|A|−i, |B|−j), so candidates whose match
     * sits too deep in either order are pruned in the join condition
-    * itself. Same ordering contract as `HashOrderPrefix` (hot elements
-    * LAST, then hash, then value — equivalence pinned in
+    * itself. The order equals the HOF sort's (equivalence pinned in
     * VectorExpressionsSpec), so `filter(pos < |S| − ceil(t·|S|) + 1)`
     * over this explode IS the prefix relation. Null elements are
     * skipped; size(result) is the element count the theorem sees. */
@@ -705,29 +639,32 @@ object VectorExpressions {
         }
         i += 1
       }
-      val md = Digests.get("MD5")
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var st = 0
-      var k = 0
-      while (k <= bounds.length) {
-        val en = if (k < bounds.length) bounds(k) else nb
-        if (en > st) {
-          md.reset()
-          md.update(hx, st * 2, (en - st) * 2)
-          val digest = md.digest()
-          val fp = new Array[Char](32)
-          var d = 0
-          while (d < 16) {
-            fp(2 * d) = HexChars((digest(d) >> 4) & 0xF)
-            fp(2 * d + 1) = HexChars(digest(d) & 0xF)
-            d += 1
+      val lease = Digests.get("MD5")
+      try {
+        val md = lease.md
+        val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+        var st = 0
+        var k = 0
+        while (k <= bounds.length) {
+          val en = if (k < bounds.length) bounds(k) else nb
+          if (en > st) {
+            md.reset()
+            md.update(hx, st * 2, (en - st) * 2)
+            val digest = md.digest()
+            val fp = new Array[Char](32)
+            var d = 0
+            while (d < 16) {
+              fp(2 * d) = HexChars((digest(d) >> 4) & 0xF)
+              fp(2 * d + 1) = HexChars(digest(d) & 0xF)
+              d += 1
+            }
+            out += org.apache.spark.unsafe.types.UTF8String.fromString(new String(fp))
           }
-          out += org.apache.spark.unsafe.types.UTF8String.fromString(new String(fp))
+          st = en
+          k += 1
         }
-        st = en
-        k += 1
-      }
-      new GenericArrayData(out.toArray)
+        new GenericArrayData(out.toArray)
+      } finally lease.release()
     }
 
     override def nullSafeEval(v: Any): Any =
@@ -813,73 +750,76 @@ object VectorExpressions {
       val nWords32 = wordOrder.length
       val nBits = 32 * nWords32
       val counts = new Array[Int](nBits)
-      val md = if (hashInput) Digests.get(algoName) else null
-      val n = arr.numElements()
-      var i = 0
-      while (i < n) {
-        if (arr.isNullAt(i)) { i += 1 }
-        else {
-        val s = arr.getUTF8String(i)
-        // digestBytes bytes per element: `algo` of the element's utf8
-        // bytes (hashInput) or the element parsed as an `algo` hex string
-        val bytes: Array[Byte] =
-          if (hashInput && doubled) {
-            md.reset()
-            val d1 = md.digest(s.getBytes)
-            md.reset()
-            md.update('#'.toByte)
-            val d2 = md.digest(s.getBytes)
-            val out = new Array[Byte](64)
-            System.arraycopy(d1, 0, out, 0, 32)
-            System.arraycopy(d2, 0, out, 32, 32)
-            out
-          }
-          else if (hashInput) { md.reset(); md.digest(s.getBytes) }
+      val lease = if (hashInput) Digests.get(algoName) else null
+      try {
+        val md = if (lease == null) null else lease.md
+        val n = arr.numElements()
+        var i = 0
+        while (i < n) {
+          if (arr.isNullAt(i)) { i += 1 }
           else {
-            val str = s.toString
-            if (str.length != 2 * digestBytes) throw new IllegalArgumentException(
-              s"simhash_votes(hashInput=false): element is not a ${2 * digestBytes}-char " +
-                s"$algo hex string (length ${str.length}: \"$str\")")
-            val out = new Array[Byte](digestBytes)
-            var t = 0
-            while (t < digestBytes) {
-              out(t) = ((hexNibble(str.charAt(2 * t), str) << 4) |
-                hexNibble(str.charAt(2 * t + 1), str)).toByte
-              t += 1
+          val s = arr.getUTF8String(i)
+          // digestBytes bytes per element: `algo` of the element's utf8
+          // bytes (hashInput) or the element parsed as an `algo` hex string
+          val bytes: Array[Byte] =
+            if (hashInput && doubled) {
+              md.reset()
+              val d1 = md.digest(s.getBytes)
+              md.reset()
+              md.update('#'.toByte)
+              val d2 = md.digest(s.getBytes)
+              val out = new Array[Byte](64)
+              System.arraycopy(d1, 0, out, 0, 32)
+              System.arraycopy(d2, 0, out, 32, 32)
+              out
             }
-            out
+            else if (hashInput) { md.reset(); md.digest(s.getBytes) }
+            else {
+              val str = s.toString
+              if (str.length != 2 * digestBytes) throw new IllegalArgumentException(
+                s"simhash_votes(hashInput=false): element is not a ${2 * digestBytes}-char " +
+                  s"$algo hex string (length ${str.length}: \"$str\")")
+              val out = new Array[Byte](digestBytes)
+              var t = 0
+              while (t < digestBytes) {
+                out(t) = ((hexNibble(str.charAt(2 * t), str) << 4) |
+                  hexNibble(str.charAt(2 * t + 1), str)).toByte
+                t += 1
+              }
+              out
+            }
+          var j = 0
+          while (j < nWords32) {
+            val w = wordOrder(j)
+            val h = ((bytes(4 * w) & 0xFFL) << 24) |
+              ((bytes(4 * w + 1) & 0xFFL) << 16) |
+              ((bytes(4 * w + 2) & 0xFFL) << 8) |
+              (bytes(4 * w + 3) & 0xFFL)
+            var b = 0
+            while (b < 32) {
+              counts(32 * j + b) += (if (((h >> b) & 1L) == 1L) 1 else -1)
+              b += 1
+            }
+            j += 1
           }
-        var j = 0
-        while (j < nWords32) {
-          val w = wordOrder(j)
-          val h = ((bytes(4 * w) & 0xFFL) << 24) |
-            ((bytes(4 * w + 1) & 0xFFL) << 16) |
-            ((bytes(4 * w + 2) & 0xFFL) << 8) |
-            (bytes(4 * w + 3) & 0xFFL)
+          i += 1
+          }
+        }
+        val nOut = (nBits + 63) / 64
+        val out = new Array[Any](nOut)
+        var wd = 0
+        while (wd < nOut) {
+          var sig = 0L
           var b = 0
-          while (b < 32) {
-            counts(32 * j + b) += (if (((h >> b) & 1L) == 1L) 1 else -1)
+          while (b < 64 && 64 * wd + b < nBits) {
+            if (counts(64 * wd + b) > 0) sig |= (1L << b)
             b += 1
           }
-          j += 1
+          out(wd) = sig
+          wd += 1
         }
-        i += 1
-        }
-      }
-      val nOut = (nBits + 63) / 64
-      val out = new Array[Any](nOut)
-      var wd = 0
-      while (wd < nOut) {
-        var sig = 0L
-        var b = 0
-        while (b < 64 && 64 * wd + b < nBits) {
-          if (counts(64 * wd + b) > 0) sig |= (1L << b)
-          b += 1
-        }
-        out(wd) = sig
-        wd += 1
-      }
-      new GenericArrayData(out)
+        new GenericArrayData(out)
+      } finally if (lease != null) lease.release()
     }
 
     override def nullSafeEval(v: Any): Any =
@@ -947,46 +887,49 @@ object VectorExpressions {
         wb(i) = if (w == null) null else w.getBytes
         i += 1
       }
-      val md = Digests.get("MD5")
-      val out = new Array[Any](count)
-      i = 0
-      while (i < count) {
-        md.reset()
-        var j = 0
-        var written = false
-        while (j < k) {
-          val w = wb(i + j)
-          if (w != null) {
-            if (written) md.update(' '.toByte)
-            md.update(w)
-            written = true
+      val lease = Digests.get("MD5")
+      try {
+        val md = lease.md
+        val out = new Array[Any](count)
+        i = 0
+        while (i < count) {
+          md.reset()
+          var j = 0
+          var written = false
+          while (j < k) {
+            val w = wb(i + j)
+            if (w != null) {
+              if (written) md.update(' '.toByte)
+              md.update(w)
+              written = true
+            }
+            j += 1
           }
-          j += 1
+          val d = md.digest()
+          if (nHex == 32) {
+            val fp = new Array[Char](32)
+            var t = 0
+            while (t < 16) {
+              fp(2 * t) = HexChars((d(t) >> 4) & 0xF)
+              fp(2 * t + 1) = HexChars(d(t) & 0xF)
+              t += 1
+            }
+            out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(new String(fp))
+          } else {
+            var v = 0L
+            var t = 0
+            while (t < nHex) {
+              val nib =
+                if (t % 2 == 0) (d(t / 2) >> 4) & 0xF else d(t / 2) & 0xF
+              v = (v << 4) | nib
+              t += 1
+            }
+            out(i) = v
+          }
+          i += 1
         }
-        val d = md.digest()
-        if (nHex == 32) {
-          val fp = new Array[Char](32)
-          var t = 0
-          while (t < 16) {
-            fp(2 * t) = HexChars((d(t) >> 4) & 0xF)
-            fp(2 * t + 1) = HexChars(d(t) & 0xF)
-            t += 1
-          }
-          out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(new String(fp))
-        } else {
-          var v = 0L
-          var t = 0
-          while (t < nHex) {
-            val nib =
-              if (t % 2 == 0) (d(t / 2) >> 4) & 0xF else d(t / 2) & 0xF
-            v = (v << 4) | nib
-            t += 1
-          }
-          out(i) = v
-        }
-        i += 1
-      }
-      new GenericArrayData(out)
+        new GenericArrayData(out)
+      } finally lease.release()
     }
 
     override def nullSafeEval(v: Any): Any =
@@ -1026,16 +969,19 @@ object VectorExpressions {
     }
 
     def compute(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-      val md = Digests.get("MD5")
-      val d = md.digest(s.getBytes)
-      var v = 0L
-      var t = 0
-      while (t < nHex) {
-        val nib = if (t % 2 == 0) (d(t / 2) >> 4) & 0xF else d(t / 2) & 0xF
-        v = (v << 4) | nib
-        t += 1
-      }
-      v
+      val lease = Digests.get("MD5")
+      try {
+        val md = lease.md
+        val d = md.digest(s.getBytes)
+        var v = 0L
+        var t = 0
+        while (t < nHex) {
+          val nib = if (t % 2 == 0) (d(t / 2) >> 4) & 0xF else d(t / 2) & 0xF
+          v = (v << 4) | nib
+          t += 1
+        }
+        v
+      } finally lease.release()
     }
 
     override def nullSafeEval(v: Any): Any =
@@ -1230,10 +1176,6 @@ object VectorExpressions {
 
   def xxhashModArray(c: Column, p: Long): Column =
     ColumnBridge.column(XxHashModArray(ColumnBridge.expression(c), p))
-
-  def hashOrderPrefix(shingles: Column, hot: Column, t: Double): Column =
-    ColumnBridge.column(HashOrderPrefix(
-      ColumnBridge.expression(shingles), ColumnBridge.expression(hot), t))
 
   def hashOrderKeys(shingles: Column, hot: Column): Column =
     ColumnBridge.column(HashOrderKeys(

@@ -166,18 +166,13 @@ object InsightsEngine {
     * grouping bits → concat_ws.
     *
     * @param totalCount pre-computed N (one count action, reference
-    *                   main.py:344); threshold = floor(p/100*N). */
-  /** @param dictValues aggregate ONLY count (fixed-width buffer →
-    *   HashAggregate even with id→value display columns; min(string)
-    *   buffers otherwise force SortAggregate below the 2^k Expand) and
-    *   re-attach value columns AFTER the threshold filter via broadcast
-    *   joins against per-id dictionaries. Equivalent to `min` semantics
-    *   whenever value columns are functionally determined by their id
-    *   column (true for every declared config); NOT reference-equivalent
-    *   for non-functional id→value data — keep it off for compat. */
+    *                   main.py:344); threshold = floor(p/100*N).
+    *
+    * No route calls it since `insightsPruned`; PlayStoreGoldenSpec proves
+    * it against the loop on the reference fixture, and the native and
+    * pruned cubes are pinned against it or the loop in turn. */
   def insightsCube(df: DataFrame, cfg: InsightsConfig, totalCount: Long,
-      useFirst: Boolean = false, dictValues: Boolean = false): DataFrame = {
-    if (dictValues) return insightsCubeDict(df, cfg, totalCount)
+      useFirst: Boolean = false): DataFrame = {
     val threshold = cfg.thresholdCount(totalCount)
     val k = cfg.groupingCols.length
     require(k <= 30, s"cube over $k cols overflows grouping_id int range")
@@ -432,8 +427,7 @@ object InsightsEngine {
     * ×2^k; PlanSpec asserts the shape). Value columns are re-attached
     * AFTER the HAVING filter via broadcast joins against tiny per-id
     * dictionaries (min value per id — equal to per-group min whenever
-    * value columns are functionally determined by their id column, the
-    * same precondition as `insightsCube(dictValues = true)`; the
+    * value columns are functionally determined by their id column; the
     * dictionaries' own min(string) SortAggregates run over |distinct id|
     * rows, never below an Expand). An id column aggregated away by the
     * cube carries a NULL key, so the left join attaches nothing and the
@@ -696,69 +690,4 @@ object InsightsEngine {
 
   def insightsPruned(df: DataFrame, cfg: InsightsConfig): DataFrame =
     insightsPruned(df, cfg, levelOne(df, cfg))
-
-  /** Dictionary-join variant of the cube (see `insightsCube(dictValues)`).
-    * The cube aggregates count only; value columns are re-attached after
-    * the HAVING filter from broadcast per-id dictionaries (min per id). */
-  private def insightsCubeDict(df: DataFrame, cfg: InsightsConfig,
-      totalCount: Long): DataFrame = {
-    val threshold = cfg.thresholdCount(totalCount)
-    val k = cfg.groupingCols.length
-    require(k <= 30, s"cube over $k cols overflows grouping_id int range")
-
-    val bucketed = bucket(df, cfg.buckets)
-    def renderedCol(c: String) = cfg.buckets.get(c) match {
-      case Some(w) => bucketLabel(col(s"`$c`"), w)
-      case None    => col(s"`$c`").cast("string")
-    }
-    // value cols stay native (min over native type; cast at render time)
-    val labeled = bucketed.select(
-      cfg.groupingCols.map(c => coalesce(renderedCol(c), lit(NullSentinel)).as(c)) ++
-        cfg.valueCols.map(v => col(s"`$v`").as(v)): _*)
-
-    val cubed = labeled
-      .cube(cfg.groupingCols.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("count"), grouping_id().as("gid"))
-
-    def groupedBit(i: Int): Column =
-      (shiftright(col("gid"), k - 1 - i).bitwiseAND(1)) === 0
-
-    val anySentinel = cfg.groupingCols.zipWithIndex
-      .map { case (c, i) => groupedBit(i) && col(s"`$c`") === NullSentinel }
-      .reduce(_ || _)
-
-    val filtered = cubed
-      .filter(col("gid") =!= ((1L << k) - 1))
-      .filter(!anySentinel)
-      .filter(col("count") >= threshold)
-
-    // attach value cols post-threshold: one broadcast dictionary per id
-    // col (min value per id — equals per-group min under functional
-    // dependency); ungrouped id labels are NULL so the join attaches
-    // nothing and the term stays suppressed
-    val withValues = cfg.idValues.keys.filter(cfg.groupingCols.contains)
-      .foldLeft(filtered) { (d, idCol) =>
-        val vals = cfg.idValues(idCol)
-        val dict = labeled
-          .groupBy(col(s"`$idCol`").as(s"__dict_$idCol"))
-          .agg(min(col(s"`${vals.head}`")).as(vals.head),
-            vals.tail.map(v => min(col(s"`$v`")).as(v)): _*)
-        d.join(broadcast(dict), col(s"`$idCol`") === col(s"__dict_$idCol"), "left")
-          .drop(s"__dict_$idCol")
-      }
-
-    val keyTerms = cfg.groupingCols.zipWithIndex
-      .filterNot { case (c, _) => cfg.idValues.contains(c) }
-      .map { case (c, i) =>
-        when(groupedBit(i), concat(lit(s"$c="), col(s"`$c`")))
-      }
-    val valueTerms = cfg.groupingCols.zipWithIndex
-      .filter { case (c, _) => cfg.idValues.contains(c) }
-      .flatMap { case (c, i) =>
-        cfg.idValues(c).map(v =>
-          when(groupedBit(i), concat(lit(s"$v="), col(s"`$v`").cast("string"))))
-      }
-    val terms = keyTerms ++ valueTerms :+ col("count").cast("string")
-    withValues.select(concat_ws(";", terms: _*).as("insight"))
-  }
 }

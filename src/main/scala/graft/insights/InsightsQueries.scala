@@ -2,6 +2,7 @@ package graft.insights
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.Tables._
 
 /** Declared (oracle-checked) instantiations of the insights engine over
@@ -103,14 +104,6 @@ object InsightsQueries {
       .orderBy("insight")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "insights_orders_cube" -> ordersCube _,
-    "insights_orders_loop" -> ordersLoop _,
-    "insights_incremental" -> ordersIncremental _,
-    "insights_customer_nation" -> customerNationCube _,
-    "insights_playstore_shape" -> playstoreShapeCube _,
-  )
-
   private val ordersBucket =
     "'[' || CAST(CAST(floor(o_totalprice/100000) AS BIGINT)*100000 AS VARCHAR)" +
       " || '-' || CAST(CAST(floor(o_totalprice/100000) AS BIGINT)*100000 + 100000 AS VARCHAR) || ']'"
@@ -171,13 +164,12 @@ object InsightsQueries {
        |  AND c >= thr
        |ORDER BY insight""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "insights_orders_cube" -> ordersInsightsSql,
-    "insights_orders_loop" -> ordersInsightsSql, // same result set by design
+  val declared: Seq[Declared] = Seq(
+    Declared("insights_orders_cube", ordersCube _, ordersInsightsSql),
+    Declared("insights_orders_loop", ordersLoop _, ordersInsightsSql), // same result set by design
     // incremental merge must reproduce the full recompute bit-for-bit
-    "insights_incremental" -> ordersInsightsSql,
-    "insights_playstore_shape" -> playstoreShapeSql,
-    "insights_customer_nation" ->
+    Declared("insights_incremental", ordersIncremental _, ordersInsightsSql),
+    Declared("insights_customer_nation", customerNationCube _,
       s"""WITH base AS (
          |  SELECT c_mktsegment AS seg, c_nationkey AS nk, n_name, $customerBucket AS bal
          |  FROM customer JOIN nation ON c_nationkey = n_nationkey),
@@ -193,6 +185,7 @@ object InsightsQueries {
          |    CAST(c AS VARCHAR)) AS insight
          |FROM g, n
          |WHERE NOT (gs = 1 AND gn = 1 AND gb = 1) AND c >= thr
-         |ORDER BY insight""".stripMargin,
+         |ORDER BY insight""".stripMargin),
+    Declared("insights_playstore_shape", playstoreShapeCube _, playstoreShapeSql),
   )
 }

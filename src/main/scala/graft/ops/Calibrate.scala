@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.Tables
 
 /** Cost-based calibration of the similarity-stack knobs — a stats-pass
@@ -90,9 +91,9 @@ object Calibrate {
     * join; reusing the constant keeps "what the guard tolerates" and
     * "what the cap admits" the same quantity. */
   private val CandidatesPerDoc = 100L
-  private val TargetBucketDocs = 16L // MUST stay 2^4 (planesCol shifts by 4)
-  private val MinPlanes = 4
-  private val MaxPlanes = 24
+  private[graft] val TargetBucketDocs = 16L // MUST stay 2^4 (planesCol shifts by 4)
+  private[graft] val MinPlanes = 4
+  private[graft] val MaxPlanes = 24
   private val CapFloor = 16L
 
   /** SRP table count for a given planes-per-table — recall ≥ 0.9 at
@@ -103,15 +104,6 @@ object Calibrate {
     val perTable = math.pow(s, planes)
     val t = math.ceil(math.log(1.0 - 0.9) / math.log(1.0 - perTable)).toInt
     math.max(4, math.min(64, t))
-  }
-
-  /** Scala mirror of the planes rule, for specs and [[params]]. */
-  private[graft] def srpPlanesFor(nDocs: Long): Int = {
-    if (nDocs <= 0) return MinPlanes
-    val buckets = (nDocs + TargetBucketDocs - 1) / TargetBucketDocs
-    val ceilLog2 =
-      if (buckets <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
-    math.min(MaxPlanes, math.max(MinPlanes, ceilLog2))
   }
 
   /** ceil(log2(x)) for x ≥ 1 as pure INTEGER column arithmetic that
@@ -126,7 +118,7 @@ object Calibrate {
   // n_docs = 0 is guarded explicitly: the formula would evaluate
   // bin(-1) (64 ones) and clamp to MaxPlanes, spuriously routing an
   // empty corpus to the widest signature with the saturation flag set;
-  // the floor MinPlanes matches the Scala mirror srpPlanesFor(0).
+  // the floor MinPlanes matches CalibrateSpec's Scala mirror at n = 0.
   private def planesCol(nDocs: Column): Column =
     when(nDocs <= 0, lit(MinPlanes)).otherwise(
       least(lit(MaxPlanes), greatest(lit(MinPlanes),
@@ -433,7 +425,8 @@ object Calibrate {
         (planes > 39).as("simhash_saturated"))
   }
 
-  /** The sampled row as name → value longs, for specs and probes. The
+  /** The sampled row as name → value longs, for CalibrateSpec and the
+    * StressSampleRate / StressRebuild probes; no route calls it. The
     * 1-row fetch is this caller's ONLY read of the sampled relation, so
     * its persist is released eagerly (probe loops call this dozens of
     * times; without the release each call parks a cached relation until
@@ -649,29 +642,14 @@ object Calibrate {
       r.getBoolean(r.fieldIndex("simhash_saturated")))
   }
 
-  /** Calibrated consumers — probe-surface variants that run the
-    * existing parameterized seams at the auto-chosen values (declared
-    * queries keep their pinned constants so oracles replay their exact
-    * configs; verification makes the pair RESULTS parameter-invariant
-    * anyway, these exist so StressScale can measure the auto-config).
-    * As of r14 both consume [[storedParams]] — the stats pass runs once
-    * per corpus snapshot, not once per invocation. */
+  /** Calibrated consumer — the SRP-LSH seam at the auto-chosen
+    * (tables, planes), served from [[storedParams]]. Declared queries
+    * keep their pinned constants so oracles replay their exact configs;
+    * no route calls this. CalibrateSpec checks its pairs are a subset of
+    * the exact cosine pairs, and StressScale measures the auto-config. */
   def textTfidfCosineLshAuto(s: SparkSession, dir: String): DataFrame = {
     val p = storedParams(s, dir)
     TextAnalysis.textTfidfCosineLshAt(s, dir, p.srpTables, p.srpPlanes)
-  }
-
-  /** Pure mirror of the width ladder for specs and routing. */
-  private[graft] def simhashWidthFor(planes: Int): Int =
-    if (planes <= 4) 64 else if (planes <= 9) 128
-    else if (planes <= 19) 256 else 512
-
-  def dedupSimhashAuto(s: SparkSession, dir: String): DataFrame = {
-    val p = storedParams(s, dir)
-    if (p.simhashBits <= 64) Dedup.dedupSimhash(s, dir)
-    else if (p.simhashBits <= 128) Dedup.dedupSimhash128(s, dir)
-    else if (p.simhashBits <= 256) Dedup.dedupSimhash256(s, dir)
-    else Dedup.dedupSimhash512(s, dir)
   }
 
   /** DECLARED width-ladder routing — the `text_tfidf_pairs_routed`
@@ -877,16 +855,6 @@ object Calibrate {
       .withColumn("mh_bands", lit(b.toLong))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "calibrate_similarity" -> calibrateSimilarity _,
-    "dedup_simhash_routed" -> dedupSimhashRouted _,
-    "dedup_substring_spans_routed" -> dedupSubstringSpansRouted _,
-    "dedup_ngram_jaccard_routed" -> dedupNgramJaccardRouted _,
-    "dedup_containment_routed" -> dedupContainmentRouted _,
-    "dedup_minhash_routed" -> dedupMinhashRouted _,
-    "calibrate_similarity_sampled" -> calibrateSimilaritySampled _,
-    "calibrate_similarity_sampled_pruned" -> calibrateSimilaritySampledPruned _)
-
   /** The n_docs → planes → rung derivation as outer CTEs the routed
     * oracle's guarded legs reference — the SAME integer text as the
     * calibrate_similarity oracle, so the two queries replay one rule. */
@@ -1073,47 +1041,8 @@ object Calibrate {
        |FROM spi, ns, st3, cap3, st10, cap10, drv""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "dedup_simhash_routed" -> dedupSimhashRoutedOracle,
-    "dedup_minhash_routed" -> dedupMinhashRoutedOracle,
-    "calibrate_similarity_sampled" -> calibrateSampledOracle,
-    // the pruned variant is output-identical BY CONSTRUCTION (same coin,
-    // same rate rule, same estimators — only the scan is pruned and
-    // n_docs rides the layout stamp instead of a count), so it shares
-    // the sampled oracle verbatim: the driver hash pins that the layout
-    // path changed IO, not answers
-    "calibrate_similarity_sampled_pruned" -> calibrateSampledOracle,
-    // both routes are lossless (prefix theorem), so one brute-force
-    // oracle pins whichever the budget rule selects
-    "dedup_ngram_jaccard_routed" -> Dedup.jaccardPairsSql,
-    "dedup_substring_spans_routed" -> dedupSubstringSpansRoutedOracle,
-    // lossless prune at ANY threshold → the containment brute force is
-    // unchanged; the consumed calibrated value rides along, derived by
-    // the same histogram chain the calibrate oracle pins
-    "dedup_containment_routed" ->
-      s"""WITH sh AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    list_distinct([array_to_string(words[i:i+2], ' ')
-         |                   FOR i IN range(1, len(words) - 1)]) AS shingles
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-         |  WHERE len(words) >= 3),
-         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-         |df3 AS (
-         |  SELECT shingle, CAST(count(*) AS BIGINT) AS df
-         |  FROM (SELECT unnest(shingles) AS shingle FROM sh) GROUP BY shingle),
-         |h3 AS (SELECT length(bin(df)) - 1 AS g, sum(df * df) AS v
-         |       FROM df3 WHERE df >= 2 GROUP BY 1),
-         |c3 AS (SELECT g, sum(v) OVER (ORDER BY g) AS cum FROM h3),
-         |${capCtesSql("c3", "g3", "cap3", "hot_df")}
-         |SELECT a_id, b_id, containment,
-         |  (SELECT hot_df FROM cap3) AS hot_df
-         |FROM (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |    CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-         |    CAST(least(len(a.shingles), len(b.shingles)) AS DOUBLE) AS containment
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin,
-    "calibrate_similarity" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("calibrate_similarity", calibrateSimilarity _,
       s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
          |sh AS (
          |  SELECT list_distinct([array_to_string(words[i:i+2], ' ')
@@ -1157,5 +1086,47 @@ object Calibrate {
          |  CAST(CASE WHEN planes <= 4 THEN 4 WHEN planes <= 9 THEN 9
          |       WHEN planes <= 19 THEN 19 ELSE 39 END AS BIGINT) AS simhash_band_bits,
          |  planes > 39 AS simhash_saturated
-         |FROM n, st3, cap3, st10, cap10, drv""".stripMargin)
+         |FROM n, st3, cap3, st10, cap10, drv""".stripMargin),
+    Declared("dedup_simhash_routed", dedupSimhashRouted _, dedupSimhashRoutedOracle),
+    Declared("dedup_substring_spans_routed", dedupSubstringSpansRouted _,
+      dedupSubstringSpansRoutedOracle),
+    // both routes are lossless (prefix theorem), so one brute-force
+    // oracle pins whichever the budget rule selects
+    Declared("dedup_ngram_jaccard_routed", dedupNgramJaccardRouted _, Dedup.jaccardPairsSql),
+    // lossless prune at ANY threshold → the containment brute force is
+    // unchanged; the consumed calibrated value rides along, derived by
+    // the same histogram chain the calibrate oracle pins
+    Declared("dedup_containment_routed", dedupContainmentRouted _,
+      s"""WITH sh AS MATERIALIZED (
+         |  SELECT doc_id,
+         |    list_distinct([array_to_string(words[i:i+2], ' ')
+         |                   FOR i IN range(1, len(words) - 1)]) AS shingles
+         |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
+         |  WHERE len(words) >= 3),
+         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+         |df3 AS (
+         |  SELECT shingle, CAST(count(*) AS BIGINT) AS df
+         |  FROM (SELECT unnest(shingles) AS shingle FROM sh) GROUP BY shingle),
+         |h3 AS (SELECT length(bin(df)) - 1 AS g, sum(df * df) AS v
+         |       FROM df3 WHERE df >= 2 GROUP BY 1),
+         |c3 AS (SELECT g, sum(v) OVER (ORDER BY g) AS cum FROM h3),
+         |${capCtesSql("c3", "g3", "cap3", "hot_df")}
+         |SELECT a_id, b_id, containment,
+         |  (SELECT hot_df FROM cap3) AS hot_df
+         |FROM (
+         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+         |    CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+         |    CAST(least(len(a.shingles), len(b.shingles)) AS DOUBLE) AS containment
+         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+         |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin),
+    Declared("dedup_minhash_routed", dedupMinhashRouted _, dedupMinhashRoutedOracle),
+    Declared("calibrate_similarity_sampled", calibrateSimilaritySampled _, calibrateSampledOracle),
+    // the pruned variant is output-identical BY CONSTRUCTION (same coin,
+    // same rate rule, same estimators — only the scan is pruned and
+    // n_docs rides the layout stamp instead of a count), so it shares
+    // the sampled oracle verbatim: the driver hash pins that the layout
+    // path changed IO, not answers
+    Declared("calibrate_similarity_sampled_pruned", calibrateSimilaritySampledPruned _,
+      calibrateSampledOracle),
+  )
 }

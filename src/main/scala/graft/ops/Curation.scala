@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import graft.Declared
 import graft.Tables._
 
 /** Training-corpus curation operators beyond the dedup/similarity/text
@@ -1212,35 +1213,6 @@ object Curation {
       .orderBy(col("check_name"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "quality_contract_checks" -> qualityContractChecks _,
-    "profile_columns" -> profileColumns _,
-    "profile_columns_approx" -> profileColumnsApprox _,
-    "profile_tables_approx" -> profileTablesApprox _,
-    "profile_drift" -> profileDrift _,
-    "profile_drift_approx" -> profileDriftApprox _,
-    "profile_drift_approx_only" -> profileDriftApproxOnly _,
-    "curation_snapshot_diff" -> curationSnapshotDiff _,
-    "dedup_source_overlap" -> dedupSourceOverlap _,
-    "profile_sources" -> profileSources _,
-    "dedup_levenshtein_names" -> dedupLevenshteinNames _,
-    "dedup_clusters" -> dedupClusters _,
-    "pipeline_cluster_dedup" -> pipelineClusterDedup _,
-    "curation_effective_tokens" -> curationEffectiveTokens _,
-    "curation_mixture_sample" -> curationMixtureSample _,
-    "curation_token_budget_cut" -> curationTokenBudgetCut _,
-    "split_leakage_safe" -> splitLeakageSafe _,
-    "split_kfold" -> splitKfold _,
-    "text_repetition" -> textRepetition _,
-    "pii_scrub" -> piiScrub _,
-    "pack_sequences" -> packSequences _,
-    "embedding_quantize" -> embeddingQuantize _,
-    "graph_pagerank_docs" -> graphPagerankDocs _,
-    "graph_triangle_counts" -> graphTriangleCounts _,
-    "graph_triangle_counts_degree" -> graphTriangleCountsDegree _,
-    "graph_kcore" -> graphKcore _,
-  )
-
   // cluster oracle: transitive closure by recursive CTE over the same
   // brute-force Jaccard pair set the LSH result provably equals
   private val clustersSql =
@@ -1567,8 +1539,9 @@ object Curation {
       |        CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
       |          AS DOUBLE) >= 0.5)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "quality_contract_checks" -> {
+  val declared: Seq[Declared] = Seq(
+    Declared("quality_contract_checks", qualityContractChecks _,
+      {
       val checks = Seq(
         // NOT EXISTS + IS NOT NULL, not NOT IN: NOT IN silently returns
         // zero rows when the subquery (or LHS) contains a NULL, so an
@@ -1598,8 +1571,9 @@ object Curation {
            |  CAST(($sql) AS BIGINT) AS violations,
            |  ($sql) = 0 AS passed""".stripMargin
       }.mkString("", "\nUNION ALL\n", "\nORDER BY check_name")
-    },
-    "profile_columns" -> {
+    }),
+    Declared("profile_columns", profileColumns _,
+      {
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
         "o_orderpriority", "price_cents")
       cols.map { c =>
@@ -1612,10 +1586,11 @@ object Curation {
            |FROM (SELECT *, CAST(round(o_totalprice * 100) AS BIGINT)
            |        AS price_cents FROM orders)""".stripMargin
       }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-    },
+    }),
     // the sketch estimate is engine-specific; the oracle recomputes the
     // exact columns and asserts every ndv verdict true
-    "profile_columns_approx" -> {
+    Declared("profile_columns_approx", profileColumnsApprox _,
+      {
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
         "o_orderpriority", "price_cents")
       cols.map { c =>
@@ -1629,11 +1604,12 @@ object Curation {
            |FROM (SELECT *, CAST(round(o_totalprice * 100) AS BIGINT)
            |        AS price_cents FROM orders)""".stripMargin
       }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-    },
+    }),
     // exact NDV recomputed per table; the sketch verdict is asserted
     // true (rsd 0.02 puts the 10% tolerance at ~5 sigma — see
     // approxProfileOf)
-    "profile_tables_approx" -> {
+    Declared("profile_tables_approx", profileTablesApprox _,
+      {
       val tables: Seq[(String, String, Seq[String])] = Seq(
         ("orders",
           "(SELECT *, CAST(round(o_totalprice * 100) AS BIGINT) " +
@@ -1661,10 +1637,11 @@ object Curation {
              |FROM $rel""".stripMargin
         }
       }.mkString("", "\nUNION ALL\n", "\nORDER BY table_name, col_name")
-    },
+    }),
     // both panels exact, the same v2 simulation as curation_snapshot_diff
     // with derived columns recomputed from the rewritten text
-    "profile_drift" -> {
+    Declared("profile_drift", profileDrift _,
+      {
       val cols = Seq("doc_id", "lang", "source", "n_chars")
       def panel(rel: String, v: String) = cols.map { c =>
         s"""SELECT '$c' AS col_name, count(*) AS n_rows_$v,
@@ -1693,14 +1670,15 @@ object Curation {
          |    OR n_distinct_v1 <> n_distinct_v2
          |    OR min_v1 <> min_v2 OR max_v1 <> max_v2) AS drifted
          |FROM p1 JOIN p2 USING (col_name) ORDER BY col_name""".stripMargin
-    },
+    }),
     // approx drift: exact panels recomputed; both per-panel ndv_ok
     // verdicts asserted true (rsd 0.01 vs a 10% tolerance) and the
     // ndv_drifted rule replayed on the EXACT NDVs — valid whenever the
     // exact delta sits far from the 10% boundary, which the ~7-sigma
     // margin (see profileDriftApprox scaladoc) guarantees for a
     // fixture whose exact deltas are ~0
-    "profile_drift_approx" -> {
+    Declared("profile_drift_approx", profileDriftApprox _,
+      {
       val cols = Seq("doc_id", "lang", "source", "n_chars")
       def panel(rel: String, v: String) = cols.map { c =>
         s"""SELECT '$c' AS col_name, count(*) AS n_rows_$v,
@@ -1736,13 +1714,14 @@ object Curation {
          |      CAST(greatest(n_distinct_v1, n_distinct_v2) * 0.10 AS BIGINT)))
          |    AS drifted
          |FROM p1 JOIN p2 USING (col_name) ORDER BY col_name""".stripMargin
-    },
+    }),
     // production approx-only drift: the engine's ndv_drifted differences
     // two HLL estimates, the oracle differences the EXACT NDVs it
     // computes itself — the verdicts agree whenever the exact delta sits
     // far from the 10% boundary (the ~7-sigma margin argument on
     // profileDriftApprox); no NDV columns appear in the output at all
-    "profile_drift_approx_only" -> {
+    Declared("profile_drift_approx_only", profileDriftApproxOnly _,
+      {
       val cols = Seq("doc_id", "lang", "source", "n_chars")
       def panel(rel: String, v: String) = cols.map { c =>
         s"""SELECT '$c' AS col_name, count(*) AS n_rows_$v,
@@ -1776,8 +1755,8 @@ object Curation {
          |      CAST(greatest(n_distinct_v1, n_distinct_v2) * 0.10 AS BIGINT)))
          |    AS drifted
          |FROM p1 JOIN p2 USING (col_name) ORDER BY col_name""".stripMargin
-    },
-    "curation_snapshot_diff" ->
+    }),
+    Declared("curation_snapshot_diff", curationSnapshotDiff _,
       s"""WITH $addedIdStrideSql,
         |v1 AS (SELECT doc_id, lang, text FROM documents),
         |v2 AS (
@@ -1800,8 +1779,8 @@ object Curation {
         |SELECT status, count(*) AS n_docs,
         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
         |  min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-        |FROM d GROUP BY status ORDER BY status""".stripMargin,
-    "dedup_source_overlap" ->
+        |FROM d GROUP BY status ORDER BY status""".stripMargin),
+    Declared("dedup_source_overlap", dedupSourceOverlap _,
       s"""WITH $jaccardPairsCte
          |SELECT least(da.source, db.source) AS source_1,
          |  greatest(da.source, db.source) AS source_2,
@@ -1810,8 +1789,8 @@ object Curation {
          |JOIN documents da ON p.a_id = da.doc_id
          |JOIN documents db ON p.b_id = db.doc_id
          |GROUP BY source_1, source_2
-         |ORDER BY source_1, source_2""".stripMargin,
-    "profile_sources" ->
+         |ORDER BY source_1, source_2""".stripMargin),
+    Declared("profile_sources", profileSources _,
       s"""WITH $jaccardPairsCte,
          |dup AS (
          |  SELECT DISTINCT doc_id FROM (
@@ -1823,8 +1802,8 @@ object Curation {
          |  CAST(sum(CASE WHEN dup.doc_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
          |    AS n_dup_docs
          |FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "dedup_levenshtein_names" ->
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    Declared("dedup_levenshtein_names", dedupLevenshteinNames _,
       """WITH pairs AS (
         |  SELECT a.p_size, levenshtein(a.p_name, b.p_name) AS lev
         |  FROM part a JOIN part b
@@ -1835,23 +1814,23 @@ object Curation {
         |  CAST(sum(CASE WHEN lev = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_d1,
         |  CAST(sum(CASE WHEN lev = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_d2,
         |  CAST(sum(CASE WHEN lev = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_d3
-        |FROM pairs GROUP BY p_size ORDER BY p_size""".stripMargin,
-    "dedup_clusters" -> clustersSql,
-    "pipeline_cluster_dedup" -> clusterDedupSql,
-    "curation_effective_tokens" -> effectiveTokensSql,
-    "curation_mixture_sample" -> mixtureSampleSql,
-    "curation_token_budget_cut" -> tokenBudgetCutSql,
-    "split_leakage_safe" -> leakageSplitSql,
-    "split_kfold" -> kfoldSql,
-    "text_repetition" -> repetitionSql,
-    "pii_scrub" -> piiSql,
-    "pack_sequences" -> packSql,
-    "embedding_quantize" -> quantizeSql,
-    "graph_pagerank_docs" -> pagerankSql,
-    "graph_triangle_counts" -> triangleSql,
-    "graph_kcore" -> kcoreSql,
+        |FROM pairs GROUP BY p_size ORDER BY p_size""".stripMargin),
+    Declared("dedup_clusters", dedupClusters _, clustersSql),
+    Declared("pipeline_cluster_dedup", pipelineClusterDedup _, clusterDedupSql),
+    Declared("curation_effective_tokens", curationEffectiveTokens _, effectiveTokensSql),
+    Declared("curation_mixture_sample", curationMixtureSample _, mixtureSampleSql),
+    Declared("curation_token_budget_cut", curationTokenBudgetCut _, tokenBudgetCutSql),
+    Declared("split_leakage_safe", splitLeakageSafe _, leakageSplitSql),
+    Declared("split_kfold", splitKfold _, kfoldSql),
+    Declared("text_repetition", textRepetition _, repetitionSql),
+    Declared("pii_scrub", piiScrub _, piiSql),
+    Declared("pack_sequences", packSequences _, packSql),
+    Declared("embedding_quantize", embeddingQuantize _, quantizeSql),
+    Declared("graph_pagerank_docs", graphPagerankDocs _, pagerankSql),
+    Declared("graph_triangle_counts", graphTriangleCounts _, triangleSql),
     // orientation-invariant: the degree-ordered variant shares the oracle
-    "graph_triangle_counts_degree" -> triangleSql,
+    Declared("graph_triangle_counts_degree", graphTriangleCountsDegree _, triangleSql),
+    Declared("graph_kcore", graphKcore _, kcoreSql),
   )
 
   // same brute-force Jaccard pair CTE; oriented-edge (a<b) wedge close —

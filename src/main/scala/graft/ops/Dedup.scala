@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Deduplication operators over the `documents` table — the reference has
@@ -155,7 +156,9 @@ object Dedup {
     * exactly once but the C(f,2) work spreads over saltBuckets reducers
     * (the same two-phase trick as `Skew.saltedAgg`, applied to pair
     * generation). Cold shingles join exactly as before; the union feeds
-    * one pair-count aggregate, so |A∩B| is unchanged. */
+    * one pair-count aggregate, so |A∩B| is unchanged. No route calls it:
+    * DedupSpec pins it equal to the plain join, and StressScale's
+    * df-cap probes measure it as the candidate route for hot shingles. */
   def dedupNgramJaccardCapped(s: SparkSession, dir: String, hotDf: Long,
       saltBuckets: Int): DataFrame = {
     // the exploded index is referenced by the df pass, both cold join
@@ -457,62 +460,8 @@ object Dedup {
       element_at(graft.functions.VectorExpressions.simhashVotes(
         col("feats"), Seq(1, 0), hashInput), 1).as("simhash"))
 
-  /** Signed-vote 64-bit SimHash from ANY md5-hex feature relation
-    * (doc_id, m) — the original explode + vote-aggregate formulation,
-    * kept as the EQUIVALENCE TWIN of [[simhashFromFeatureArray]] (it
-    * mirrors the brute-force oracle 1:1; DedupSpec pins the fused
-    * expression bit-for-bit against it). The declared queries serve
-    * from the fused map-side path. */
-  private[graft] def simhashFromFeatures(feats: DataFrame): DataFrame = {
-    val tok = feats
-      .select(col("doc_id"),
-        conv(substring(col("m"), 1, 8), 16, 10).cast("long").as("h_hi"),
-        conv(substring(col("m"), 9, 8), 16, 10).cast("long").as("h_lo"))
-    val bitSums = (0 until 64).map { k =>
-      val h = if (k < 32) col("h_lo") else col("h_hi")
-      sum(when(shiftright(h, k % 32).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"s_$k")
-    }
-    val sig = (0 until 64).map { k =>
-      when(col(s"s_$k") > 0, shiftleft(lit(1L), k)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-    tok.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), sig.as("simhash"))
-  }
-
   private val SimhashMaxHamming = 12
   private val SimhashBands = 13 // > max hamming → pigeonhole guarantees recall
-
-  /** THE scale knob the 64-bit scaladocs document, in code: a 128-bit
-    * signature from the SAME md5 features (all four 32-bit words vote),
-    * so the 13 pigeonhole bands carry 10 or 9 bits ([[balancedBands]])
-    * instead of 5 or 4 — per-band bucket space grows 32×, and the banded join's
-    * Σ|bucket|² candidate volume drops accordingly at equal corpus
-    * size (DedupSpec measures the drop and the hamming-0 recall floor
-    * on the fixture). Hamming ≤ 12 over 128 bits is a TIGHTER
-    * similarity scale than over 64, so this is a separately DECLARED
-    * parameterization ([[dedupSimhash128]], its own brute-force
-    * oracle), not a drop-in for the 64-bit one. Like its 64-bit
-    * sibling, this explode + vote-aggregate formulation is kept as the
-    * EQUIVALENCE TWIN of [[simhash128FromFeatureArray]] (the fused
-    * compiled path the declared queries serve from). */
-  private[graft] def simhash128FromFeatures(feats: DataFrame): DataFrame = {
-    val tok = feats.select(col("doc_id") +:
-      (0 until 4).map(wd => conv(substring(col("m"), wd * 8 + 1, 8), 16, 10)
-        .cast("long").as(s"h$wd")): _*)
-    val bitSums = (0 until 128).map { k =>
-      val h = col(s"h${k / 32}")
-      sum(when(shiftright(h, k % 32).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"s_$k")
-    }
-    def word(off: Int) = (0 until 64).map { k =>
-      when(col(s"s_${k + off}") > 0, shiftleft(lit(1L), k)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-    tok.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), word(64).as("sig_hi"), word(0).as("sig_lo"))
-  }
 
   /** The 13-band decomposition of a (doc_id, sig_hi, sig_lo) relation:
     * one row per (doc_id, band, bits), 11 bands × 10 bits + 2 × 9
@@ -599,9 +548,18 @@ object Dedup {
     simhashBandedPairs(simhashSignatures(documents(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** 128-bit signatures over the same word-bigram features as
-    * [[simhashSignatures]] (same < 2-word exclusion); only the vote
-    * width differs — all four 32-bit md5 words vote instead of two. */
+  /** THE scale knob the 64-bit scaladocs document, in code: a 128-bit
+    * signature from the SAME md5 features (all four 32-bit words vote),
+    * so the 13 pigeonhole bands carry 10 or 9 bits ([[balancedBands]])
+    * instead of 5 or 4 — per-band bucket space grows 32×, and the banded join's
+    * Σ|bucket|² candidate volume drops accordingly at equal corpus
+    * size (DedupSpec measures the drop and the hamming-0 recall floor
+    * on the fixture). Hamming ≤ 12 over 128 bits is a TIGHTER
+    * similarity scale than over 64, so this is a separately DECLARED
+    * parameterization ([[dedupSimhash128]], its own brute-force
+    * oracle), not a drop-in for the 64-bit one. Over the same
+    * word-bigram features as [[simhashSignatures]] (same < 2-word
+    * exclusion); only the vote width differs. */
   def simhash128Signatures(df: DataFrame): DataFrame =
     simhash128FromFeatureArray(df
       .filter(size(split(col("text"), " ")) >= 2)
@@ -711,29 +669,6 @@ object Dedup {
       graft.functions.VectorExpressions.simhashVotes(
         col("feats"), 0 until 8, hashInput, algo = "sha256").as("sig"))
 
-  /** Equivalence twin of [[simhash256FromFeatureArray]] — the explode +
-    * eight-conv-word + 256-column vote aggregate formulation, mirroring
-    * the DuckDB oracle 1:1 (DedupSpec pins the fused path bit-for-bit
-    * against it; not used by any declared query). Input: (doc_id, m)
-    * with m = sha256 hex of each feature occurrence. */
-  private[graft] def simhash256FromFeatures(feats: DataFrame): DataFrame = {
-    val tok = feats.select(col("doc_id") +:
-      (0 until 8).map(wd => conv(substring(col("m"), wd * 8 + 1, 8), 16, 10)
-        .cast("long").as(s"h$wd")): _*)
-    val bitSums = (0 until 256).map { k =>
-      sum(when(shiftright(col(s"h${k / 32}"), k % 32).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"s_$k")
-    }
-    val sigWords = (0 until 4).map { wd =>
-      (0 until 64).map { b =>
-        when(col(s"s_${64 * wd + b}") > 0, shiftleft(lit(1L), b)).otherwise(0L)
-      }.reduce(_.bitwiseOR(_))
-    }
-    tok.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), array(sigWords: _*).as("sig"))
-  }
-
   /** Band extraction over the array<long> signature, width-generic —
     * same unsigned-shift discipline as [[simhash128Banded]]; which bands
     * straddle 64-bit word boundaries depends on the width (3/6/9 at
@@ -763,9 +698,6 @@ object Dedup {
       .select(col("doc_id"), col("sig"),
         col("bb.band").as("band"), col("bb.bits").as("bits"))
   }
-
-  private[graft] def simhash256Banded(sigs: DataFrame): DataFrame =
-    simhashArrayBanded(sigs, 256)
 
   /** Banded pairs over array<long> signatures of any declared width:
     * hamming ≤ 12 still pigeonholes into at least one untouched band. */
@@ -827,29 +759,6 @@ object Dedup {
     df.select(col("doc_id"),
       graft.functions.VectorExpressions.simhashVotes(
         col("feats"), 0 until 16, hashInput, algo = "sha256x2").as("sig"))
-
-  /** Equivalence twin of [[simhash512FromFeatureArray]] — explode +
-    * sixteen-conv-word + 512-column vote aggregate, mirroring the DuckDB
-    * oracle 1:1 (DedupSpec pins the fused path bit-for-bit against it).
-    * Input: (doc_id, m) with m = the 128-char doubled-sha256 hex of each
-    * feature occurrence. */
-  private[graft] def simhash512FromFeatures(feats: DataFrame): DataFrame = {
-    val tok = feats.select(col("doc_id") +:
-      (0 until 16).map(wd => conv(substring(col("m"), wd * 8 + 1, 8), 16, 10)
-        .cast("long").as(s"h$wd")): _*)
-    val bitSums = (0 until 512).map { k =>
-      sum(when(shiftright(col(s"h${k / 32}"), k % 32).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"s_$k")
-    }
-    val sigWords = (0 until 8).map { wd =>
-      (0 until 64).map { b =>
-        when(col(s"s_${64 * wd + b}") > 0, shiftleft(lit(1L), b)).otherwise(0L)
-      }.reduce(_.bitwiseOR(_))
-    }
-    tok.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), array(sigWords: _*).as("sig"))
-  }
 
   /** Containment near-dup pairs: C(A,B) = |A∩B| / min(|A|,|B|) over the
     * same distinct 3-shingle sets as the Jaccard family. Containment is
@@ -1086,22 +995,6 @@ object Dedup {
       .orderBy(col("doc_id"), col("span_start"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> dedupExact _,
-    "dedup_substring_spans" -> dedupSubstringSpans _,
-    "dedup_containment" -> dedupContainment _,
-    "dedup_ngram_jaccard" -> dedupNgramJaccard _,
-    "dedup_ngram_jaccard_prefix" -> dedupNgramJaccardPrefix _,
-    // served from the shared materialized index (Indexes.nearDupPairs);
-    // dedupMinhashLsh is the builder
-    "dedup_minhash_lsh" -> ((s, d) => Indexes.nearDupPairs(s, d)),
-    "dedup_incremental" -> dedupIncremental _,
-    "dedup_simhash" -> dedupSimhash _,
-    "dedup_simhash128" -> dedupSimhash128 _,
-    "dedup_simhash256" -> dedupSimhash256 _,
-    "dedup_simhash512" -> dedupSimhash512 _,
-  )
-
   /** DuckDB oracle for the simhash pipeline: brute-force all-pairs over
     * per-document bit votes (fine at sf0.01), same md5-derived feature
     * bits as the Spark side. The banded equi-join is exact-recall by
@@ -1278,11 +1171,17 @@ object Dedup {
       |      CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.5
       |ORDER BY a_id, b_id""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "dedup_exact" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("dedup_exact", dedupExact _,
       """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-    "dedup_containment" ->
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin),
+    // maximal duplicate spans: positional 10-gram md5s, df >= 2 over
+    // distinct docs, gaps-and-islands merge (pos - row_number()).
+    Declared("dedup_substring_spans", dedupSubstringSpans _,
+      s"""WITH $substringSpanCtes
+         |SELECT doc_id, span_start, span_end, n_tokens, n_grams
+         |FROM spans ORDER BY doc_id, span_start""".stripMargin),
+    Declared("dedup_containment", dedupContainment _,
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(words[i:i+2], ' ')
@@ -1294,13 +1193,16 @@ object Dedup {
         |    CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
         |    CAST(least(len(a.shingles), len(b.shingles)) AS DOUBLE) AS containment
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin,
-    "dedup_ngram_jaccard" -> jaccardPairsSql,
-    "dedup_ngram_jaccard_prefix" -> jaccardPairsSql, // prefix filter is lossless
-    "dedup_minhash_lsh" -> jaccardPairsSql, // verified-LSH == brute force by design
+        |WHERE containment >= 0.8 ORDER BY a_id, b_id""".stripMargin),
+    Declared("dedup_ngram_jaccard", dedupNgramJaccard _, jaccardPairsSql),
+    // the prefix filter is lossless
+    Declared("dedup_ngram_jaccard_prefix", dedupNgramJaccardPrefix _, jaccardPairsSql),
+    // served from the shared materialized index (Indexes.nearDupPairs);
+    // dedupMinhashLsh is the builder. Verified LSH == brute force by design
+    Declared("dedup_minhash_lsh", (s, d) => Indexes.nearDupPairs(s, d), jaccardPairsSql),
     // brute-force batch×corpus recomputation; the incremental LSH probe
     // is exact-by-verification like the full LSH above
-    "dedup_incremental" ->
+    Declared("dedup_incremental", dedupIncremental _,
       """WITH sh AS (
         |  SELECT doc_id, n_chars,
         |    list_distinct([array_to_string(words[i:i+2], ' ')
@@ -1315,17 +1217,11 @@ object Dedup {
         |  AND abs(a.n_chars - b.n_chars) <= 100
         |WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
         |      CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.5
-        |ORDER BY new_id, dup_of""".stripMargin,
-    "dedup_simhash" -> simhashOracleSql,
-    "dedup_simhash128" -> simhash128OracleFor(simhashFeatureCtes),
-    "dedup_simhash256" -> simhash256OracleFor(simhash256FeatureCtes),
-    "dedup_simhash512" -> simhash512OracleFor(simhash512FeatureCtes),
-    // maximal duplicate spans: positional 10-gram md5s, df >= 2 over
-    // distinct docs, gaps-and-islands merge (pos - row_number()).
-    "dedup_substring_spans" ->
-      s"""WITH $substringSpanCtes
-         |SELECT doc_id, span_start, span_end, n_tokens, n_grams
-         |FROM spans ORDER BY doc_id, span_start""".stripMargin,
+        |ORDER BY new_id, dup_of""".stripMargin),
+    Declared("dedup_simhash", dedupSimhash _, simhashOracleSql),
+    Declared("dedup_simhash128", dedupSimhash128 _, simhash128OracleFor(simhashFeatureCtes)),
+    Declared("dedup_simhash256", dedupSimhash256 _, simhash256OracleFor(simhash256FeatureCtes)),
+    Declared("dedup_simhash512", dedupSimhash512 _, simhash512OracleFor(simhash512FeatureCtes)),
   )
 
   /** CTE chain ending in `spans(doc_id, span_start, span_end, n_tokens,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Event-stream operators over `events` (batch forms; the Structured
@@ -505,35 +506,6 @@ object Events {
       .orderBy(col("day"))
   }
 
-  /** Probe-only sketch leg of [[dauWauHll]] — day, dau, wau_est with NO
-    * exact-WAU verdict companion: what production runs once the ±5 %
-    * tolerance is accepted. The declared query deliberately carries the
-    * exact leg as its embedded oracle, which also means its wall time
-    * can never show the sketch path's advantage; StressScale measures
-    * THIS against [[dauWauStickiness]] to locate the crossover the
-    * [[dauWauHll]] scaladoc predicts (7 × 4 KB sketches shuffled per
-    * day vs 7 × the day's distinct-user set). */
-  private[graft] def dauWauHllSketchOnly(s: SparkSession, dir: String): DataFrame = {
-    val du = events(s, dir)
-      .select(to_date(col("ts")).as("day"), col("user_id"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val daily = du.groupBy(col("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"),
-        count(lit(1)).as("dau"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val days = du.select(col("day")).distinct()
-    val wauSketch = daily
-      .select(explode(expr("sequence(0, 6)")).as("i"), col("day"), col("sk"))
-      .select(expr("date_add(day, i)").as("day"), col("sk"))
-      .join(days, Seq("day"), "left_semi")
-      .groupBy(col("day"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("wau_est"))
-    daily.select(col("day"), col("dau"))
-      .join(wauSketch, Seq("day"))
-      .orderBy(col("day"))
-  }
-
   /** GUARD-ROUTED events self-join (r14 verdict #7 — the join-volume
     * pre-flight consumed IN-PLAN, not just reported): which event types
     * co-occur within 5 minutes for the same user — the behavioral
@@ -589,17 +561,6 @@ object Events {
     else cooccurrencePairAgg(cooccurrenceBandedJoin(e), "banded")
   }
 
-  /** StressScale's probe seam: the co-occurrence contract at a FIXED
-    * route, so the plain-vs-banded volume separation is measurable on
-    * the time-grown null without the guard choosing for you. */
-  private[graft] def cooccurrenceFixedRoute(s: SparkSession, dir: String,
-      banded: Boolean): DataFrame = {
-    val e = events(s, dir).select(col("user_id"), col("event_id"),
-      col("event_type"), unix_micros(col("ts")).as("us"))
-    if (banded) cooccurrencePairAgg(cooccurrenceBandedJoin(e), "banded")
-    else cooccurrencePairAgg(cooccurrencePlainJoin(e), "plain")
-  }
-
   /** 5 minutes in µs — the co-occurrence window AND the band width (the
     * losslessness argument needs width ≥ window; equal is tightest). */
   private val CoocWindowUs = 300000000L
@@ -639,32 +600,11 @@ object Events {
       .withColumn("route", lit(route))
       .orderBy(col("type_1"), col("type_2"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_cooccurrence_routed" -> eventsCooccurrenceRouted _,
-    "events_dau_wau" -> dauWauStickiness _,
-    "events_dau_wau_hll" -> dauWauHll _,
-    "events_ohlc_bars" -> ohlcBars _,
-    "events_concurrency" -> concurrencyPeaks _,
-    "events_interval_frame" -> intervalFrame _,
-    "events_ab_test" -> abTestReadout _,
-    "events_tumbling_windows" -> tumblingWindows _,
-    "events_hopping_windows" -> hoppingWindows _,
-    "events_gap_fill" -> eventsGapFill _,
-    "events_markov_transitions" -> eventsMarkovTransitions _,
-    "events_sessionize" -> sessionize _,
-    "events_funnel" -> signupPurchaseFunnel _,
-    "events_hourly_pivot" -> hourlyTypePivot _,
-    "events_retention" -> cohortRetention _,
-    "events_rolling_median" -> eventsRollingMedian _,
-    "events_cohort_ltv" -> cohortLtv _,
-    "events_top_paths" -> topEventPaths _,
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
     // one relational body covers both routes (the banded join is
     // result-identical — EventsSpec pins row-level equality); the guard
     // rule replays in SQL so the hash pins the routing decision itself
-    "events_cooccurrence_routed" ->
+    Declared("events_cooccurrence_routed", eventsCooccurrenceRouted _,
       s"""WITH c AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1),
@@ -680,10 +620,10 @@ object Events {
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         |  AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000
-        |GROUP BY 1, 2 ORDER BY type_1, type_2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY type_1, type_2""".stripMargin),
     // DAU/WAU via the same window-expansion: each (day,user) activity
     // contributes to 7 window-end days; semi join keeps observed days
-    "events_dau_wau" ->
+    Declared("events_dau_wau", dauWauStickiness _,
       """WITH du AS MATERIALIZED (
         |  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
         |  FROM events),
@@ -697,11 +637,11 @@ object Events {
         |  WHERE c.day IN (SELECT day FROM days) GROUP BY 1)
         |SELECT dau.day, dau.dau, wau.wau7,
         |  CAST(dau.dau AS DOUBLE) / CAST(wau.wau7 AS DOUBLE) AS stickiness
-        |FROM dau JOIN wau USING (day) ORDER BY dau.day""".stripMargin,
+        |FROM dau JOIN wau USING (day) ORDER BY dau.day""".stripMargin),
     // HLL sibling: the oracle recomputes the exact DAU/WAU and asserts
     // the sketch-path verdicts (the agg_hll_orders discipline — sketch
     // internals are engine-specific, the ±5% verdict is the contract)
-    "events_dau_wau_hll" ->
+    Declared("events_dau_wau_hll", dauWauHll _,
       """WITH du AS MATERIALIZED (
         |  SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
         |  FROM events),
@@ -714,10 +654,10 @@ object Events {
         |  SELECT c.day, count(*) AS wau7 FROM contrib c
         |  WHERE c.day IN (SELECT day FROM days) GROUP BY 1)
         |SELECT dau.day, dau.dau, wau.wau7, true AS wau_ok
-        |FROM dau JOIN wau USING (day) ORDER BY dau.day""".stripMargin,
+        |FROM dau JOIN wau USING (day) ORDER BY dau.day""".stripMargin),
     // open/close: the engine's min/max over (us, event_id, cents)
     // structs == rank-1 rows of the (ts, event_id) total order
-    "events_ohlc_bars" ->
+    Declared("events_ohlc_bars", ohlcBars _,
       """WITH e AS (
         |  SELECT epoch_us(ts) // 3600000000 AS hour_bucket, event_type,
         |    epoch_us(ts) AS us, event_id,
@@ -743,65 +683,10 @@ object Events {
         |FROM agg a
         |JOIN o USING (hour_bucket, event_type)
         |JOIN c USING (hour_bucket, event_type)
-        |ORDER BY hour_bucket, event_type""".stripMargin,
-    "events_interval_frame" ->
-      """SELECT user_id, event_id,
-        |  CAST(count(*) OVER w AS BIGINT) AS n_1h,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS cents_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "events_markov_transitions" ->
-      """WITH p AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (
-        |  SELECT from_type, to_type, count(*) AS n FROM p
-        |  WHERE to_type IS NOT NULL GROUP BY from_type, to_type)
-        |SELECT from_type, to_type, n,
-        |  CAST(n AS DOUBLE) /
-        |    CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE) AS p
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-    "events_gap_fill" ->
-      """WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day FROM events),
-        |daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n_events
-        |  FROM events WHERE value > 190
-        |  GROUP BY event_type, CAST(ts AS DATE)),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (
-        |  SELECT t.event_type, CAST(g.day AS DATE) AS day
-        |  FROM (SELECT DISTINCT event_type FROM e) t
-        |  CROSS JOIN span
-        |  CROSS JOIN LATERAL (SELECT unnest(generate_series(span.d0, span.d1,
-        |    INTERVAL 1 DAY)) AS day) g)
-        |SELECT s.event_type, s.day,
-        |  CAST(coalesce(d.n_events, 0) AS BIGINT) AS n_events
-        |FROM spine s LEFT JOIN daily d
-        |  ON s.event_type = d.event_type AND s.day = d.day
-        |ORDER BY s.event_type, s.day""".stripMargin,
-    "events_hopping_windows" ->
-      """WITH hops AS (SELECT unnest(range(0, 2)) AS h),
-        |assigned AS (
-        |  SELECT (epoch_us(ts) // 1800000000) * 1800 - h.h * 1800
-        |      AS window_start,
-        |    event_type, value
-        |  FROM events CROSS JOIN hops h)
-        |SELECT window_start, event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM assigned GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-    "events_tumbling_windows" ->
-      """SELECT (epoch_us(ts) // 600000000) * 600 AS window_start, event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |ORDER BY hour_bucket, event_type""".stripMargin),
     // peak(t) = running_after(t) + ends(t): closed-interval identity,
     // independent of tie order among simultaneous starts/ends
-    "events_concurrency" ->
+    Declared("events_concurrency", concurrencyPeaks _,
       """WITH e AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
         |flagged AS (
@@ -840,34 +725,16 @@ object Events {
         |SELECT day, count(*) AS n_change_points,
         |  CAST(sum(st) AS BIGINT) AS n_session_parts,
         |  CAST(max(peak_t) AS BIGINT) AS max_concurrent
-        |FROM swept GROUP BY day ORDER BY day""".stripMargin,
-    "events_sessionize" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-        |flagged AS (
-        |  SELECT event_id, user_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |              OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us ASC, event_id ASC)),
-        |numbered AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY us ASC, event_id ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_no
-        |  FROM flagged)
-        |SELECT user_id, session_no, count(*) AS n_events,
-        |  min(us) AS session_start_us, max(us) AS session_end_us
-        |FROM numbered GROUP BY user_id, session_no
-        |ORDER BY user_id, session_no""".stripMargin,
-    "events_funnel" ->
-      """WITH f AS (
-        |  SELECT user_id, event_type, min(epoch_us(ts)) AS first_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT s.user_id, s.first_us AS signup_us, p.first_us AS purchase_us
-        |FROM f s JOIN f p ON s.user_id = p.user_id
-        |WHERE s.event_type = 'signup' AND p.event_type = 'purchase'
-        |  AND s.first_us < p.first_us
-        |ORDER BY s.user_id""".stripMargin,
-    "events_ab_test" ->
+        |FROM swept GROUP BY day ORDER BY day""".stripMargin),
+    Declared("events_interval_frame", intervalFrame _,
+      """SELECT user_id, event_id,
+        |  CAST(count(*) OVER w AS BIGINT) AS n_1h,
+        |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS cents_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+        |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, event_id""".stripMargin),
+    Declared("events_ab_test", abTestReadout _,
       """WITH pu AS (
         |  SELECT user_id,
         |    CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -893,16 +760,97 @@ object Events {
         |    sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b)) *
         |         (1.0 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b)) *
         |         (1.0 / n_a + 1.0 / n_b)), 6) AS z_q
-        |FROM agg""".stripMargin,
-    "events_retention" ->
+        |FROM agg""".stripMargin),
+    Declared("events_tumbling_windows", tumblingWindows _,
+      """SELECT (epoch_us(ts) // 600000000) * 600 AS window_start, event_type,
+        |  count(*) AS n_events,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
+    Declared("events_hopping_windows", hoppingWindows _,
+      """WITH hops AS (SELECT unnest(range(0, 2)) AS h),
+        |assigned AS (
+        |  SELECT (epoch_us(ts) // 1800000000) * 1800 - h.h * 1800
+        |      AS window_start,
+        |    event_type, value
+        |  FROM events CROSS JOIN hops h)
+        |SELECT window_start, event_type, count(*) AS n_events,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+        |FROM assigned GROUP BY 1, 2
+        |ORDER BY window_start, event_type""".stripMargin),
+    Declared("events_gap_fill", eventsGapFill _,
+      """WITH e AS (SELECT event_type, CAST(ts AS DATE) AS day FROM events),
+        |daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n_events
+        |  FROM events WHERE value > 190
+        |  GROUP BY event_type, CAST(ts AS DATE)),
+        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
+        |spine AS (
+        |  SELECT t.event_type, CAST(g.day AS DATE) AS day
+        |  FROM (SELECT DISTINCT event_type FROM e) t
+        |  CROSS JOIN span
+        |  CROSS JOIN LATERAL (SELECT unnest(generate_series(span.d0, span.d1,
+        |    INTERVAL 1 DAY)) AS day) g)
+        |SELECT s.event_type, s.day,
+        |  CAST(coalesce(d.n_events, 0) AS BIGINT) AS n_events
+        |FROM spine s LEFT JOIN daily d
+        |  ON s.event_type = d.event_type AND s.day = d.day
+        |ORDER BY s.event_type, s.day""".stripMargin),
+    Declared("events_markov_transitions", eventsMarkovTransitions _,
+      """WITH p AS (
+        |  SELECT event_type AS from_type,
+        |    lead(event_type) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS to_type
+        |  FROM events),
+        |c AS (
+        |  SELECT from_type, to_type, count(*) AS n FROM p
+        |  WHERE to_type IS NOT NULL GROUP BY from_type, to_type)
+        |SELECT from_type, to_type, n,
+        |  CAST(n AS DOUBLE) /
+        |    CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE) AS p
+        |FROM c ORDER BY from_type, to_type""".stripMargin),
+    Declared("events_sessionize", sessionize _,
+      """WITH e AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+        |flagged AS (
+        |  SELECT event_id, user_id, us,
+        |    CASE WHEN lag(us) OVER w IS NULL
+        |              OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_session
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us ASC, event_id ASC)),
+        |numbered AS (
+        |  SELECT user_id, us,
+        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY us ASC, event_id ASC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_no
+        |  FROM flagged)
+        |SELECT user_id, session_no, count(*) AS n_events,
+        |  min(us) AS session_start_us, max(us) AS session_end_us
+        |FROM numbered GROUP BY user_id, session_no
+        |ORDER BY user_id, session_no""".stripMargin),
+    Declared("events_funnel", signupPurchaseFunnel _,
+      """WITH f AS (
+        |  SELECT user_id, event_type, min(epoch_us(ts)) AS first_us
+        |  FROM events GROUP BY 1, 2)
+        |SELECT s.user_id, s.first_us AS signup_us, p.first_us AS purchase_us
+        |FROM f s JOIN f p ON s.user_id = p.user_id
+        |WHERE s.event_type = 'signup' AND p.event_type = 'purchase'
+        |  AND s.first_us < p.first_us
+        |ORDER BY s.user_id""".stripMargin),
+    Declared("events_hourly_pivot", hourlyTypePivot _,
+      """SELECT epoch_us(ts) // 3600000000 AS hour_bucket,
+        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
+        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
+        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
+        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
+        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
+        |FROM events GROUP BY 1 ORDER BY hour_bucket""".stripMargin),
+    Declared("events_retention", cohortRetention _,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
         |c AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id)
         |SELECT c.cohort_day, e.day - c.cohort_day AS day_offset,
         |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
         |FROM e JOIN c ON e.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    "events_rolling_median" ->
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin),
+    Declared("events_rolling_median", eventsRollingMedian _,
       """WITH daily AS (
         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
         |    CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS vc
@@ -910,8 +858,8 @@ object Events {
         |SELECT event_type, day, vc,
         |  quantile_cont(vc, 0.5) OVER (PARTITION BY event_type ORDER BY day
         |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS med7
-        |FROM daily ORDER BY event_type, day""".stripMargin,
-    "events_cohort_ltv" ->
+        |FROM daily ORDER BY event_type, day""".stripMargin),
+    Declared("events_cohort_ltv", cohortLtv _,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |    CAST(round(value*100) AS BIGINT) AS vc
@@ -935,22 +883,14 @@ object Events {
         |  CAST(cum_rev_cents AS DOUBLE) / CAST(sz.cohort_users AS DOUBLE)
         |    AS ltv_cents
         |FROM cum JOIN sz ON sz.cohort_day = cum.cohort_day
-        |ORDER BY cum.cohort_day, day_offset""".stripMargin,
-    "events_top_paths" ->
+        |ORDER BY cum.cohort_day, day_offset""".stripMargin),
+    Declared("events_top_paths", topEventPaths _,
       """WITH p AS (
         |  SELECT user_id,
         |    array_to_string(
         |      list(event_type ORDER BY epoch_us(ts), event_id)[1:3], '>') AS path3
         |  FROM events GROUP BY user_id)
         |SELECT path3, count(*) AS n_users
-        |FROM p GROUP BY path3 ORDER BY path3""".stripMargin,
-    "events_hourly_pivot" ->
-      """SELECT epoch_us(ts) // 3600000000 AS hour_bucket,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-        |FROM events GROUP BY 1 ORDER BY hour_bucket""".stripMargin,
+        |FROM p GROUP BY path3 ORDER BY path3""".stripMargin),
   )
 }

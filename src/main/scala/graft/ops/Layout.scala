@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.Tables._
 
 /** Multi-dimensional data layout: Z-order (Morton) interleaving.
@@ -28,12 +29,6 @@ object Layout {
     (0 until bits).map { k =>
       shiftleft(shiftright(x, k).bitwiseAND(1), 2 * k)
         .bitwiseOR(shiftleft(shiftright(y, k).bitwiseAND(1), 2 * k + 1))
-    }.reduce(_.bitwiseOR(_))
-
-  /** Inverse of [[zValue]]: extract the even (x) or odd (y) bit lanes. */
-  def zExtract(z: Column, odd: Boolean, bits: Int = 8): Column =
-    (0 until bits).map { k =>
-      shiftleft(shiftright(z, 2 * k + (if (odd) 1 else 0)).bitwiseAND(1), k)
     }.reduce(_.bitwiseOR(_))
 
   /** Z-ordered clustered parquet layout: sort key = interleaved dims.
@@ -75,16 +70,12 @@ object Layout {
       .orderBy(col("z_bucket"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_zorder_events" -> layoutZorderEvents _,
-  )
-
   private val zTermsSql: String = (0 until 8).flatMap { k =>
     Seq(s"(((x >> $k) & 1) << ${2 * k})", s"(((y >> $k) & 1) << ${2 * k + 1})")
   }.mkString(" | ")
 
-  val oracleSql: Map[String, String] = Map(
-    "layout_zorder_events" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("layout_zorder_events", layoutZorderEvents _,
       s"""WITH e AS (
          |  SELECT user_id % 256 AS x, CAST(hour(ts) AS BIGINT) AS y
          |  FROM events),
@@ -92,6 +83,6 @@ object Layout {
          |SELECT z >> 6 AS z_bucket, count(*) AS n,
          |  min(x) AS min_ub, max(x) AS max_ub,
          |  min(y) AS min_hr, max(y) AS max_hr
-         |FROM z GROUP BY z_bucket ORDER BY z_bucket""".stripMargin,
+         |FROM z GROUP BY z_bucket ORDER BY z_bucket""".stripMargin),
   )
 }

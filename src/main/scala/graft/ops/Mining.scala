@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.Tables._
 
 /** Corpus-level text mining for training-data curation:
@@ -390,7 +391,8 @@ object Mining {
     * trajectory equality for 50 merges, far past the declared 10 — a
     * divergence anywhere would cascade into every later round's
     * counts). Crossover: below ~a few hundred merges either mode is
-    * fine; past that, always this one. */
+    * fine; past that, always this one. No route calls it yet: the
+    * declared query trains 10 merges, and MiningSpec is its caller. */
   def learnBpeMergesLocal(wordFreq: Seq[(String, Long)],
       rounds: Int): Seq[(Long, String, String, Long)] = {
     var seqs: Array[(Array[String], Long)] = wordFreq.iterator
@@ -695,19 +697,6 @@ object Mining {
       .orderBy(col("item_a"), col("item_b"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mining_assoc_rules" -> miningAssocRules _,
-    "text_bpe_merges" -> textBpeMerges _,
-    "text_bpe_encode" -> textBpeEncode _,
-    "text_nb_classifier" -> textNbClassifier _,
-    "text_nb_auc" -> textNbAuc _,
-    "text_nb_calibration" -> textNbCalibration _,
-    "text_repeated_passages" -> textRepeatedPassages _,
-    "text_dup_passage_ratio" -> textDupPassageRatio _,
-    "text_dsir_sample" -> textDsirSample _,
-    "text_winsorize" -> textWinsorize _,
-  )
-
   /** Shared oracle CTE: the 5-gram relation (DuckDB list-comprehension
     * spelling of the same slice/join). */
   private val gramsSql =
@@ -832,8 +821,8 @@ object Mining {
        |  FROM test te JOIN weights w ON w.bk = te.bk
        |  GROUP BY 1, 2, 3)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "mining_assoc_rules" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("mining_assoc_rules", miningAssocRules _,
       s"""WITH nd AS (SELECT count(*) AS n_docs FROM documents),
          |di AS (
          |  SELECT DISTINCT doc_id, item FROM (
@@ -854,10 +843,10 @@ object Mining {
          |  CAST(n_ab AS DOUBLE) / CAST(n_a AS DOUBLE) AS confidence,
          |  CAST((SELECT n_docs FROM nd) AS DOUBLE) * CAST(n_ab AS DOUBLE) /
          |    (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) AS lift
-         |FROM pairs ORDER BY item_a, item_b""".stripMargin,
-    "text_bpe_merges" -> bpeOracleSql,
-    "text_bpe_encode" -> bpeEncodeSql,
-    "text_nb_classifier" ->
+         |FROM pairs ORDER BY item_a, item_b""".stripMargin),
+    Declared("text_bpe_merges", textBpeMerges _, bpeOracleSql),
+    Declared("text_bpe_encode", textBpeEncode _, bpeEncodeSql),
+    Declared("text_nb_classifier", textNbClassifier _,
       s"""WITH $nbScoredCtes,
          |pred AS (
          |  SELECT doc_id, lang AS actual, cls AS predicted,
@@ -866,20 +855,8 @@ object Mining {
          |  FROM scored)
          |SELECT actual, predicted, count(*) AS n
          |FROM pred WHERE rn = 1
-         |GROUP BY 1, 2 ORDER BY actual, predicted""".stripMargin,
-    "text_nb_calibration" ->
-      s"""WITH $nbScoredCtes,
-         |pos AS (SELECT min(cls) AS pos_cls FROM scored),
-         |sc AS (SELECT CASE WHEN lang = cls THEN 1 ELSE 0 END AS is_pos, score
-         |       FROM scored, pos WHERE cls = pos.pos_cls),
-         |rng AS (SELECT min(score) AS lo, max(score) AS hi FROM sc)
-         |SELECT ((score - rng.lo) * 10) // (rng.hi - rng.lo + 1) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(is_pos) AS BIGINT) AS n_pos,
-         |  min(score) AS min_score, max(score) AS max_score,
-         |  CAST(sum(is_pos) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
-         |FROM sc, rng GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "text_nb_auc" ->
+         |GROUP BY 1, 2 ORDER BY actual, predicted""".stripMargin),
+    Declared("text_nb_auc", textNbAuc _,
       s"""WITH $nbScoredCtes,
          |pos AS (SELECT min(cls) AS pos_cls FROM scored),
          |sc AS (SELECT pos.pos_cls,
@@ -900,14 +877,26 @@ object Mining {
          |  CAST(sum(np * (2 * cum_nn + nn)) AS BIGINT) AS u2,
          |  CAST(sum(np * (2 * cum_nn + nn)) AS DOUBLE) /
          |    (2.0 * CAST(sum(np) * sum(nn) AS DOUBLE)) AS auc
-         |FROM cum GROUP BY pos_cls""".stripMargin,
-    "text_repeated_passages" ->
+         |FROM cum GROUP BY pos_cls""".stripMargin),
+    Declared("text_nb_calibration", textNbCalibration _,
+      s"""WITH $nbScoredCtes,
+         |pos AS (SELECT min(cls) AS pos_cls FROM scored),
+         |sc AS (SELECT CASE WHEN lang = cls THEN 1 ELSE 0 END AS is_pos, score
+         |       FROM scored, pos WHERE cls = pos.pos_cls),
+         |rng AS (SELECT min(score) AS lo, max(score) AS hi FROM sc)
+         |SELECT ((score - rng.lo) * 10) // (rng.hi - rng.lo + 1) AS bucket,
+         |  CAST(count(*) AS BIGINT) AS n,
+         |  CAST(sum(is_pos) AS BIGINT) AS n_pos,
+         |  min(score) AS min_score, max(score) AS max_score,
+         |  CAST(sum(is_pos) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
+         |FROM sc, rng GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Declared("text_repeated_passages", textRepeatedPassages _,
       s"""WITH $gramsSql
          |SELECT gram, CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
          |  count(*) AS n
          |FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-         |ORDER BY df DESC, n DESC, gram LIMIT 50""".stripMargin,
-    "text_dup_passage_ratio" ->
+         |ORDER BY df DESC, n DESC, gram LIMIT 50""".stripMargin),
+    Declared("text_dup_passage_ratio", textDupPassageRatio _,
       s"""WITH $gramsSql,
          |df AS (SELECT gram, count(DISTINCT doc_id) AS gram_df
          |       FROM g GROUP BY gram)
@@ -918,8 +907,8 @@ object Mining {
          |  CAST(sum(CASE WHEN df.gram_df >= 2 THEN 1 ELSE 0 END) AS DOUBLE) /
          |    CAST(count(*) AS DOUBLE) AS dup_ratio
          |FROM g JOIN df USING (gram)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_dsir_sample" ->
+         |GROUP BY lang ORDER BY lang""".stripMargin),
+    Declared("text_dsir_sample", textDsirSample _,
       s"""WITH tok AS (
          |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
          |  FROM documents),
@@ -943,8 +932,8 @@ object Mining {
          |SELECT b.doc_id, any_value(b.lang) AS lang,
          |  CAST(sum(w.w) // count(*) AS BIGINT) AS score
          |FROM b JOIN weights w USING (bk)
-         |GROUP BY b.doc_id ORDER BY score DESC, doc_id LIMIT 100""".stripMargin,
-    "text_winsorize" ->
+         |GROUP BY b.doc_id ORDER BY score DESC, doc_id LIMIT 100""".stripMargin),
+    Declared("text_winsorize", textWinsorize _,
       """WITH d AS (SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
          |           FROM documents),
          |r AS (SELECT lang, n_chars,
@@ -967,6 +956,6 @@ object Mining {
          |    AS n_above,
          |  CAST(sum(greatest(least(n_chars, hi), lo)) AS BIGINT) AS win_sum
          |FROM d JOIN b USING (lang)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
+         |GROUP BY lang ORDER BY lang""".stripMargin),
   )
 }

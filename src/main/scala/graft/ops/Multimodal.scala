@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Declared
 import graft.Tables._
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with
@@ -208,9 +209,8 @@ object Multimodal {
     * its scaladoc) — bytes never shuffle, only (chunk_md5, doc_id)
     * pairs enter the aggregate. r12 swapped this in for the
     * md5-per-offset stand-in, which measured ~6× the fixed-offset
-    * chunker's cost at sf0.1; [[cdcChunksDeclarative]] keeps the
-    * expression-tree formulation as the in-engine equivalence witness
-    * (it mirrors the oracle SQL 1:1). At 100 TB add a min/max
+    * chunker's cost at sf0.1; MultimodalSpec pins it against the
+    * expression-tree formulation that mirrors the oracle SQL 1:1. At 100 TB add a min/max
     * chunk-size clamp against pathological boundary densities. */
   private[graft] def cdcChunksOf(media: DataFrame): DataFrame =
     media
@@ -219,37 +219,6 @@ object Multimodal {
       .select(col("doc_id"),
         explode(graft.functions.VectorExpressions.contentChunks(col("media")))
           .as("chunk_md5"))
-
-  /** The declarative per-offset twin of [[cdcChunksOf]]: the same
-    * polynomial window-hash boundary rule spelled as array expressions
-    * (a materialized byte array + an 8-term sum per offset — the shape
-    * the DuckDB oracle replays). MultimodalSpec pins bit-for-bit
-    * equality with the compiled rolling-hash expression; not used by
-    * any declared query. */
-  private[graft] def cdcChunksDeclarative(media: DataFrame): DataFrame = {
-    val win = 8
-    // 257^(7-j) mod 1000003 for j = 0..7
-    val cs = Seq(709659L, 107820L, 529604L, 457315L, 974545L, 66049L, 257L, 1L)
-    val sumExpr = cs.zipWithIndex
-      .map { case (c, j) => s"element_at(B, i - ${7 - j}) * ${c}L" }
-      .mkString(" + ")
-    media
-      .select(col("doc_id"), lower(hex(col("media"))).as("hx"))
-      .withColumn("nb", (length(col("hx")) / 2).cast("int"))
-      .filter(col("nb") >= win)
-      .withColumn("B", expr(
-        "transform(sequence(0, nb - 1), t -> CAST(conv(substring(hx, t * 2 + 1, 2), 16, 10) AS BIGINT))"))
-      .withColumn("bounds", expr(
-        s"filter(sequence($win, nb), i -> (($sumExpr) % 1000003L) % 16 = 0)"))
-      .withColumn("starts", expr("concat(array(0), bounds)"))
-      .withColumn("ends", expr("concat(bounds, array(nb))"))
-      .select(col("doc_id"), explode(expr(
-        """filter(zip_with(starts, ends,
-          |              (st, en) -> IF(en > st,
-          |                             md5(substring(hx, st * 2 + 1, (en - st) * 2)),
-          |                             NULL)),
-          |       x -> x IS NOT NULL)""".stripMargin)).as("chunk_md5"))
-  }
 
   /** The PRODUCTION CAS dedup: [[casDedup]] over content-defined chunks
     * — the declared query an edited-media corpus needs (see
@@ -267,7 +236,7 @@ object Multimodal {
     * chunk fingerprints (this module's standing deterministic stand-in,
     * same slicing as [[mediaChunkDedup]]) — the signature construction,
     * the pigeonhole-banded candidate join, and the exact Hamming verify
-    * are `Dedup`'s SimHash machinery verbatim (`simhashFromFeatures` /
+    * are `Dedup`'s SimHash machinery verbatim (`simhashFromFeatureArray` /
     * `simhashBandedPairs`), which is the point: media near-dup rides the
     * text stack's plumbing with only the feature extractor swapped.
     *
@@ -371,18 +340,6 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_clip_pairs" -> mediaClipPairs _,
-    "multimodal_meta" -> mediaMeta _,
-    "multimodal_decode_stats" -> mediaDecodeStats _,
-    "multimodal_resize_stats" -> mediaResizeStats _,
-    "multimodal_nearest_neighbor" -> mediaNearestNeighbor _,
-    "multimodal_chunk_dedup" -> mediaChunkDedup _,
-    "multimodal_cdc_chunks" -> mediaCdcChunks _,
-    "multimodal_phash_dedup" -> mediaPhashDedup _,
-    "multimodal_phash_dedup_128" -> mediaPhashDedup128 _,
-  )
-
   private val PhashFeatureCtes =
     """m0 AS (
       |  SELECT doc_id, lower(hex(text)) AS hx FROM documents
@@ -434,22 +391,8 @@ object Multimodal {
       |      AS m
       |  FROM cdcsp)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    // brute-force per-bit-majority + all-pairs hamming over the chunk
-    // features (Dedup's shared oracle with the feature CTE swapped)
-    "multimodal_phash_dedup" -> Dedup.simhashOracleFor(PhashFeatureCtes),
-    // 128-bit sibling over the CDC chunk features: brute-force all-pairs
-    // 128-bit hamming — the banded join is exact-recall at <= 12 by
-    // pigeonhole, so the brute force IS the oracle
-    "multimodal_phash_dedup_128" -> Dedup.simhash128OracleFor(CdcFeatureCtes),
-    "multimodal_cdc_chunks" ->
-      s"""WITH $CdcFeatureCtes
-         |SELECT m AS chunk_md5, count(*) AS n_copies,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |  min(doc_id) AS first_doc
-         |FROM f GROUP BY 1 HAVING count(*) > 1
-         |ORDER BY chunk_md5""".stripMargin,
-    "multimodal_clip_pairs" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("multimodal_clip_pairs", mediaClipPairs _,
       """WITH caps AS (
         |  SELECT doc_id,
         |    array_to_string(string_split(text, ' ')[1:8], ' ') AS caption
@@ -471,22 +414,8 @@ object Multimodal {
         |FROM neg g
         |JOIN caps p ON p.doc_id = g.doc_id
         |JOIN caps q ON q.doc_id = g.neg_doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-    "multimodal_chunk_dedup" ->
-      """WITH m AS (
-        |  SELECT doc_id, lower(hex(text)) AS hx FROM documents
-        |  WHERE len(text) > 0),
-        |c AS (
-        |  SELECT doc_id, unnest([md5(substr(hx, i * 512 + 1, 512))
-        |                         FOR i IN range(0, (len(hx) + 511) // 512)])
-        |    AS chunk_md5
-        |  FROM m)
-        |SELECT chunk_md5, count(*) AS n_copies,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  min(doc_id) AS first_doc
-        |FROM c GROUP BY chunk_md5 HAVING count(*) > 1
-        |ORDER BY chunk_md5""".stripMargin,
-    "multimodal_meta" ->
+        |ORDER BY g.doc_id""".stripMargin),
+    Declared("multimodal_meta", mediaMeta _,
       """WITH m AS (
         |  SELECT doc_id,
         |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
@@ -501,8 +430,40 @@ object Multimodal {
         |  (n_bytes + 255) // 256 AS n_frames,
         |  array_to_string([i * 256 FOR i IN range(0, CAST(least((n_bytes + 255) // 256 - 1, 3) AS INT) + 1)], ',')
         |    AS sampled_offsets
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "multimodal_nearest_neighbor" ->
+        |FROM b ORDER BY doc_id""".stripMargin),
+    Declared("multimodal_decode_stats", mediaDecodeStats _,
+      """WITH d AS (
+        |  SELECT doc_id,
+        |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
+        |    octet_length(encode(text)) AS n_bytes
+        |  FROM documents)
+        |SELECT media_type, count(*) AS n_media,
+        |  CAST(sum(16 + (n_bytes % 113)) AS BIGINT) AS sum_width,
+        |  CAST(sum(16 + ((n_bytes // 7) % 97)) AS BIGINT) AS sum_height,
+        |  CAST(max(CASE WHEN media_type = 'audio' THEN 1 ELSE 3 END) AS BIGINT) AS max_channels
+        |FROM d GROUP BY media_type ORDER BY media_type""".stripMargin),
+    Declared("multimodal_resize_stats", mediaResizeStats _,
+      """WITH d AS (
+        |  SELECT doc_id,
+        |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
+        |    octet_length(encode(text)) AS n_bytes
+        |  FROM documents),
+        |wh AS (
+        |  SELECT media_type,
+        |    16 + (n_bytes % 113) AS w,
+        |    16 + ((n_bytes // 7) % 97) AS h
+        |  FROM d),
+        |fit AS (
+        |  SELECT media_type,
+        |    greatest((w * 224) // greatest(w, h), 1) AS fit_w,
+        |    greatest((h * 224) // greatest(w, h), 1) AS fit_h
+        |  FROM wh)
+        |SELECT media_type, count(*) AS n_media,
+        |  CAST(sum(fit_w) AS BIGINT) AS sum_fit_w,
+        |  CAST(sum(fit_h) AS BIGINT) AS sum_fit_h,
+        |  CAST(max(greatest(fit_w, fit_h)) AS BIGINT) AS max_fit_side
+        |FROM fit GROUP BY media_type ORDER BY media_type""".stripMargin),
+    Declared("multimodal_nearest_neighbor", mediaNearestNeighbor _,
       """WITH f AS (
         |  SELECT doc_id,
         |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
@@ -527,38 +488,35 @@ object Multimodal {
         |      ORDER BY l1_dist ASC, cand_id ASC) AS rn
         |  FROM pairs)
         |SELECT query_id, media_type, cand_id, l1_dist
-        |FROM ranked WHERE rn = 1 ORDER BY query_id""".stripMargin,
-    "multimodal_resize_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |    octet_length(encode(text)) AS n_bytes
-        |  FROM documents),
-        |wh AS (
-        |  SELECT media_type,
-        |    16 + (n_bytes % 113) AS w,
-        |    16 + ((n_bytes // 7) % 97) AS h
-        |  FROM d),
-        |fit AS (
-        |  SELECT media_type,
-        |    greatest((w * 224) // greatest(w, h), 1) AS fit_w,
-        |    greatest((h * 224) // greatest(w, h), 1) AS fit_h
-        |  FROM wh)
-        |SELECT media_type, count(*) AS n_media,
-        |  CAST(sum(fit_w) AS BIGINT) AS sum_fit_w,
-        |  CAST(sum(fit_h) AS BIGINT) AS sum_fit_h,
-        |  CAST(max(greatest(fit_w, fit_h)) AS BIGINT) AS max_fit_side
-        |FROM fit GROUP BY media_type ORDER BY media_type""".stripMargin,
-    "multimodal_decode_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |    octet_length(encode(text)) AS n_bytes
-        |  FROM documents)
-        |SELECT media_type, count(*) AS n_media,
-        |  CAST(sum(16 + (n_bytes % 113)) AS BIGINT) AS sum_width,
-        |  CAST(sum(16 + ((n_bytes // 7) % 97)) AS BIGINT) AS sum_height,
-        |  CAST(max(CASE WHEN media_type = 'audio' THEN 1 ELSE 3 END) AS BIGINT) AS max_channels
-        |FROM d GROUP BY media_type ORDER BY media_type""".stripMargin,
+        |FROM ranked WHERE rn = 1 ORDER BY query_id""".stripMargin),
+    Declared("multimodal_chunk_dedup", mediaChunkDedup _,
+      """WITH m AS (
+        |  SELECT doc_id, lower(hex(text)) AS hx FROM documents
+        |  WHERE len(text) > 0),
+        |c AS (
+        |  SELECT doc_id, unnest([md5(substr(hx, i * 512 + 1, 512))
+        |                         FOR i IN range(0, (len(hx) + 511) // 512)])
+        |    AS chunk_md5
+        |  FROM m)
+        |SELECT chunk_md5, count(*) AS n_copies,
+        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+        |  min(doc_id) AS first_doc
+        |FROM c GROUP BY chunk_md5 HAVING count(*) > 1
+        |ORDER BY chunk_md5""".stripMargin),
+    Declared("multimodal_cdc_chunks", mediaCdcChunks _,
+      s"""WITH $CdcFeatureCtes
+         |SELECT m AS chunk_md5, count(*) AS n_copies,
+         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         |  min(doc_id) AS first_doc
+         |FROM f GROUP BY 1 HAVING count(*) > 1
+         |ORDER BY chunk_md5""".stripMargin),
+    // brute-force per-bit-majority + all-pairs hamming over the chunk
+    // features (Dedup's shared oracle with the feature CTE swapped)
+    Declared("multimodal_phash_dedup", mediaPhashDedup _, Dedup.simhashOracleFor(PhashFeatureCtes)),
+    // 128-bit sibling over the CDC chunk features: brute-force all-pairs
+    // 128-bit hamming — the banded join is exact-recall at <= 12 by
+    // pigeonhole, so the brute force IS the oracle
+    Declared("multimodal_phash_dedup_128", mediaPhashDedup128 _,
+      Dedup.simhash128OracleFor(CdcFeatureCtes)),
   )
 }

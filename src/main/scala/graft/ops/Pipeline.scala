@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.Tables._
 
 /** End-to-end training-data pipeline composition — the point of the
@@ -406,27 +407,36 @@ object Pipeline {
       .orderBy(col("stage"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_span_cut" -> pipelineSpanCut _,
-    "pipeline_curation_funnel" -> pipelineCurationFunnel _,
-    "pipeline_worker_shards" -> pipelineWorkerShards _,
-    "pipeline_epoch_shuffle" -> pipelineEpochShuffle _,
-    "pipeline_epoch_global_index" -> pipelineEpochGlobalIndex _,
-    "pipeline_negative_samples" -> pipelineNegativeSamples _,
-    "pipeline_training_mix" -> trainingMix _,
-    "pipeline_budget_mix" -> pipelineBudgetMix _,
-    "pipeline_upsample_mix" -> pipelineUpsampleMix _,
-    "rollup_reaggregate" -> rollupReaggregate _,
-    "dq_check_orders" -> dqCheckOrders _,
-  )
-
   // near-dup pairs: same brute-force formulation as Dedup.jaccardPairsSql
   // (the LSH result provably equals it); only the loser ids are needed
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
+    // span cut: shared span CTEs -> covered positions per doc -> indexed
+    // list_filter (DuckDB lambda index i is 1-based; positions 0-based)
+    Declared("pipeline_span_cut", pipelineSpanCut _,
+      s"""WITH ${Dedup.substringSpanCtes},
+         |cov AS (
+         |  SELECT doc_id, list(pos) AS cov FROM (
+         |    SELECT doc_id, unnest(range(span_start, span_end + 1)) AS pos
+         |    FROM spans) GROUP BY doc_id),
+         |cut AS (
+         |  SELECT d.doc_id,
+         |    string_split(d.text, ' ') AS w,
+         |    coalesce(cov.cov, []::BIGINT[]) AS cov
+         |  FROM documents d LEFT JOIN cov USING (doc_id)),
+         |kept AS (
+         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens_before,
+         |    list_filter(w, (t, i) -> NOT list_contains(cov, CAST(i - 1 AS BIGINT)))
+         |      AS k
+         |  FROM cut)
+         |SELECT doc_id, n_tokens_before,
+         |  CAST(len(k) AS BIGINT) AS n_tokens_after,
+         |  n_tokens_before - CAST(len(k) AS BIGINT) AS n_tokens_cut,
+         |  coalesce(array_to_string(k, ' '), '') AS text_clean
+         |FROM kept ORDER BY doc_id""".stripMargin),
     // funnel: gopher-keep CTEs (g-prefixed; the rule arithmetic mirrors
     // the text_gopher_rules oracle - drift shows red at the driver),
     // exact-dedup keepers among survivors, spans recomputed on keepers
-    "pipeline_curation_funnel" ->
+    Declared("pipeline_curation_funnel", pipelineCurationFunnel _,
       s"""WITH gw AS MATERIALIZED (
          |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n_chars_raw,
          |         string_split(text, ' ') AS toks FROM documents),
@@ -497,33 +507,10 @@ object Pipeline {
          |  SELECT '3_span_cut', (SELECT count(*) FROM keepers),
          |    (SELECT CAST(coalesce(sum(n_toks), 0) AS BIGINT) FROM keepers) -
          |      (SELECT cut FROM cutmass)
-         |) ORDER BY stage""".stripMargin,
-    // span cut: shared span CTEs -> covered positions per doc -> indexed
-    // list_filter (DuckDB lambda index i is 1-based; positions 0-based)
-    "pipeline_span_cut" ->
-      s"""WITH ${Dedup.substringSpanCtes},
-         |cov AS (
-         |  SELECT doc_id, list(pos) AS cov FROM (
-         |    SELECT doc_id, unnest(range(span_start, span_end + 1)) AS pos
-         |    FROM spans) GROUP BY doc_id),
-         |cut AS (
-         |  SELECT d.doc_id,
-         |    string_split(d.text, ' ') AS w,
-         |    coalesce(cov.cov, []::BIGINT[]) AS cov
-         |  FROM documents d LEFT JOIN cov USING (doc_id)),
-         |kept AS (
-         |  SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens_before,
-         |    list_filter(w, (t, i) -> NOT list_contains(cov, CAST(i - 1 AS BIGINT)))
-         |      AS k
-         |  FROM cut)
-         |SELECT doc_id, n_tokens_before,
-         |  CAST(len(k) AS BIGINT) AS n_tokens_after,
-         |  n_tokens_before - CAST(len(k) AS BIGINT) AS n_tokens_cut,
-         |  coalesce(array_to_string(k, ' '), '') AS text_clean
-         |FROM kept ORDER BY doc_id""".stripMargin,
+         |) ORDER BY stage""".stripMargin),
     // worker shards: the naive epoch enumeration as a CTE, shard by
     // exact integer division, count/bounds/token-mass per shard
-    "pipeline_worker_shards" ->
+    Declared("pipeline_worker_shards", pipelineWorkerShards _,
       """WITH idx AS (
         |  SELECT doc_id,
         |    CAST(row_number() OVER (
@@ -539,16 +526,8 @@ object Pipeline {
         |  max(idx.epoch_pos) AS pos_hi,
         |  CAST(sum(t.n_toks) AS BIGINT) AS n_tokens
         |FROM idx JOIN t ON t.doc_id = idx.doc_id CROSS JOIN n
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the contract the two-phase enumeration must reproduce exactly:
-    // the naive global row_number over the seeded key
-    "pipeline_epoch_global_index" ->
-      """SELECT doc_id,
-        |  CAST(row_number() OVER (
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR) || ':1'), doc_id) - 1
-        |    AS BIGINT) AS epoch_pos
-        |FROM documents ORDER BY epoch_pos""".stripMargin,
-    "pipeline_epoch_shuffle" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Declared("pipeline_epoch_shuffle", pipelineEpochShuffle _,
       """WITH k AS (
         |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':1') AS key
         |  FROM documents),
@@ -559,8 +538,16 @@ object Pipeline {
         |SELECT doc_id, shard,
         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY key, doc_id)
         |    AS BIGINT) AS pos
-        |FROM sh ORDER BY shard, pos""".stripMargin,
-    "pipeline_negative_samples" ->
+        |FROM sh ORDER BY shard, pos""".stripMargin),
+    // the contract the two-phase enumeration must reproduce exactly:
+    // the naive global row_number over the seeded key
+    Declared("pipeline_epoch_global_index", pipelineEpochGlobalIndex _,
+      """SELECT doc_id,
+        |  CAST(row_number() OVER (
+        |    ORDER BY md5(CAST(doc_id AS VARCHAR) || ':1'), doc_id) - 1
+        |    AS BIGINT) AS epoch_pos
+        |FROM documents ORDER BY epoch_pos""".stripMargin),
+    Declared("pipeline_negative_samples", pipelineNegativeSamples _,
       """WITH n AS (SELECT count(*) AS n_docs FROM documents),
         |slots AS (SELECT unnest(range(0, 4)) AS slot),
         |c AS (
@@ -571,61 +558,32 @@ object Pipeline {
         |SELECT anchor_id, slot, neg_id FROM c
         |WHERE neg_id <> anchor_id
         |  AND neg_id IN (SELECT doc_id FROM documents)
-        |ORDER BY anchor_id, slot""".stripMargin,
-    "pipeline_upsample_mix" ->
-      """WITH docs AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |per_lang AS (SELECT lang, count(*) AS n_raw FROM docs GROUP BY lang),
-        |f AS (
-        |  SELECT lang, n_raw,
-        |    greatest(1, least(4, (SELECT max(n_raw) FROM per_lang) // n_raw))
-        |      AS factor
-        |  FROM per_lang),
-        |up AS (
-        |  SELECT d.lang, f.n_raw, f.factor, d.doc_id, d.n_tokens,
-        |    unnest(range(1, f.factor + 1)) AS copy
-        |  FROM docs d JOIN f ON d.lang = f.lang)
-        |SELECT lang, n_raw, CAST(factor AS BIGINT) AS factor,
-        |  count(*) AS n_upsampled,
-        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_upsampled,
-        |  CAST(sum(doc_id * copy) AS BIGINT) AS mix_checksum
-        |FROM up GROUP BY lang, n_raw, factor ORDER BY lang""".stripMargin,
-    "rollup_reaggregate" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS n,
-        |    CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders GROUP BY 1)
-        |SELECT CAST(year(d) AS BIGINT) AS y, CAST(month(d) AS BIGINT) AS m,
-        |  CAST(sum(n) AS BIGINT) AS n_orders,
-        |  CAST(sum(cents) AS BIGINT) AS total_cents,
-        |  CAST(count(*) AS BIGINT) AS n_days
-        |FROM daily GROUP BY y, m ORDER BY y, m""".stripMargin,
-    "dq_check_orders" ->
-      """SELECT 'null_custkey' AS rule,
-        |  CAST(count(*) FILTER (o_custkey IS NULL) AS BIGINT) AS n_violations,
-        |  count(*) AS n_checked FROM orders
-        |UNION ALL
-        |SELECT 'nonpositive_price',
-        |  CAST(count(*) FILTER (o_totalprice <= 0) AS BIGINT), count(*) FROM orders
-        |UNION ALL
-        |SELECT 'orphan_custkey',
-        |  CAST(count(*) FILTER (c_custkey IS NULL) AS BIGINT), count(*)
-        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |UNION ALL
-        |SELECT 'future_orderdate',
-        |  CAST(count(*) FILTER (o_orderdate > TIMESTAMP '2001-12-31') AS BIGINT),
-        |  count(*) FROM orders
-        |UNION ALL
-        |SELECT 'discount_range',
-        |  CAST(count(*) FILTER (l_discount < 0 OR l_discount > 0.5) AS BIGINT),
-        |  count(*) FROM lineitem
-        |UNION ALL
-        |SELECT 'negative_acctbal',
-        |  CAST(count(*) FILTER (c_acctbal < 0) AS BIGINT), count(*) FROM customer
-        |ORDER BY rule""".stripMargin,
-    "pipeline_budget_mix" ->
+        |ORDER BY anchor_id, slot""".stripMargin),
+    Declared("pipeline_training_mix", trainingMix _,
+      """WITH sh AS (
+        |  SELECT doc_id, n_chars,
+        |    list_distinct([array_to_string(words[i:i+2], ' ')
+        |                   FOR i IN range(1, len(words) - 1)]) AS shingles
+        |  FROM (SELECT doc_id, n_chars, string_split(text, ' ') AS words FROM documents)
+        |  WHERE len(words) >= 3),
+        |losers AS (
+        |  SELECT DISTINCT b.doc_id AS doc_id
+        |  FROM sh a JOIN sh b
+        |    ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 100
+        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+        |        CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.5),
+        |quality AS (
+        |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, text
+        |  FROM documents
+        |  WHERE lang = 'en' AND len(string_split(text, ' ')) BETWEEN 20 AND 2000),
+        |exact AS (
+        |  SELECT min(doc_id) AS doc_id, CAST(min(n_tokens) AS BIGINT) AS n_tokens
+        |  FROM quality GROUP BY md5(text))
+        |SELECT doc_id, n_tokens FROM exact
+        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+        |  AND ((doc_id * 1103515245 + 12345) % 2147483647) % 100 < 50
+        |ORDER BY doc_id""".stripMargin),
+    Declared("pipeline_budget_mix", pipelineBudgetMix _,
       """WITH quality AS (
         |  SELECT doc_id, source, text,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -667,30 +625,59 @@ object Pipeline {
         |  CAST(k.tokens_kept AS DOUBLE) / CAST(b.budget_tokens AS DOUBLE)
         |    AS utilization
         |FROM budgets b JOIN kept k ON k.source = b.source
-        |ORDER BY b.source""".stripMargin,
-    "pipeline_training_mix" ->
-      """WITH sh AS (
-        |  SELECT doc_id, n_chars,
-        |    list_distinct([array_to_string(words[i:i+2], ' ')
-        |                   FOR i IN range(1, len(words) - 1)]) AS shingles
-        |  FROM (SELECT doc_id, n_chars, string_split(text, ' ') AS words FROM documents)
-        |  WHERE len(words) >= 3),
-        |losers AS (
-        |  SELECT DISTINCT b.doc_id AS doc_id
-        |  FROM sh a JOIN sh b
-        |    ON a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 100
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-        |        CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.5),
-        |quality AS (
-        |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, text
-        |  FROM documents
-        |  WHERE lang = 'en' AND len(string_split(text, ' ')) BETWEEN 20 AND 2000),
-        |exact AS (
-        |  SELECT min(doc_id) AS doc_id, CAST(min(n_tokens) AS BIGINT) AS n_tokens
-        |  FROM quality GROUP BY md5(text))
-        |SELECT doc_id, n_tokens FROM exact
-        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-        |  AND ((doc_id * 1103515245 + 12345) % 2147483647) % 100 < 50
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY b.source""".stripMargin),
+    Declared("pipeline_upsample_mix", pipelineUpsampleMix _,
+      """WITH docs AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |per_lang AS (SELECT lang, count(*) AS n_raw FROM docs GROUP BY lang),
+        |f AS (
+        |  SELECT lang, n_raw,
+        |    greatest(1, least(4, (SELECT max(n_raw) FROM per_lang) // n_raw))
+        |      AS factor
+        |  FROM per_lang),
+        |up AS (
+        |  SELECT d.lang, f.n_raw, f.factor, d.doc_id, d.n_tokens,
+        |    unnest(range(1, f.factor + 1)) AS copy
+        |  FROM docs d JOIN f ON d.lang = f.lang)
+        |SELECT lang, n_raw, CAST(factor AS BIGINT) AS factor,
+        |  count(*) AS n_upsampled,
+        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_upsampled,
+        |  CAST(sum(doc_id * copy) AS BIGINT) AS mix_checksum
+        |FROM up GROUP BY lang, n_raw, factor ORDER BY lang""".stripMargin),
+    Declared("rollup_reaggregate", rollupReaggregate _,
+      """WITH daily AS (
+        |  SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS n,
+        |    CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
+        |  FROM orders GROUP BY 1)
+        |SELECT CAST(year(d) AS BIGINT) AS y, CAST(month(d) AS BIGINT) AS m,
+        |  CAST(sum(n) AS BIGINT) AS n_orders,
+        |  CAST(sum(cents) AS BIGINT) AS total_cents,
+        |  CAST(count(*) AS BIGINT) AS n_days
+        |FROM daily GROUP BY y, m ORDER BY y, m""".stripMargin),
+    Declared("dq_check_orders", dqCheckOrders _,
+      """SELECT 'null_custkey' AS rule,
+        |  CAST(count(*) FILTER (o_custkey IS NULL) AS BIGINT) AS n_violations,
+        |  count(*) AS n_checked FROM orders
+        |UNION ALL
+        |SELECT 'nonpositive_price',
+        |  CAST(count(*) FILTER (o_totalprice <= 0) AS BIGINT), count(*) FROM orders
+        |UNION ALL
+        |SELECT 'orphan_custkey',
+        |  CAST(count(*) FILTER (c_custkey IS NULL) AS BIGINT), count(*)
+        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+        |UNION ALL
+        |SELECT 'future_orderdate',
+        |  CAST(count(*) FILTER (o_orderdate > TIMESTAMP '2001-12-31') AS BIGINT),
+        |  count(*) FROM orders
+        |UNION ALL
+        |SELECT 'discount_range',
+        |  CAST(count(*) FILTER (l_discount < 0 OR l_discount > 0.5) AS BIGINT),
+        |  count(*) FROM lineitem
+        |UNION ALL
+        |SELECT 'negative_acctbal',
+        |  CAST(count(*) FILTER (c_acctbal < 0) AS BIGINT), count(*) FROM customer
+        |ORDER BY rule""".stripMargin),
   )
 }

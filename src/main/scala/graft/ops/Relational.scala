@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Relational operator surface over the TPC-H-ish fixture tables:
@@ -494,50 +495,8 @@ object Relational {
         count(lit(1)).as("n_nations"))
       .orderBy(col("n_regionkey"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q19_disjunctive_revenue" -> q19DisjunctiveRevenue _,
-    "q22_idle_rich_customers" -> q22IdleRichCustomers _,
-    "join_null_safe" -> joinNullSafe _,
-    "agg_string_concat" -> aggStringConcat _,
-    "window_ranks_customers" -> windowRanksCustomers _,
-    "scalar_datediff_shipping" -> scalarDatediffShipping _,
-    "agg_stats_orders" -> aggStatsOrders _,
-    "q13_customer_distribution" -> q13CustomerDistribution _,
-    "q17_small_quantity_revenue" -> q17SmallQuantityRevenue _,
-    "pivot_events_daily" -> pivotEventsDaily _,
-    "q1_pricing_summary" -> q1PricingSummary _,
-    "q3_top_revenue" -> q3TopRevenue _,
-    "q4_order_priority" -> q4OrderPriority _,
-    "q5_nation_revenue" -> q5NationRevenue _,
-    "q6_revenue_filter" -> q6RevenueFilter _,
-    "join_anti_customers" -> joinAntiCustomers _,
-    "topk_customers_per_nation" -> topkCustomersPerNation _,
-    "window_running_total" -> windowRunningTotal _,
-    "window_lag_events" -> windowLagEvents _,
-    "window_range_frame" -> windowRangeFrame _,
-    "rollup_lineitem" -> rollupLineitem _,
-    "grouping_sets_orders" -> groupingSetsOrders _,
-    "array_order_years" -> arrayOrderYears _,
-    "distinct_parts_per_flag" -> distinctPartsPerFlag _,
-    "set_intersect_customers" -> setIntersectCustomers _,
-    "set_except_customers" -> setExceptCustomers _,
-    "scalar_string_part" -> scalarStringPart _,
-    "scalar_date_orders" -> scalarDateOrders _,
-    "json_props_events" -> jsonPropsEvents _,
-    "json_parse_events" -> jsonParseEvents _,
-    "json_variant_events" -> jsonVariantEvents _,
-    "agg_approx_orders" -> aggApproxOrders _, // self-checking tolerance verdicts
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    // the sketch estimates themselves are engine-specific; the oracle
-    // recomputes the exact columns and asserts every verdict is true
-    "agg_approx_orders" ->
-      """SELECT o_orderstatus, count(*) AS n_rows,
-        |  count(DISTINCT o_custkey) AS exact_custs,
-        |  true AS custs_ok, true AS p50_ok, true AS p95_ok
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_disjunctive_revenue" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q19_disjunctive_revenue", q19DisjunctiveRevenue _,
       """SELECT CAST(sum(CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
         |         AS revenue_cents,
         |       count(*) AS n_rows
@@ -545,28 +504,28 @@ object Relational {
         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
         |       AND l_quantity BETWEEN 1 AND 20)
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-        |       AND l_quantity BETWEEN 10 AND 40)""".stripMargin,
-    "q22_idle_rich_customers" ->
+        |       AND l_quantity BETWEEN 10 AND 40)""".stripMargin),
+    Declared("q22_idle_rich_customers", q22IdleRichCustomers _,
       """SELECT c_mktsegment, count(*) AS n_customers,
         |  CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) AS BIGINT) AS total_bal_cents
         |FROM customer
         |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND year(o_orderdate) = 1995)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "join_null_safe" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Declared("join_null_safe", joinNullSafe _,
       """WITH o AS (SELECT nullif(o_orderpriority, '1-URGENT') AS k, o_totalprice FROM orders),
         |pri AS (SELECT DISTINCT k, 'grp:' || coalesce(k, 'URGENT') AS rank_label FROM o)
         |SELECT rank_label, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS total_cents
         |FROM o JOIN pri ON o.k IS NOT DISTINCT FROM pri.k
-        |GROUP BY rank_label ORDER BY rank_label""".stripMargin,
-    "agg_string_concat" ->
+        |GROUP BY rank_label ORDER BY rank_label""".stripMargin),
+    Declared("agg_string_concat", aggStringConcat _,
       """SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
         |  count(*) AS n_nations
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "window_ranks_customers" ->
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Declared("window_ranks_customers", windowRanksCustomers _,
       """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey, c_custkey,
         |  CAST(rank() OVER w AS BIGINT) AS rnk,
         |  CAST(dense_rank() OVER w AS BIGINT) AS drnk,
@@ -574,8 +533,8 @@ object Relational {
         |  cume_dist() OVER w AS cdist
         |FROM customer
         |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC)
-        |ORDER BY c_nationkey, rnk""".stripMargin,
-    "scalar_datediff_shipping" ->
+        |ORDER BY c_nationkey, rnk""".stripMargin),
+    Declared("scalar_datediff_shipping", scalarDatediffShipping _,
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(sum(datediff('day', o_orderdate, l_shipdate)) AS BIGINT) AS sum_delay_days,
         |  count(*) AS n_lines,
@@ -583,8 +542,8 @@ object Relational {
         |  CAST(sum(datediff('day', o_orderdate, l_shipdate)) AS DOUBLE) / CAST(count(*) AS DOUBLE)
         |    AS avg_delay_days
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "agg_stats_orders" ->
+        |GROUP BY 1 ORDER BY o_year""".stripMargin),
+    Declared("agg_stats_orders", aggStatsOrders _,
       """SELECT o_orderstatus,
         |  quantile_cont(o_totalprice, 0.5) AS median_price,
         |  quantile_cont(o_totalprice, 0.95) AS p95_price,
@@ -592,31 +551,31 @@ object Relational {
         |  max(o_totalprice) AS max_price,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS sum_cents,
         |  count(*) AS n_orders
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q13_customer_distribution" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Declared("q13_customer_distribution", q13CustomerDistribution _,
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT OUTER JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey) t
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q17_small_quantity_revenue" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Declared("q17_small_quantity_revenue", q17SmallQuantityRevenue _,
       """SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
         |         AS sum_price_cents,
         |       count(*) AS n_rows
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#1'
         |  AND l_quantity < (SELECT 0.5 * avg(l_quantity) FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin,
-    "pivot_events_daily" ->
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
+    Declared("pivot_events_daily", pivotEventsDaily _,
       """SELECT epoch_us(ts) // 86400000000 AS day_bucket,
         |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS click,
         |  CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS view,
         |  CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS purchase,
         |  CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS signup,
         |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS error
-        |FROM events GROUP BY 1 ORDER BY day_bucket""".stripMargin,
-    "q1_pricing_summary" ->
+        |FROM events GROUP BY 1 ORDER BY day_bucket""".stripMargin),
+    Declared("q1_pricing_summary", q1PricingSummary _,
       """SELECT l_returnflag, l_linestatus,
         |  sum(l_quantity) AS sum_qty,
         |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
@@ -626,8 +585,8 @@ object Relational {
         |  count(*) AS n_rows
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_top_revenue" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Declared("q3_top_revenue", q3TopRevenue _,
       """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority,
         |  CAST(sum(CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_cents
         |FROM lineitem
@@ -638,14 +597,14 @@ object Relational {
         |  AND l_shipdate > TIMESTAMP '1996-07-01'
         |GROUP BY 1, 2, 3
         |ORDER BY revenue_cents DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-    "q4_order_priority" ->
+        |LIMIT 10""".stripMargin),
+    Declared("q4_order_priority", q4OrderPriority _,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
         |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q5_nation_revenue" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Declared("q5_nation_revenue", q5NationRevenue _,
       """SELECT n_name,
         |  CAST(sum(CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT) AS revenue_cents
         |FROM lineitem
@@ -656,37 +615,37 @@ object Relational {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue_cents DESC, n_name""".stripMargin,
-    "q6_revenue_filter" ->
+        |GROUP BY n_name ORDER BY revenue_cents DESC, n_name""".stripMargin),
+    Declared("q6_revenue_filter", q6RevenueFilter _,
       """SELECT CAST(sum(CAST(round(l_extendedprice*l_discount*100) AS BIGINT)) AS BIGINT) AS revenue_cents,
         |  count(*) AS n_rows
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "join_anti_customers" ->
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+    Declared("join_anti_customers", joinAntiCustomers _,
       """SELECT c_mktsegment, count(*) AS n_customers
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "topk_customers_per_nation" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Declared("topk_customers_per_nation", topkCustomersPerNation _,
       """SELECT n_name, rn, c_custkey, c_acctbal FROM (
         |  SELECT c_nationkey, c_custkey, c_acctbal,
         |    row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
         |  FROM customer) t
         |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE rn <= 3 ORDER BY n_name, rn""".stripMargin,
-    "window_running_total" ->
+        |WHERE rn <= 3 ORDER BY n_name, rn""".stripMargin),
+    Declared("window_running_total", windowRunningTotal _,
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT))
         |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_cents
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "window_lag_events" ->
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Declared("window_lag_events", windowLagEvents _,
       """SELECT event_id, user_id, value,
         |  lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_value,
         |  lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS next_type
-        |FROM events ORDER BY event_id""".stripMargin,
-    "window_range_frame" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Declared("window_range_frame", windowRangeFrame _,
       """SELECT event_id, user_id, ts_sec,
         |  CAST(sum(vc) OVER w AS BIGINT) AS hour_cents,
         |  count(*) OVER w AS hour_events
@@ -694,27 +653,15 @@ object Relational {
         |             CAST(round(value*100) AS BIGINT) AS vc FROM events) t
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
         |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "rollup_lineitem" ->
+        |ORDER BY event_id""".stripMargin),
+    Declared("rollup_lineitem", rollupLineitem _,
       """SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
         |  coalesce(l_linestatus, 'ALL') AS l_linestatus,
         |  count(*) AS n_rows, sum(l_quantity) AS sum_qty,
         |  CAST(GROUPING(l_returnflag)*2 + GROUPING(l_linestatus) AS BIGINT) AS gid
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "array_order_years" ->
-      """WITH y AS (
-        |  SELECT o_custkey,
-        |    list_sort(list_distinct(list(CAST(year(o_orderdate) AS BIGINT)))) AS years
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT o_custkey,
-        |  array_to_string(years, ',') AS years_csv,
-        |  CAST(len(years) AS BIGINT) AS n_years,
-        |  list_contains(years, 1995) AS has_1995,
-        |  years[1] AS first_year,
-        |  years[-1] AS last_year
-        |FROM y ORDER BY o_custkey""".stripMargin,
-    "grouping_sets_orders" ->
+        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin),
+    Declared("grouping_sets_orders", groupingSetsOrders _,
       """SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
         |       coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
         |       count(*) AS n_orders,
@@ -725,44 +672,56 @@ object Relational {
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
         |                        (o_orderstatus), ())
-        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin,
-    "distinct_parts_per_flag" ->
+        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin),
+    Declared("array_order_years", arrayOrderYears _,
+      """WITH y AS (
+        |  SELECT o_custkey,
+        |    list_sort(list_distinct(list(CAST(year(o_orderdate) AS BIGINT)))) AS years
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT o_custkey,
+        |  array_to_string(years, ',') AS years_csv,
+        |  CAST(len(years) AS BIGINT) AS n_years,
+        |  list_contains(years, 1995) AS has_1995,
+        |  years[1] AS first_year,
+        |  years[-1] AS last_year
+        |FROM y ORDER BY o_custkey""".stripMargin),
+    Declared("distinct_parts_per_flag", distinctPartsPerFlag _,
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT (l_partkey, l_suppkey)) AS n_part_supp,
         |  count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "set_intersect_customers" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Declared("set_intersect_customers", setIntersectCustomers _,
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_custkey""".stripMargin,
-    "set_except_customers" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Declared("set_except_customers", setExceptCustomers _,
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY o_custkey""".stripMargin,
-    "scalar_string_part" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Declared("scalar_string_part", scalarStringPart _,
       """SELECT p_partkey, upper(p_brand) AS brand_upper,
         |  CAST(length(p_name) AS BIGINT) AS name_len,
         |  CAST(len(string_split(p_name, ' ')) AS BIGINT) AS name_words,
         |  regexp_extract(p_name, '^(\w+)', 1) AS first_word,
         |  substr(p_type, 1, 5) AS type_prefix,
         |  concat_ws('/', p_brand, p_type) AS brand_type
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_date_orders" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Declared("scalar_date_orders", scalarDateOrders _,
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(month(o_orderdate) AS BIGINT) AS o_month,
         |  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
         |  count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders GROUP BY 1, 2, 3 ORDER BY o_year, o_month""".stripMargin,
-    "json_props_events" ->
+        |FROM orders GROUP BY 1, 2, 3 ORDER BY o_year, o_month""".stripMargin),
+    Declared("json_props_events", jsonPropsEvents _,
       """SELECT event_type, count(*) AS n_events,
         |  CAST(sum(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
         |  CAST(min(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT)) AS BIGINT) AS min_k,
         |  CAST(max(CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT)) AS BIGINT) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "json_parse_events" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Declared("json_parse_events", jsonParseEvents _,
       """WITH t AS (
         |  SELECT event_type,
         |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -770,8 +729,8 @@ object Relational {
         |SELECT CAST(k % 10 AS BIGINT) AS k_decile, count(*) AS n_events,
         |  CAST(sum(k) AS BIGINT) AS sum_k,
         |  CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
-        |FROM t GROUP BY 1 ORDER BY k_decile""".stripMargin,
-    "json_variant_events" ->
+        |FROM t GROUP BY 1 ORDER BY k_decile""".stripMargin),
+    Declared("json_variant_events", jsonVariantEvents _,
       """WITH t AS (
         |  SELECT event_type,
         |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -779,6 +738,13 @@ object Relational {
         |SELECT event_type, count(k) AS n_with_k,
         |  CAST(sum(k) AS BIGINT) AS sum_k,
         |  CAST(count(DISTINCT k % 7) AS BIGINT) AS n_k_mod7
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // the sketch estimates themselves are engine-specific; the oracle
+    // recomputes the exact columns and asserts every verdict is true
+    Declared("agg_approx_orders", aggApproxOrders _,
+      """SELECT o_orderstatus, count(*) AS n_rows,
+        |  count(DISTINCT o_custkey) AS exact_custs,
+        |  true AS custs_ok, true AS p50_ok, true AS p95_ok
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
   )
 }

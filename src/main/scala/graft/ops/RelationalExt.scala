@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** SQL-surface widening beyond Relational.scala: correlated EXISTS,
@@ -964,43 +965,6 @@ object RelationalExt {
       .orderBy(col("l_returnflag"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_volume_guard" -> joinVolumeGuard _,
-    "agg_weighted_median" -> aggWeightedMedianLineitem _,
-    "agg_corr_lineitem" -> aggCorrLineitem _,
-    "events_anomaly_mad" -> eventsAnomalyMad _,
-    "agg_bitmap_distinct" -> aggBitmapDistinct _,
-    "agg_hll_rollup" -> aggHllRollup _, // sketch rollup, tolerance verdicts
-    "unpivot_order_metrics" -> unpivotOrderMetrics _,
-    "agg_argmax_orders" -> aggArgmaxOrders _,
-    "agg_approx_topk_events" -> aggApproxTopkEvents _, // exact below sketch capacity
-    "join_bloom_pruned" -> joinBloomPruned _,
-    "profile_orders" -> profileOrders _,
-    "events_outliers" -> eventsOutliers _,
-    "q8_market_share" -> q8MarketShare _,
-    "q10_returned_items" -> q10ReturnedItems _,
-    "typed_orders_stats" -> typedOrdersStats _,
-    "q15_top_supplier" -> q15TopSupplier _,
-    "window_moving_avg" -> windowMovingAvg _,
-    "window_share_of_total" -> windowShareOfTotal _,
-    "agg_hll_orders" -> aggHllOrders _, // self-checking tolerance verdicts
-    "q18_large_orders" -> q18LargeOrders _,
-    "upsert_customer_balances" -> upsertCustomerBalances _,
-    "scd2_customer_history" -> scd2CustomerHistory _,
-    "agg_median_orders" -> aggMedianOrders _,
-    "agg_histogram_quantiles" -> aggHistogramQuantiles _,
-    "agg_rfm_segments" -> aggRfmSegments _,
-    "scd2_pit_join" -> scd2PitJoin _,
-    "agg_theta_audience" -> aggThetaAudience _,
-    "not_in_urgent_customers" -> notInUrgentCustomers _,
-    "q7_nation_trade" -> q7NationTrade _,
-    "subquery_exists_orders" -> subqueryExistsOrders _,
-    "lateral_explode_parts" -> lateralExplodeParts _,
-    "union_by_name_orders" -> unionByNameOrders _,
-    "window_value_orders" -> windowValueOrders _,
-    "regexp_parts" -> regexpParts _,
-  )
-
   private def profileColSql(c: String): String =
     s"""SELECT '$c' AS col_name,
        |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
@@ -1009,28 +973,11 @@ object RelationalExt {
        |  CAST(max($c) AS VARCHAR) AS max_str
        |FROM orders""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    // weighted median: value histogram + per-flag cumulative window,
-    // min value with 2*cum >= total. h referenced twice -> MATERIALIZED.
-    "agg_weighted_median" ->
-      """WITH h AS MATERIALIZED (
-        |  SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
-        |  FROM lineitem GROUP BY 1, 2),
-        |tot AS (SELECT l_returnflag, CAST(sum(w) AS BIGINT) AS total_weight
-        |        FROM h GROUP BY 1),
-        |cum AS (
-        |  SELECT l_returnflag, v,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag ORDER BY v) AS BIGINT) AS cw
-        |  FROM h)
-        |SELECT cum.l_returnflag, tot.total_weight,
-        |  min(cum.v) AS weighted_median_cents
-        |FROM cum JOIN tot USING (l_returnflag)
-        |WHERE cum.cw * 2 >= tot.total_weight
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
+  val declared: Seq[Declared] = Seq(
     // exact join-size pre-flight: per-key count aggregates full-joined,
     // one summary row per audited join (sums cast back to BIGINT)
-    "join_volume_guard" -> {
+    Declared("join_volume_guard", joinVolumeGuard _,
+      {
       def one(name: String, lsql: String, rsql: String) =
         s"""SELECT '$name' AS join_name,
            |  CAST(sum(coalesce(n_l, 0)) AS BIGINT) AS left_rows,
@@ -1055,8 +1002,26 @@ object RelationalExt {
           "SELECT l_partkey AS k, count(*) AS n_l FROM lineitem GROUP BY 1",
           "SELECT p_partkey AS k, count(*) AS n_r FROM part GROUP BY 1"))
         .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY join_name")
-    },
-    "agg_corr_lineitem" ->
+    }),
+    // weighted median: value histogram + per-flag cumulative window,
+    // min value with 2*cum >= total. h referenced twice -> MATERIALIZED.
+    Declared("agg_weighted_median", aggWeightedMedianLineitem _,
+      """WITH h AS MATERIALIZED (
+        |  SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS v,
+        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
+        |  FROM lineitem GROUP BY 1, 2),
+        |tot AS (SELECT l_returnflag, CAST(sum(w) AS BIGINT) AS total_weight
+        |        FROM h GROUP BY 1),
+        |cum AS (
+        |  SELECT l_returnflag, v,
+        |    CAST(sum(w) OVER (PARTITION BY l_returnflag ORDER BY v) AS BIGINT) AS cw
+        |  FROM h)
+        |SELECT cum.l_returnflag, tot.total_weight,
+        |  min(cum.v) AS weighted_median_cents
+        |FROM cum JOIN tot USING (l_returnflag)
+        |WHERE cum.cw * 2 >= tot.total_weight
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+    Declared("agg_corr_lineitem", aggCorrLineitem _,
       """WITH m AS (
         |  SELECT count(*) AS n,
         |    CAST(sum(x) AS BIGINT) AS sum_x,
@@ -1072,8 +1037,8 @@ object RelationalExt {
         |    (sqrt(CAST(CAST(n AS HUGEINT) * sxx - CAST(sum_x AS HUGEINT) * sum_x AS DOUBLE)) *
         |     sqrt(CAST(CAST(n AS HUGEINT) * syy - CAST(sum_y AS HUGEINT) * sum_y AS DOUBLE)))
         |    AS corr_qty_price
-        |FROM m""".stripMargin,
-    "events_anomaly_mad" ->
+        |FROM m""".stripMargin),
+    Declared("events_anomaly_mad", eventsAnomalyMad _,
       """WITH e AS (
         |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS vc
         |  FROM events),
@@ -1093,18 +1058,26 @@ object RelationalExt {
         |  CAST(sum(CASE WHEN dev.absdev > 3.0 * mad.mad THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_outliers
         |FROM dev JOIN mad ON dev.event_type = mad.event_type
-        |GROUP BY dev.event_type ORDER BY dev.event_type""".stripMargin,
-    "agg_bitmap_distinct" ->
+        |GROUP BY dev.event_type ORDER BY dev.event_type""".stripMargin),
+    Declared("agg_bitmap_distinct", aggBitmapDistinct _,
       """SELECT o_orderstatus,
         |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_distinct_cust
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "unpivot_order_metrics" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    // sketch estimate is engine-specific; oracle recomputes exact
+    // distincts per year and asserts the tolerance verdicts
+    Declared("agg_hll_rollup", aggHllRollup _, // sketch rollup, tolerance verdicts
+      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+        |  CAST(count(DISTINCT month(o_orderdate)) AS BIGINT) AS n_months,
+        |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_custs,
+        |  true AS est_ok
+        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin),
+    Declared("unpivot_order_metrics", unpivotOrderMetrics _,
       """SELECT o_orderkey, 'price_cents' AS metric,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS val FROM orders
         |UNION ALL
         |SELECT o_orderkey, 'custkey', o_custkey FROM orders
-        |ORDER BY o_orderkey, metric""".stripMargin,
-    "agg_argmax_orders" ->
+        |ORDER BY o_orderkey, metric""".stripMargin),
+    Declared("agg_argmax_orders", aggArgmaxOrders _,
       """WITH o AS (
         |  SELECT o_orderstatus, o_orderkey,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -1115,95 +1088,36 @@ object RelationalExt {
         |  arg_max(o_orderkey, comp) AS top_orderkey,
         |  arg_max(cents, comp) AS top_cents,
         |  arg_min(o_orderkey, comp) AS bottom_orderkey
-        |FROM o GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM o GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
     // approx_top_k is exact below its items-tracked capacity (5 distinct
     // event types vs 10 000), so a plain count oracle is value-exact;
     // no LIMIT on either side — the full-set emit is regeneration-proof
-    "agg_approx_topk_events" ->
+    Declared("agg_approx_topk_events", aggApproxTopkEvents _, // exact below sketch capacity
       """SELECT event_type, count(*) AS n FROM events
-        |GROUP BY 1 ORDER BY n DESC, event_type""".stripMargin,
-    // sketch estimate is engine-specific; oracle recomputes exact counts
-    // and asserts the tolerance verdicts
-    "agg_hll_orders" ->
-      """SELECT o_orderstatus, count(*) AS n_rows,
-        |  count(DISTINCT o_custkey) AS exact_custs, true AS custs_ok
-        |FROM orders GROUP BY 1
-        |UNION ALL
-        |SELECT 'ALL', count(*), count(DISTINCT o_custkey), true FROM orders
-        |ORDER BY 1""".stripMargin,
-    "join_bloom_pruned" ->
+        |GROUP BY 1 ORDER BY n DESC, event_type""".stripMargin),
+    Declared("join_bloom_pruned", joinBloomPruned _,
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_custkey IN
         |  (SELECT o_custkey FROM orders WHERE o_totalprice > 480000)
-        |ORDER BY c_custkey""".stripMargin,
-    // sketch estimate is engine-specific; oracle recomputes exact
-    // distincts per year and asserts the tolerance verdicts
-    "agg_hll_rollup" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(count(DISTINCT month(o_orderdate)) AS BIGINT) AS n_months,
-        |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_custs,
-        |  true AS est_ok
-        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT)) AS BIGINT) AS total_cents
-        |  FROM lineitem
-        |  WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_cents
-        |FROM supplier JOIN rev ON s_suppkey = supplier_no
-        |WHERE total_cents = (SELECT max(total_cents) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "window_share_of_total" ->
-      """WITH cells AS (
-        |  SELECT o_orderstatus, o_orderpriority,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cell_cents
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o_orderstatus, o_orderpriority, cell_cents,
-        |  CAST(sum(cell_cents) OVER (PARTITION BY o_orderstatus) AS BIGINT)
-        |    AS status_cents,
-        |  round(CAST(cell_cents AS DOUBLE) /
-        |    (sum(cell_cents) OVER (PARTITION BY o_orderstatus)), 6) AS share
-        |FROM cells ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "window_moving_avg" ->
-      """WITH daily AS (
-        |  SELECT o_orderdate AS d,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS day_cents
-        |  FROM orders GROUP BY o_orderdate)
-        |SELECT d, day_cents,
-        |  CAST(sum(day_cents) OVER w AS BIGINT) AS win_cents,
-        |  CAST(count(*) OVER w AS BIGINT) AS win_days,
-        |  round(CAST(sum(day_cents) OVER w AS DOUBLE) / (count(*) OVER w), 2)
-        |    AS ma_cents
-        |FROM daily
-        |WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |ORDER BY d""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS BIGINT) AS lost_cents,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'
-        |GROUP BY 1, 2, 3
-        |ORDER BY lost_cents DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    "typed_orders_stats" ->
-      """SELECT o_orderstatus,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS sum_cents,
-        |  count(*) AS n_orders
-        |FROM orders
-        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 100000.0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q8_market_share" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Declared("profile_orders", profileOrders _,
+      (Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+        .map(profileColSql).mkString("", "\nUNION ALL\n", "\nORDER BY col_name"))),
+    Declared("events_outliers", eventsOutliers _,
+      """WITH e AS (SELECT event_type, event_id,
+        |           CAST(round(value * 100) AS BIGINT) AS vc FROM events),
+        |st AS (SELECT event_type, count(*) AS n,
+        |              CAST(sum(vc) AS BIGINT) AS s,
+        |              CAST(sum(vc * vc) AS BIGINT) AS sq
+        |       FROM e GROUP BY 1)
+        |SELECT e.event_type, count(*) AS n_outliers,
+        |  min(vc) AS min_vc, max(vc) AS max_vc
+        |FROM e JOIN st USING (event_type)
+        |WHERE pow(CAST(n AS DOUBLE) * vc - s, 2) >
+        |      9.0 * (CAST(n AS DOUBLE) * sq - pow(CAST(s AS DOUBLE), 2))
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Declared("q8_market_share", q8MarketShare _,
       """WITH f AS (
         |  SELECT year(o_orderdate) AS o_year, sn.n_name AS sn_name,
         |    CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)
@@ -1222,59 +1136,153 @@ object RelationalExt {
         |  CAST(sum(rc) AS BIGINT) AS total_cents,
         |  round(CAST(sum(CASE WHEN sn_name = 'NATION_3' THEN rc ELSE 0 END)
         |          AS DOUBLE) / CAST(sum(rc) AS DOUBLE), 6) AS mkt_share
-        |FROM f GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "profile_orders" ->
-      (Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-        .map(profileColSql).mkString("", "\nUNION ALL\n", "\nORDER BY col_name")),
-    "events_outliers" ->
-      """WITH e AS (SELECT event_type, event_id,
-        |           CAST(round(value * 100) AS BIGINT) AS vc FROM events),
-        |st AS (SELECT event_type, count(*) AS n,
-        |              CAST(sum(vc) AS BIGINT) AS s,
-        |              CAST(sum(vc * vc) AS BIGINT) AS sq
-        |       FROM e GROUP BY 1)
-        |SELECT e.event_type, count(*) AS n_outliers,
-        |  min(vc) AS min_vc, max(vc) AS max_vc
-        |FROM e JOIN st USING (event_type)
-        |WHERE pow(CAST(n AS DOUBLE) * vc - s, 2) >
-        |      9.0 * (CAST(n AS DOUBLE) * sq - pow(CAST(s AS DOUBLE), 2))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q7_nation_trade" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
+        |FROM f GROUP BY o_year ORDER BY o_year""".stripMargin),
+    Declared("q10_returned_items", q10ReturnedItems _,
+      """SELECT c_custkey, c_name, n_name,
         |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  count(*) AS n_rows
+        |    AS BIGINT)) AS BIGINT) AS lost_cents,
+        |  count(*) AS n_items
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE year(l_shipdate) BETWEEN 1995 AND 1996
-        |  AND sn.n_name <> cn.n_name
-        |GROUP BY 1, 2, 3 ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "agg_median_orders" ->
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'
+        |GROUP BY 1, 2, 3
+        |ORDER BY lost_cents DESC, c_custkey ASC LIMIT 20""".stripMargin),
+    Declared("typed_orders_stats", typedOrdersStats _,
+      """SELECT o_orderstatus,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS sum_cents,
+        |  count(*) AS n_orders
+        |FROM orders
+        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 100000.0
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Declared("q15_top_supplier", q15TopSupplier _,
+      """WITH rev AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |    CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
+        |      AS BIGINT)) AS BIGINT) AS total_cents
+        |  FROM lineitem
+        |  WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_cents
+        |FROM supplier JOIN rev ON s_suppkey = supplier_no
+        |WHERE total_cents = (SELECT max(total_cents) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin),
+    Declared("window_moving_avg", windowMovingAvg _,
+      """WITH daily AS (
+        |  SELECT o_orderdate AS d,
+        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS day_cents
+        |  FROM orders GROUP BY o_orderdate)
+        |SELECT d, day_cents,
+        |  CAST(sum(day_cents) OVER w AS BIGINT) AS win_cents,
+        |  CAST(count(*) OVER w AS BIGINT) AS win_days,
+        |  round(CAST(sum(day_cents) OVER w AS DOUBLE) / (count(*) OVER w), 2)
+        |    AS ma_cents
+        |FROM daily
+        |WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+        |ORDER BY d""".stripMargin),
+    Declared("window_share_of_total", windowShareOfTotal _,
+      """WITH cells AS (
+        |  SELECT o_orderstatus, o_orderpriority,
+        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS cell_cents
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT o_orderstatus, o_orderpriority, cell_cents,
+        |  CAST(sum(cell_cents) OVER (PARTITION BY o_orderstatus) AS BIGINT)
+        |    AS status_cents,
+        |  round(CAST(cell_cents AS DOUBLE) /
+        |    (sum(cell_cents) OVER (PARTITION BY o_orderstatus)), 6) AS share
+        |FROM cells ORDER BY o_orderstatus, o_orderpriority""".stripMargin),
+    // sketch estimate is engine-specific; oracle recomputes exact counts
+    // and asserts the tolerance verdicts
+    Declared("agg_hll_orders", aggHllOrders _, // self-checking tolerance verdicts
+      """SELECT o_orderstatus, count(*) AS n_rows,
+        |  count(DISTINCT o_custkey) AS exact_custs, true AS custs_ok
+        |FROM orders GROUP BY 1
+        |UNION ALL
+        |SELECT 'ALL', count(*), count(DISTINCT o_custkey), true FROM orders
+        |ORDER BY 1""".stripMargin),
+    Declared("q18_large_orders", q18LargeOrders _,
+      """WITH big AS (
+        |  SELECT l_orderkey, sum(l_quantity) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
+        |SELECT o_orderkey, o_custkey,
+        |  CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
+        |  CAST(total_qty AS BIGINT) AS total_qty
+        |FROM orders JOIN big ON o_orderkey = l_orderkey
+        |ORDER BY o_orderkey""".stripMargin),
+    Declared("upsert_customer_balances", upsertCustomerBalances _,
+      """WITH changes AS (
+        |  SELECT o_custkey,
+        |    CAST(round(o_totalprice*100) AS BIGINT) AS new_bal_cents
+        |  FROM (SELECT o_custkey, o_totalprice,
+        |          row_number() OVER (PARTITION BY o_custkey
+        |            ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+        |        FROM orders) t
+        |  WHERE rn = 1)
+        |SELECT
+        |  CAST(coalesce(c_custkey, o_custkey) AS BIGINT) AS c_custkey,
+        |  coalesce(c_mktsegment, 'NEW') AS c_mktsegment,
+        |  coalesce(new_bal_cents, CAST(round(c_acctbal*100) AS BIGINT)) AS bal_cents,
+        |  new_bal_cents IS NOT NULL AS updated
+        |FROM customer FULL OUTER JOIN changes ON c_custkey = o_custkey
+        |ORDER BY c_custkey""".stripMargin),
+    Declared("scd2_customer_history", scd2CustomerHistory _,
+      """WITH o AS (
+        |  SELECT o_custkey, o_orderkey, o_orderpriority AS state,
+        |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
+        |         AS BIGINT) AS day
+        |  FROM orders),
+        |c AS (
+        |  SELECT *, lag(state) OVER (PARTITION BY o_custkey
+        |             ORDER BY day, o_orderkey) AS prev_state
+        |  FROM o)
+        |SELECT o_custkey, o_orderkey, state, day AS valid_from_day,
+        |  lead(day) OVER w AS valid_to_day,
+        |  CAST(CASE WHEN lead(day) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT)
+        |    AS is_current
+        |FROM c WHERE prev_state IS NULL OR prev_state <> state
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)
+        |ORDER BY o_custkey, valid_from_day, o_orderkey""".stripMargin),
+    Declared("agg_median_orders", aggMedianOrders _,
       """SELECT o_orderstatus, count(*) AS n,
         |  median(o_totalprice) AS med_price,
         |  median(CAST(round(o_totalprice*100) AS BIGINT)) AS med_cents
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // theta audience: DuckDB has no theta sketches — it recomputes the
-    // EXACT counts and asserts the sketch verdicts (the HLL pattern)
-    "agg_theta_audience" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events
-        |           WHERE event_type IN ('click', 'view')),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM e
-        |      WHERE event_type = 'click'),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS n_b FROM e
-        |      WHERE event_type = 'view'),
-        |i AS (SELECT CAST(count(*) AS BIGINT) AS n_inter FROM (
-        |  SELECT user_id FROM e GROUP BY user_id HAVING count(*) = 2))
-        |SELECT n_a, n_b, n_inter, n_a - n_inter AS n_diff,
-        |  TRUE AS ok_a, TRUE AS ok_b, TRUE AS ok_inter, TRUE AS ok_diff
-        |FROM a, b, i""".stripMargin,
-    "agg_rfm_segments" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    // mergeable-histogram quantiles: merge level elided (per-bucket sums
+    // are associative, so merged counts == direct counts); the exact
+    // interpolated percentile (quantile_cont ≡ Spark percentile,
+    // bit-exact per the agg_stats precedent) checks the verdicts
+    Declared("agg_histogram_quantiles", aggHistogramQuantiles _,
+      """WITH o AS (SELECT CAST(round(o_totalprice*100) AS BIGINT) AS cents
+        |           FROM orders),
+        |h AS (SELECT cents // 1000000 AS bucket, CAST(count(*) AS BIGINT) AS n
+        |      FROM o GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM h),
+        |ex AS (SELECT quantile_cont(cents, 0.50) AS p50,
+        |              quantile_cont(cents, 0.90) AS p90,
+        |              quantile_cont(cents, 0.99) AS p99 FROM o),
+        |cum AS (SELECT bucket, CAST(sum(n) OVER (ORDER BY bucket) AS BIGINT)
+        |          AS cum_count FROM h),
+        |qv AS (SELECT CAST(unnest([50, 90, 99]) AS BIGINT) AS q),
+        |cand AS (
+        |  SELECT qv.q, cum.bucket, cum.cum_count, tot.n_total,
+        |    CASE qv.q WHEN 50 THEN ex.p50 WHEN 90 THEN ex.p90
+        |      ELSE ex.p99 END AS exact_pctl
+        |  FROM qv, cum, tot, ex
+        |  WHERE cum.cum_count * 100 >= qv.q * tot.n_total),
+        |pick AS (SELECT q, min(bucket) AS bucket FROM cand GROUP BY q)
+        |SELECT p.q, p.bucket * 1000000 AS bucket_lo,
+        |  p.bucket * 1000000 + 999999 AS bucket_hi,
+        |  c.cum_count, c.n_total,
+        |  (c.exact_pctl >= p.bucket * 1000000 AND
+        |   c.exact_pctl <= p.bucket * 1000000 + 999999) AS within_bucket
+        |FROM pick p JOIN cand c ON c.q = p.q AND c.bucket = p.bucket
+        |ORDER BY p.q""".stripMargin),
+    Declared("agg_rfm_segments", aggRfmSegments _,
       """WITH per AS MATERIALIZED (
         |  SELECT o_custkey, CAST(max(o_orderdate) AS DATE) AS last_dt,
         |    CAST(count(*) AS BIGINT) AS freq,
@@ -1302,71 +1310,8 @@ object RelationalExt {
         |  CAST(sum(mon) AS DOUBLE) / CAST(count(*) AS DOUBLE)
         |    AS avg_mon_cents
         |FROM rfm, th
-        |GROUP BY 1, 2, 3 ORDER BY r_seg, f_seg, m_seg""".stripMargin,
-    // mergeable-histogram quantiles: merge level elided (per-bucket sums
-    // are associative, so merged counts == direct counts); the exact
-    // interpolated percentile (quantile_cont ≡ Spark percentile,
-    // bit-exact per the agg_stats precedent) checks the verdicts
-    "agg_histogram_quantiles" ->
-      """WITH o AS (SELECT CAST(round(o_totalprice*100) AS BIGINT) AS cents
-        |           FROM orders),
-        |h AS (SELECT cents // 1000000 AS bucket, CAST(count(*) AS BIGINT) AS n
-        |      FROM o GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM h),
-        |ex AS (SELECT quantile_cont(cents, 0.50) AS p50,
-        |              quantile_cont(cents, 0.90) AS p90,
-        |              quantile_cont(cents, 0.99) AS p99 FROM o),
-        |cum AS (SELECT bucket, CAST(sum(n) OVER (ORDER BY bucket) AS BIGINT)
-        |          AS cum_count FROM h),
-        |qv AS (SELECT CAST(unnest([50, 90, 99]) AS BIGINT) AS q),
-        |cand AS (
-        |  SELECT qv.q, cum.bucket, cum.cum_count, tot.n_total,
-        |    CASE qv.q WHEN 50 THEN ex.p50 WHEN 90 THEN ex.p90
-        |      ELSE ex.p99 END AS exact_pctl
-        |  FROM qv, cum, tot, ex
-        |  WHERE cum.cum_count * 100 >= qv.q * tot.n_total),
-        |pick AS (SELECT q, min(bucket) AS bucket FROM cand GROUP BY q)
-        |SELECT p.q, p.bucket * 1000000 AS bucket_lo,
-        |  p.bucket * 1000000 + 999999 AS bucket_hi,
-        |  c.cum_count, c.n_total,
-        |  (c.exact_pctl >= p.bucket * 1000000 AND
-        |   c.exact_pctl <= p.bucket * 1000000 + 999999) AS within_bucket
-        |FROM pick p JOIN cand c ON c.q = p.q AND c.bucket = p.bucket
-        |ORDER BY p.q""".stripMargin,
-    "upsert_customer_balances" ->
-      """WITH changes AS (
-        |  SELECT o_custkey,
-        |    CAST(round(o_totalprice*100) AS BIGINT) AS new_bal_cents
-        |  FROM (SELECT o_custkey, o_totalprice,
-        |          row_number() OVER (PARTITION BY o_custkey
-        |            ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |        FROM orders) t
-        |  WHERE rn = 1)
-        |SELECT
-        |  CAST(coalesce(c_custkey, o_custkey) AS BIGINT) AS c_custkey,
-        |  coalesce(c_mktsegment, 'NEW') AS c_mktsegment,
-        |  coalesce(new_bal_cents, CAST(round(c_acctbal*100) AS BIGINT)) AS bal_cents,
-        |  new_bal_cents IS NOT NULL AS updated
-        |FROM customer FULL OUTER JOIN changes ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-    "scd2_customer_history" ->
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderkey, o_orderpriority AS state,
-        |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-        |         AS BIGINT) AS day
-        |  FROM orders),
-        |c AS (
-        |  SELECT *, lag(state) OVER (PARTITION BY o_custkey
-        |             ORDER BY day, o_orderkey) AS prev_state
-        |  FROM o)
-        |SELECT o_custkey, o_orderkey, state, day AS valid_from_day,
-        |  lead(day) OVER w AS valid_to_day,
-        |  CAST(CASE WHEN lead(day) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS is_current
-        |FROM c WHERE prev_state IS NULL OR prev_state <> state
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day, o_orderkey)
-        |ORDER BY o_custkey, valid_from_day, o_orderkey""".stripMargin,
-    "scd2_pit_join" ->
+        |GROUP BY 1, 2, 3 ORDER BY r_seg, f_seg, m_seg""".stripMargin),
+    Declared("scd2_pit_join", scd2PitJoin _,
       """WITH o AS (
         |  SELECT o_custkey, o_orderkey, o_orderpriority AS state,
         |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
@@ -1386,38 +1331,58 @@ object RelationalExt {
         |FROM o JOIN hist h ON h.o_custkey = o.o_custkey
         |  AND o.day >= h.valid_from_day
         |  AND (h.valid_to_day IS NULL OR o.day < h.valid_to_day)
-        |GROUP BY h.state ORDER BY h.state""".stripMargin,
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
-        |SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-        |  CAST(total_qty AS BIGINT) AS total_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "not_in_urgent_customers" ->
+        |GROUP BY h.state ORDER BY h.state""".stripMargin),
+    // theta audience: DuckDB has no theta sketches — it recomputes the
+    // EXACT counts and asserts the sketch verdicts (the HLL pattern)
+    Declared("agg_theta_audience", aggThetaAudience _,
+      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events
+        |           WHERE event_type IN ('click', 'view')),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM e
+        |      WHERE event_type = 'click'),
+        |b AS (SELECT CAST(count(*) AS BIGINT) AS n_b FROM e
+        |      WHERE event_type = 'view'),
+        |i AS (SELECT CAST(count(*) AS BIGINT) AS n_inter FROM (
+        |  SELECT user_id FROM e GROUP BY user_id HAVING count(*) = 2))
+        |SELECT n_a, n_b, n_inter, n_a - n_inter AS n_diff,
+        |  TRUE AS ok_a, TRUE AS ok_b, TRUE AS ok_inter, TRUE AS ok_diff
+        |FROM a, b, i""".stripMargin),
+    Declared("not_in_urgent_customers", notInUrgentCustomers _,
       """SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
         |  count(*) AS n_customers
         |FROM customer
         |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
         |                        WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "subquery_exists_orders" ->
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    Declared("q7_nation_trade", q7NationTrade _,
+      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
+        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100)
+        |      AS BIGINT)) AS BIGINT) AS revenue_cents,
+        |  count(*) AS n_rows
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN nation cn ON c_nationkey = cn.n_nationkey
+        |WHERE year(l_shipdate) BETWEEN 1995 AND 1996
+        |  AND sn.n_name <> cn.n_name
+        |GROUP BY 1, 2, 3 ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    Declared("subquery_exists_orders", subqueryExistsOrders _,
       """SELECT c_mktsegment, count(*) AS n_customers
         |FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_custkey = c_custkey
         |                AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "lateral_explode_parts" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Declared("lateral_explode_parts", lateralExplodeParts _,
       """SELECT s.pos, s.word, count(*) AS n_parts
         |FROM (
         |  SELECT unnest([{'pos': CAST(i AS BIGINT), 'word': words[i]}
         |                 FOR i IN range(1, len(words) + 1)]) AS s
         |  FROM (SELECT string_split(p_name, ' ') AS words FROM part))
-        |GROUP BY s.pos, s.word ORDER BY s.pos, s.word""".stripMargin,
-    "union_by_name_orders" ->
+        |GROUP BY s.pos, s.word ORDER BY s.pos, s.word""".stripMargin),
+    Declared("union_by_name_orders", unionByNameOrders _,
       """WITH u AS (
         |  SELECT o_orderkey,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
@@ -1430,8 +1395,8 @@ object RelationalExt {
         |  FROM orders WHERE year(o_orderdate) = 1996)
         |SELECT COALESCE(src, 'y1996') AS src, count(*) AS n_orders,
         |  CAST(sum(price_cents) AS BIGINT) AS sum_cents
-        |FROM u GROUP BY 1 ORDER BY src""".stripMargin,
-    "window_value_orders" ->
+        |FROM u GROUP BY 1 ORDER BY src""".stripMargin),
+    Declared("window_value_orders", windowValueOrders _,
       """SELECT o_orderkey, o_custkey,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
         |  first_value(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w_full
@@ -1447,13 +1412,13 @@ object RelationalExt {
         |  w_full AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
         |  w_ord AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "regexp_parts" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Declared("regexp_parts", regexpParts _,
       """SELECT p_brand, count(*) AS n_parts,
         |  CAST(sum(len(regexp_extract_all(p_name, 'o[a-z]+'))) AS BIGINT)
         |    AS n_o_frags,
         |  CAST(count(DISTINCT regexp_extract(p_name, '([a-z]+)$', 1)) AS BIGINT)
         |    AS n_last_words
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
   )
 }

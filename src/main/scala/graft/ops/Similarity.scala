@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Similarity search over the `embeddings` table (dim-64 float vectors).
@@ -842,25 +843,6 @@ object Similarity {
           .as("recall"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "similarity_knn_graph" -> similarityKnnGraph _,
-    "similarity_knn_graph_lsh_recall" -> similarityKnnGraphLshRecall _,
-    "similarity_matryoshka_recall" -> matryoshkaRecall _,
-    "similarity_pca_gram" -> similarityPcaGram _,
-    "similarity_pca_project" -> similarityPcaProject _,
-    "similarity_cosine_topk" -> cosineTopK _,
-    "similarity_lsh_buckets" -> lshBuckets _,
-    "similarity_lsh_ann" -> lshAnnTopK _,
-    "similarity_ivf_ann" -> ivfAnnTopK _,
-    "similarity_label_centroids" -> labelCentroids _,
-    "similarity_kmeans" -> kmeansCells _,
-    "similarity_pq_adc" -> pqAdcTopK _,
-    "similarity_ivfpq_ann" -> ivfPqAnnTopK _,
-    "dedup_embedding_cosine" -> dedupEmbeddingCosine _,
-    "dedup_semantic" -> dedupSemantic _,
-    "similarity_ann_recall" -> annRecall _,
-  )
-
   // Shared PCA oracle CTEs (consumed with qElems in scope): Gram matrix
   // from the quantized elements + two integer power-iteration rounds.
   private val pcaCtes =
@@ -959,42 +941,78 @@ object Similarity {
       |  SELECT vec_id, m, cell AS code FROM d2t
       |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cell) = 1)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
+    // mutual 5-NN graph: all-pairs exact dots, rank per node, reversed
+    // self-join for mutuality. k is referenced twice -> MATERIALIZED.
+    Declared("similarity_knn_graph", similarityKnnGraph _,
+      s"""WITH $qElems,
+         |dots AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM qe a JOIN qe b ON a.i = b.i
+         |  WHERE a.vec_id <> b.vec_id GROUP BY 1, 2),
+         |scored AS (
+         |  SELECT a_id, b_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(an.n2 AS DOUBLE) * CAST(bn.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms an ON an.vec_id = a_id
+         |  JOIN norms bn ON bn.vec_id = b_id),
+         |k AS MATERIALIZED (
+         |  SELECT a_id, b_id, cosine,
+         |    row_number() OVER (PARTITION BY a_id ORDER BY cosine DESC, b_id ASC) AS rn
+         |  FROM scored QUALIFY rn <= 5)
+         |SELECT x.a_id, x.b_id, CAST(x.rn AS BIGINT) AS rank_ab,
+         |  CAST(y.rn AS BIGINT) AS rank_ba, x.cosine
+         |FROM k x JOIN k y ON x.a_id = y.b_id AND x.b_id = y.a_id
+         |WHERE x.a_id < x.b_id ORDER BY x.a_id, x.b_id""".stripMargin),
+    // LSH-candidate mutual graph recall: scored (all-pairs cosines)
+    // serves both legs - the exact ranking and the LSH candidate subset
+    Declared("similarity_knn_graph_lsh_recall", similarityKnnGraphLshRecall _,
+      s"""WITH $qElems,
+         |dots AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM qe a JOIN qe b ON a.i = b.i
+         |  WHERE a.vec_id <> b.vec_id GROUP BY 1, 2),
+         |scored AS MATERIALIZED (
+         |  SELECT a_id, b_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(an.n2 AS DOUBLE) * CAST(bn.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms an ON an.vec_id = a_id
+         |  JOIN norms bn ON bn.vec_id = b_id),
+         |ke AS MATERIALIZED (
+         |  SELECT a_id, b_id,
+         |    row_number() OVER (PARTITION BY a_id ORDER BY cosine DESC, b_id ASC) AS rn
+         |  FROM scored QUALIFY rn <= 5),
+         |exact_edges AS MATERIALIZED (
+         |  SELECT x.a_id, x.b_id FROM ke x
+         |  JOIN ke y ON x.a_id = y.b_id AND x.b_id = y.a_id
+         |  WHERE x.a_id < x.b_id),
+         |$duckBuckets,
+         |cand AS (
+         |  SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
+         |  FROM buckets x JOIN buckets y
+         |    ON x.tbl = y.tbl AND x.bucket = y.bucket
+         |  WHERE x.vec_id <> y.vec_id),
+         |kl AS MATERIALIZED (
+         |  SELECT c.a_id, c.b_id,
+         |    row_number() OVER (PARTITION BY c.a_id
+         |      ORDER BY s.cosine DESC, c.b_id ASC) AS rn
+         |  FROM cand c JOIN scored s ON s.a_id = c.a_id AND s.b_id = c.b_id
+         |  QUALIFY rn <= 5),
+         |lsh_edges AS (
+         |  SELECT p.a_id, p.b_id FROM kl p
+         |  JOIN kl q ON p.a_id = q.b_id AND p.b_id = q.a_id
+         |  WHERE p.a_id < p.b_id)
+         |SELECT
+         |  (SELECT count(*) FROM exact_edges) AS n_exact,
+         |  (SELECT count(*) FROM lsh_edges l
+         |     JOIN exact_edges e ON l.a_id = e.a_id AND l.b_id = e.b_id) AS n_found,
+         |  CAST((SELECT count(*) FROM lsh_edges l
+         |     JOIN exact_edges e ON l.a_id = e.a_id AND l.b_id = e.b_id) AS DOUBLE) /
+         |  CAST((SELECT count(*) FROM exact_edges) AS DOUBLE) AS recall""".stripMargin),
     // prefix-dim top-5 per (dim, query) vs the d=64 truth, hits counted
-    // Gram + 2-round integer power iteration, exact mirror (note: both
-    // engines' integer division truncates toward zero, verified; the
-    // ray sums go through HUGEINT ≡ decimal(38,0))
-    "similarity_pca_gram" ->
-      s"""WITH $qElems,
-         |$pcaCtes,
-         |ray AS (
-         |  SELECT CASE WHEN sum(q.vq1 * q.vq1) = 0 THEN 0.0
-         |    ELSE CAST(sum(q.vq1 * v2.v2) AS DOUBLE) /
-         |         CAST(sum(q.vq1 * q.vq1) AS DOUBLE) END AS lambda1
-         |  FROM v2 JOIN v1q q ON q.j = v2.i)
-         |SELECT v2.i,
-         |  v2.v2 // greatest(1, (SELECT m2 FROM m2) // 1000) AS eig_q,
-         |  (SELECT lambda1 FROM ray) AS lambda1
-         |FROM v2 ORDER BY v2.i""".stripMargin,
-    // projection of every vector onto the learned component (same CTEs),
-    // aggregated per label — exact integer dot products
-    "similarity_pca_project" ->
-      s"""WITH $qElems,
-         |$pcaCtes,
-         |eig AS MATERIALIZED (
-         |  SELECT i, v2 // greatest(1, (SELECT m2 FROM m2) // 1000) AS eig_q
-         |  FROM v2),
-         |proj AS MATERIALIZED (
-         |  SELECT qe.vec_id, CAST(sum(qe.v * eig.eig_q) AS BIGINT) AS proj
-         |  FROM qe JOIN eig ON eig.i = qe.i - 1
-         |  GROUP BY qe.vec_id)
-         |SELECT e.label, CAST(count(*) AS BIGINT) AS n,
-         |  min(p.proj) AS min_proj, max(p.proj) AS max_proj,
-         |  CAST(sum(p.proj) AS BIGINT) AS sum_proj,
-         |  CAST(sum(p.proj) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_proj
-         |FROM proj p JOIN embeddings e ON e.vec_id = p.vec_id
-         |GROUP BY e.label ORDER BY e.label""".stripMargin,
-    "similarity_matryoshka_recall" ->
+    Declared("similarity_matryoshka_recall", matryoshkaRecall _,
       s"""WITH $qElems,
          |dims(d) AS (VALUES (8), (16), (32), (64)),
          |pnorm AS MATERIALIZED (
@@ -1022,10 +1040,282 @@ object Similarity {
          |  CAST(count(tr.qid) AS DOUBLE) / 40.0 AS recall
          |FROM top t LEFT JOIN truth tr ON tr.qid = t.qid AND tr.cid = t.cid
          |WHERE t.d < 64
-         |GROUP BY t.d ORDER BY dim""".stripMargin,
+         |GROUP BY t.d ORDER BY dim""".stripMargin),
+    // Gram + 2-round integer power iteration, exact mirror (note: both
+    // engines' integer division truncates toward zero, verified; the
+    // ray sums go through HUGEINT ≡ decimal(38,0))
+    Declared("similarity_pca_gram", similarityPcaGram _,
+      s"""WITH $qElems,
+         |$pcaCtes,
+         |ray AS (
+         |  SELECT CASE WHEN sum(q.vq1 * q.vq1) = 0 THEN 0.0
+         |    ELSE CAST(sum(q.vq1 * v2.v2) AS DOUBLE) /
+         |         CAST(sum(q.vq1 * q.vq1) AS DOUBLE) END AS lambda1
+         |  FROM v2 JOIN v1q q ON q.j = v2.i)
+         |SELECT v2.i,
+         |  v2.v2 // greatest(1, (SELECT m2 FROM m2) // 1000) AS eig_q,
+         |  (SELECT lambda1 FROM ray) AS lambda1
+         |FROM v2 ORDER BY v2.i""".stripMargin),
+    // projection of every vector onto the learned component (same CTEs),
+    // aggregated per label — exact integer dot products
+    Declared("similarity_pca_project", similarityPcaProject _,
+      s"""WITH $qElems,
+         |$pcaCtes,
+         |eig AS MATERIALIZED (
+         |  SELECT i, v2 // greatest(1, (SELECT m2 FROM m2) // 1000) AS eig_q
+         |  FROM v2),
+         |proj AS MATERIALIZED (
+         |  SELECT qe.vec_id, CAST(sum(qe.v * eig.eig_q) AS BIGINT) AS proj
+         |  FROM qe JOIN eig ON eig.i = qe.i - 1
+         |  GROUP BY qe.vec_id)
+         |SELECT e.label, CAST(count(*) AS BIGINT) AS n,
+         |  min(p.proj) AS min_proj, max(p.proj) AS max_proj,
+         |  CAST(sum(p.proj) AS BIGINT) AS sum_proj,
+         |  CAST(sum(p.proj) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_proj
+         |FROM proj p JOIN embeddings e ON e.vec_id = p.vec_id
+         |GROUP BY e.label ORDER BY e.label""".stripMargin),
+    Declared("similarity_cosine_topk", cosineTopK _,
+      s"""WITH $qElems,
+         |dots AS (
+         |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
+         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM qe a JOIN qe b ON a.i = b.i
+         |  WHERE a.vec_id < 8 AND a.vec_id <> b.vec_id
+         |  GROUP BY 1, 2),
+         |scored AS (
+         |  SELECT query_id, cand_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms qn ON qn.vec_id = query_id
+         |  JOIN norms cn ON cn.vec_id = cand_id),
+         |ranked AS (
+         |  SELECT query_id, cand_id, cosine,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
+         |  FROM scored)
+         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
+         |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin),
+    Declared("similarity_lsh_buckets", lshBuckets _,
+      s"""WITH $qElems,
+         |$duckBuckets
+         |SELECT tbl, bucket, count(*) AS n_vectors, min(vec_id) AS min_vec_id
+         |FROM buckets GROUP BY tbl, bucket ORDER BY tbl, bucket""".stripMargin),
+    Declared("similarity_lsh_ann", lshAnnTopK _,
+      s"""WITH $qElems,
+         |$duckBuckets,
+         |cand_pairs AS (
+         |  SELECT DISTINCT ba.vec_id AS query_id, bb.vec_id AS cand_id
+         |  FROM buckets ba
+         |  JOIN buckets bb ON ba.tbl = bb.tbl AND ba.bucket = bb.bucket
+         |  WHERE ba.vec_id < 8 AND ba.vec_id <> bb.vec_id),
+         |dots AS (
+         |  SELECT p.query_id, p.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM cand_pairs p
+         |  JOIN qe a ON a.vec_id = p.query_id
+         |  JOIN qe b ON b.vec_id = p.cand_id AND a.i = b.i
+         |  GROUP BY 1, 2),
+         |scored AS (
+         |  SELECT query_id, cand_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms qn ON qn.vec_id = query_id
+         |  JOIN norms cn ON cn.vec_id = cand_id),
+         |ranked AS (
+         |  SELECT query_id, cand_id, cosine,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
+         |  FROM scored)
+         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
+         |FROM ranked WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+    Declared("similarity_ivf_ann", ivfAnnTopK _,
+      s"""WITH $qElems,
+         |lab AS (SELECT vec_id, label FROM embeddings),
+         |cellsums AS (
+         |  SELECT l.label AS cell, q.i, CAST(sum(q.v) AS BIGINT) AS s
+         |  FROM qe q JOIN lab l ON l.vec_id = q.vec_id
+         |  GROUP BY 1, 2),
+         |cellnorm AS (SELECT cell, CAST(sum(s * s) AS BIGINT) AS ss
+         |  FROM cellsums GROUP BY cell),
+         |aff AS (
+         |  SELECT q.vec_id, c.cell,
+         |    CAST(sum(q.v * c.s) AS BIGINT) AS dot
+         |  FROM qe q JOIN cellsums c ON q.i = c.i
+         |  GROUP BY 1, 2),
+         |ranked AS (
+         |  SELECT a.vec_id, a.cell,
+         |    row_number() OVER (PARTITION BY a.vec_id
+         |      ORDER BY CAST(a.dot AS DOUBLE) / sqrt(CAST(n.ss AS DOUBLE)) DESC,
+         |               a.cell ASC) AS rn
+         |  FROM aff a JOIN cellnorm n ON n.cell = a.cell),
+         |assign AS (SELECT vec_id AS cand_id, cell FROM ranked WHERE rn = 1),
+         |probes AS (SELECT vec_id AS query_id, cell FROM ranked
+         |           WHERE rn <= 2 AND vec_id < 8),
+         |cand AS (
+         |  SELECT DISTINCT p.query_id, a.cand_id
+         |  FROM probes p JOIN assign a ON a.cell = p.cell
+         |  WHERE a.cand_id <> p.query_id),
+         |dots AS (
+         |  SELECT c.query_id, c.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM cand c
+         |  JOIN qe a ON a.vec_id = c.query_id
+         |  JOIN qe b ON b.vec_id = c.cand_id AND a.i = b.i
+         |  GROUP BY 1, 2),
+         |scored AS (
+         |  SELECT query_id, cand_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms qn ON qn.vec_id = query_id
+         |  JOIN norms cn ON cn.vec_id = cand_id),
+         |final AS (
+         |  SELECT query_id, cand_id, cosine,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
+         |  FROM scored)
+         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
+         |FROM final WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+    Declared("similarity_label_centroids", labelCentroids _,
+      """SELECT label, CAST(i - 1 AS BIGINT) AS dim,
+        |  CAST(sum(CAST(round(CAST(e AS DOUBLE) * 1000) AS BIGINT)) AS DOUBLE) /
+        |    CAST(count(*) * 1000 AS DOUBLE) AS centroid,
+        |  count(*) AS n_vectors
+        |FROM (SELECT label, unnest(embedding) AS e,
+        |             generate_subscripts(embedding, 1) AS i FROM embeddings) t
+        |GROUP BY label, i ORDER BY label, dim""".stripMargin),
+    // 2 Lloyd iterations unrolled: exact-integer d², floor(Σv/n) update
+    Declared("similarity_kmeans", kmeansCells _,
+      s"""WITH $qElems,
+         |seeds AS (SELECT vec_id AS cell, i AS dim, v AS cv FROM qe WHERE vec_id < 8),
+         |d1 AS (
+         |  SELECT x.vec_id, s.cell,
+         |    CAST(sum((x.v - s.cv) * (x.v - s.cv)) AS BIGINT) AS d2
+         |  FROM qe x JOIN seeds s ON x.i = s.dim GROUP BY 1, 2),
+         |a1 AS (
+         |  SELECT vec_id, cell FROM d1
+         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) = 1),
+         |c2 AS (
+         |  SELECT a1.cell, x.i AS dim,
+         |    CAST(floor(CAST(sum(x.v) AS DOUBLE) / count(*)) AS BIGINT) AS cv
+         |  FROM qe x JOIN a1 ON x.vec_id = a1.vec_id GROUP BY 1, 2),
+         |dd2 AS (
+         |  SELECT x.vec_id, c.cell,
+         |    CAST(sum((x.v - c.cv) * (x.v - c.cv)) AS BIGINT) AS d2
+         |  FROM qe x JOIN c2 c ON x.i = c.dim GROUP BY 1, 2),
+         |a2 AS (
+         |  SELECT vec_id, cell, d2 FROM dd2
+         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) = 1)
+         |SELECT cell, count(*) AS n_vecs, CAST(sum(d2) AS BIGINT) AS inertia
+         |FROM a2 GROUP BY cell ORDER BY cell""".stripMargin),
+    // PQ: per-subspace codebooks (seed + 1 Lloyd round), codes by min
+    // (d2, cell), ADC = Σ_m LUT[m][code]; the query LUT is d2t's rows
+    // for query vecs (same x·x + c·c − 2x·c integers as the engine)
+    Declared("similarity_pq_adc", pqAdcTopK _,
+      s"""WITH $qElems,
+         |$pqTrainSql,
+         |adc AS (
+         |  SELECT l.vec_id AS query_id, c.vec_id AS cand_id,
+         |    CAST(sum(l.d2) AS BIGINT) AS adc_d2
+         |  FROM codes c JOIN d2t l ON l.m = c.m AND l.cell = c.code
+         |  WHERE l.vec_id < 8 AND l.vec_id <> c.vec_id
+         |  GROUP BY 1, 2),
+         |top AS MATERIALIZED (
+         |  SELECT query_id, cand_id, adc_d2,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adc_d2, cand_id) AS BIGINT) AS rn
+         |  FROM adc QUALIFY rn <= 3),
+         |dots AS (
+         |  SELECT t.query_id, t.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS d
+         |  FROM top t
+         |  JOIN qe a ON a.vec_id = t.query_id
+         |  JOIN qe b ON b.vec_id = t.cand_id AND a.i = b.i
+         |  GROUP BY 1, 2)
+         |SELECT t.query_id, t.rn, t.cand_id, t.adc_d2,
+         |  CAST(qn.n2 + cn.n2 - 2 * d.d AS BIGINT) AS true_d2
+         |FROM top t
+         |JOIN dots d ON d.query_id = t.query_id AND d.cand_id = t.cand_id
+         |JOIN norms qn ON qn.vec_id = t.query_id
+         |JOIN norms cn ON cn.vec_id = t.cand_id
+         |ORDER BY t.query_id, t.rn""".stripMargin),
+    // IVF+PQ composition: probe cells = the IVF ranking's top-2 per
+    // query, candidates = vectors assigned (rn=1) to a probed cell,
+    // ADC = sum_m d2t[query][m][code(cand, m)] over the restricted set,
+    // top-3 by (adc_d2, cand_id), exact re-rank via norms + dots
+    Declared("similarity_ivfpq_ann", ivfPqAnnTopK _,
+      s"""WITH $qElems,
+         |$cellRankSql,
+         |$pqTrainSql,
+         |iassign AS (SELECT vec_id AS cand_id, cell FROM ranked WHERE rn = 1),
+         |iprobes AS (SELECT vec_id AS query_id, cell FROM ranked
+         |            WHERE rn <= 2 AND vec_id < 8),
+         |cand AS (
+         |  SELECT DISTINCT p.query_id, a.cand_id
+         |  FROM iprobes p JOIN iassign a ON a.cell = p.cell
+         |  WHERE a.cand_id <> p.query_id),
+         |adc AS (
+         |  SELECT cd.query_id, cd.cand_id, CAST(sum(l.d2) AS BIGINT) AS adc_d2
+         |  FROM cand cd
+         |  JOIN codes c ON c.vec_id = cd.cand_id
+         |  JOIN d2t l ON l.vec_id = cd.query_id AND l.m = c.m AND l.cell = c.code
+         |  GROUP BY 1, 2),
+         |top AS MATERIALIZED (
+         |  SELECT query_id, cand_id, adc_d2,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adc_d2, cand_id) AS BIGINT) AS rn
+         |  FROM adc QUALIFY rn <= 3),
+         |dots AS (
+         |  SELECT t.query_id, t.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS d
+         |  FROM top t
+         |  JOIN qe a ON a.vec_id = t.query_id
+         |  JOIN qe b ON b.vec_id = t.cand_id AND a.i = b.i
+         |  GROUP BY 1, 2)
+         |SELECT t.query_id, t.rn, t.cand_id, t.adc_d2,
+         |  CAST(qn.n2 + cn.n2 - 2 * d.d AS BIGINT) AS true_d2
+         |FROM top t
+         |JOIN dots d ON d.query_id = t.query_id AND d.cand_id = t.cand_id
+         |JOIN norms qn ON qn.vec_id = t.query_id
+         |JOIN norms cn ON cn.vec_id = t.cand_id
+         |ORDER BY t.query_id, t.rn""".stripMargin),
+    Declared("dedup_embedding_cosine", dedupEmbeddingCosine _,
+      s"""WITH $qElems,
+         |dots AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
+         |  FROM qe a JOIN qe b ON a.i = b.i
+         |  WHERE a.vec_id < 200 AND a.vec_id < b.vec_id
+         |  GROUP BY 1, 2),
+         |sc AS (
+         |  SELECT a_id, b_id,
+         |    CAST(dot AS DOUBLE) / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms na ON na.vec_id = a_id
+         |  JOIN norms nb ON nb.vec_id = b_id)
+         |SELECT a_id, b_id, cosine FROM sc
+         |WHERE cosine >= 0.4 ORDER BY a_id, b_id""".stripMargin),
+    Declared("dedup_semantic", dedupSemantic _,
+      s"""WITH $qElems,
+         |$cellRankSql,
+         |assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
+         |cand AS (
+         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.cell
+         |  FROM assign a JOIN assign b
+         |    ON a.cell = b.cell AND a.vec_id < b.vec_id),
+         |dots AS (
+         |  SELECT c.a_id, c.b_id, c.cell,
+         |    CAST(sum(x.v * y.v) AS BIGINT) AS dot
+         |  FROM cand c
+         |  JOIN qe x ON x.vec_id = c.a_id
+         |  JOIN qe y ON y.vec_id = c.b_id AND x.i = y.i
+         |  GROUP BY 1, 2, 3),
+         |scored AS (
+         |  SELECT a_id, b_id, cell,
+         |    CAST(dot AS DOUBLE) /
+         |      sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
+         |  FROM dots
+         |  JOIN norms na ON na.vec_id = a_id
+         |  JOIN norms nb ON nb.vec_id = b_id)
+         |SELECT b_id AS vec_id, cell, min(a_id) AS dup_of,
+         |  max(cosine) AS max_cosine, count(*) AS n_dups
+         |FROM scored WHERE cosine >= $SemTau
+         |GROUP BY 1, 2 ORDER BY vec_id""".stripMargin),
     // recall@3 of all three ANN methods vs the brute-force truth:
     // replays the already-green pipelines and counts set hits
-    "similarity_ann_recall" ->
+    Declared("similarity_ann_recall", annRecall _,
       s"""WITH $qElems,
          |$duckBuckets,
          |$cellRankSql,
@@ -1126,314 +1416,6 @@ object Similarity {
          |    CAST((SELECT count(*) FROM truth t JOIN lsh3 g
          |          ON t.query_id = g.query_id AND t.cand_id = g.cand_id)
          |      AS BIGINT))
-         |ORDER BY method""".stripMargin,
-    "dedup_semantic" ->
-      s"""WITH $qElems,
-         |$cellRankSql,
-         |assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-         |cand AS (
-         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.cell
-         |  FROM assign a JOIN assign b
-         |    ON a.cell = b.cell AND a.vec_id < b.vec_id),
-         |dots AS (
-         |  SELECT c.a_id, c.b_id, c.cell,
-         |    CAST(sum(x.v * y.v) AS BIGINT) AS dot
-         |  FROM cand c
-         |  JOIN qe x ON x.vec_id = c.a_id
-         |  JOIN qe y ON y.vec_id = c.b_id AND x.i = y.i
-         |  GROUP BY 1, 2, 3),
-         |scored AS (
-         |  SELECT a_id, b_id, cell,
-         |    CAST(dot AS DOUBLE) /
-         |      sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms na ON na.vec_id = a_id
-         |  JOIN norms nb ON nb.vec_id = b_id)
-         |SELECT b_id AS vec_id, cell, min(a_id) AS dup_of,
-         |  max(cosine) AS max_cosine, count(*) AS n_dups
-         |FROM scored WHERE cosine >= $SemTau
-         |GROUP BY 1, 2 ORDER BY vec_id""".stripMargin,
-    "similarity_cosine_topk" ->
-      s"""WITH $qElems,
-         |dots AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS cand_id,
-         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM qe a JOIN qe b ON a.i = b.i
-         |  WHERE a.vec_id < 8 AND a.vec_id <> b.vec_id
-         |  GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT query_id, cand_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms qn ON qn.vec_id = query_id
-         |  JOIN norms cn ON cn.vec_id = cand_id),
-         |ranked AS (
-         |  SELECT query_id, cand_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
-         |  FROM scored)
-         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
-         |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
-    // LSH-candidate mutual graph recall: scored (all-pairs cosines)
-    // serves both legs - the exact ranking and the LSH candidate subset
-    "similarity_knn_graph_lsh_recall" ->
-      s"""WITH $qElems,
-         |dots AS (
-         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM qe a JOIN qe b ON a.i = b.i
-         |  WHERE a.vec_id <> b.vec_id GROUP BY 1, 2),
-         |scored AS MATERIALIZED (
-         |  SELECT a_id, b_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(an.n2 AS DOUBLE) * CAST(bn.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms an ON an.vec_id = a_id
-         |  JOIN norms bn ON bn.vec_id = b_id),
-         |ke AS MATERIALIZED (
-         |  SELECT a_id, b_id,
-         |    row_number() OVER (PARTITION BY a_id ORDER BY cosine DESC, b_id ASC) AS rn
-         |  FROM scored QUALIFY rn <= 5),
-         |exact_edges AS MATERIALIZED (
-         |  SELECT x.a_id, x.b_id FROM ke x
-         |  JOIN ke y ON x.a_id = y.b_id AND x.b_id = y.a_id
-         |  WHERE x.a_id < x.b_id),
-         |$duckBuckets,
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
-         |  FROM buckets x JOIN buckets y
-         |    ON x.tbl = y.tbl AND x.bucket = y.bucket
-         |  WHERE x.vec_id <> y.vec_id),
-         |kl AS MATERIALIZED (
-         |  SELECT c.a_id, c.b_id,
-         |    row_number() OVER (PARTITION BY c.a_id
-         |      ORDER BY s.cosine DESC, c.b_id ASC) AS rn
-         |  FROM cand c JOIN scored s ON s.a_id = c.a_id AND s.b_id = c.b_id
-         |  QUALIFY rn <= 5),
-         |lsh_edges AS (
-         |  SELECT p.a_id, p.b_id FROM kl p
-         |  JOIN kl q ON p.a_id = q.b_id AND p.b_id = q.a_id
-         |  WHERE p.a_id < p.b_id)
-         |SELECT
-         |  (SELECT count(*) FROM exact_edges) AS n_exact,
-         |  (SELECT count(*) FROM lsh_edges l
-         |     JOIN exact_edges e ON l.a_id = e.a_id AND l.b_id = e.b_id) AS n_found,
-         |  CAST((SELECT count(*) FROM lsh_edges l
-         |     JOIN exact_edges e ON l.a_id = e.a_id AND l.b_id = e.b_id) AS DOUBLE) /
-         |  CAST((SELECT count(*) FROM exact_edges) AS DOUBLE) AS recall""".stripMargin,
-    // mutual 5-NN graph: all-pairs exact dots, rank per node, reversed
-    // self-join for mutuality. k is referenced twice -> MATERIALIZED.
-    "similarity_knn_graph" ->
-      s"""WITH $qElems,
-         |dots AS (
-         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM qe a JOIN qe b ON a.i = b.i
-         |  WHERE a.vec_id <> b.vec_id GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT a_id, b_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(an.n2 AS DOUBLE) * CAST(bn.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms an ON an.vec_id = a_id
-         |  JOIN norms bn ON bn.vec_id = b_id),
-         |k AS MATERIALIZED (
-         |  SELECT a_id, b_id, cosine,
-         |    row_number() OVER (PARTITION BY a_id ORDER BY cosine DESC, b_id ASC) AS rn
-         |  FROM scored QUALIFY rn <= 5)
-         |SELECT x.a_id, x.b_id, CAST(x.rn AS BIGINT) AS rank_ab,
-         |  CAST(y.rn AS BIGINT) AS rank_ba, x.cosine
-         |FROM k x JOIN k y ON x.a_id = y.b_id AND x.b_id = y.a_id
-         |WHERE x.a_id < x.b_id ORDER BY x.a_id, x.b_id""".stripMargin,
-    "similarity_lsh_buckets" ->
-      s"""WITH $qElems,
-         |$duckBuckets
-         |SELECT tbl, bucket, count(*) AS n_vectors, min(vec_id) AS min_vec_id
-         |FROM buckets GROUP BY tbl, bucket ORDER BY tbl, bucket""".stripMargin,
-    // 2 Lloyd iterations unrolled: exact-integer d², floor(Σv/n) update
-    "similarity_kmeans" ->
-      s"""WITH $qElems,
-         |seeds AS (SELECT vec_id AS cell, i AS dim, v AS cv FROM qe WHERE vec_id < 8),
-         |d1 AS (
-         |  SELECT x.vec_id, s.cell,
-         |    CAST(sum((x.v - s.cv) * (x.v - s.cv)) AS BIGINT) AS d2
-         |  FROM qe x JOIN seeds s ON x.i = s.dim GROUP BY 1, 2),
-         |a1 AS (
-         |  SELECT vec_id, cell FROM d1
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) = 1),
-         |c2 AS (
-         |  SELECT a1.cell, x.i AS dim,
-         |    CAST(floor(CAST(sum(x.v) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-         |  FROM qe x JOIN a1 ON x.vec_id = a1.vec_id GROUP BY 1, 2),
-         |dd2 AS (
-         |  SELECT x.vec_id, c.cell,
-         |    CAST(sum((x.v - c.cv) * (x.v - c.cv)) AS BIGINT) AS d2
-         |  FROM qe x JOIN c2 c ON x.i = c.dim GROUP BY 1, 2),
-         |a2 AS (
-         |  SELECT vec_id, cell, d2 FROM dd2
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) = 1)
-         |SELECT cell, count(*) AS n_vecs, CAST(sum(d2) AS BIGINT) AS inertia
-         |FROM a2 GROUP BY cell ORDER BY cell""".stripMargin,
-    // PQ: per-subspace codebooks (seed + 1 Lloyd round), codes by min
-    // (d2, cell), ADC = Σ_m LUT[m][code]; the query LUT is d2t's rows
-    // for query vecs (same x·x + c·c − 2x·c integers as the engine)
-    "similarity_pq_adc" ->
-      s"""WITH $qElems,
-         |$pqTrainSql,
-         |adc AS (
-         |  SELECT l.vec_id AS query_id, c.vec_id AS cand_id,
-         |    CAST(sum(l.d2) AS BIGINT) AS adc_d2
-         |  FROM codes c JOIN d2t l ON l.m = c.m AND l.cell = c.code
-         |  WHERE l.vec_id < 8 AND l.vec_id <> c.vec_id
-         |  GROUP BY 1, 2),
-         |top AS MATERIALIZED (
-         |  SELECT query_id, cand_id, adc_d2,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY adc_d2, cand_id) AS BIGINT) AS rn
-         |  FROM adc QUALIFY rn <= 3),
-         |dots AS (
-         |  SELECT t.query_id, t.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS d
-         |  FROM top t
-         |  JOIN qe a ON a.vec_id = t.query_id
-         |  JOIN qe b ON b.vec_id = t.cand_id AND a.i = b.i
-         |  GROUP BY 1, 2)
-         |SELECT t.query_id, t.rn, t.cand_id, t.adc_d2,
-         |  CAST(qn.n2 + cn.n2 - 2 * d.d AS BIGINT) AS true_d2
-         |FROM top t
-         |JOIN dots d ON d.query_id = t.query_id AND d.cand_id = t.cand_id
-         |JOIN norms qn ON qn.vec_id = t.query_id
-         |JOIN norms cn ON cn.vec_id = t.cand_id
-         |ORDER BY t.query_id, t.rn""".stripMargin,
-    // IVF+PQ composition: probe cells = the IVF ranking's top-2 per
-    // query, candidates = vectors assigned (rn=1) to a probed cell,
-    // ADC = sum_m d2t[query][m][code(cand, m)] over the restricted set,
-    // top-3 by (adc_d2, cand_id), exact re-rank via norms + dots
-    "similarity_ivfpq_ann" ->
-      s"""WITH $qElems,
-         |$cellRankSql,
-         |$pqTrainSql,
-         |iassign AS (SELECT vec_id AS cand_id, cell FROM ranked WHERE rn = 1),
-         |iprobes AS (SELECT vec_id AS query_id, cell FROM ranked
-         |            WHERE rn <= 2 AND vec_id < 8),
-         |cand AS (
-         |  SELECT DISTINCT p.query_id, a.cand_id
-         |  FROM iprobes p JOIN iassign a ON a.cell = p.cell
-         |  WHERE a.cand_id <> p.query_id),
-         |adc AS (
-         |  SELECT cd.query_id, cd.cand_id, CAST(sum(l.d2) AS BIGINT) AS adc_d2
-         |  FROM cand cd
-         |  JOIN codes c ON c.vec_id = cd.cand_id
-         |  JOIN d2t l ON l.vec_id = cd.query_id AND l.m = c.m AND l.cell = c.code
-         |  GROUP BY 1, 2),
-         |top AS MATERIALIZED (
-         |  SELECT query_id, cand_id, adc_d2,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY adc_d2, cand_id) AS BIGINT) AS rn
-         |  FROM adc QUALIFY rn <= 3),
-         |dots AS (
-         |  SELECT t.query_id, t.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS d
-         |  FROM top t
-         |  JOIN qe a ON a.vec_id = t.query_id
-         |  JOIN qe b ON b.vec_id = t.cand_id AND a.i = b.i
-         |  GROUP BY 1, 2)
-         |SELECT t.query_id, t.rn, t.cand_id, t.adc_d2,
-         |  CAST(qn.n2 + cn.n2 - 2 * d.d AS BIGINT) AS true_d2
-         |FROM top t
-         |JOIN dots d ON d.query_id = t.query_id AND d.cand_id = t.cand_id
-         |JOIN norms qn ON qn.vec_id = t.query_id
-         |JOIN norms cn ON cn.vec_id = t.cand_id
-         |ORDER BY t.query_id, t.rn""".stripMargin,
-    "similarity_lsh_ann" ->
-      s"""WITH $qElems,
-         |$duckBuckets,
-         |cand_pairs AS (
-         |  SELECT DISTINCT ba.vec_id AS query_id, bb.vec_id AS cand_id
-         |  FROM buckets ba
-         |  JOIN buckets bb ON ba.tbl = bb.tbl AND ba.bucket = bb.bucket
-         |  WHERE ba.vec_id < 8 AND ba.vec_id <> bb.vec_id),
-         |dots AS (
-         |  SELECT p.query_id, p.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM cand_pairs p
-         |  JOIN qe a ON a.vec_id = p.query_id
-         |  JOIN qe b ON b.vec_id = p.cand_id AND a.i = b.i
-         |  GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT query_id, cand_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms qn ON qn.vec_id = query_id
-         |  JOIN norms cn ON cn.vec_id = cand_id),
-         |ranked AS (
-         |  SELECT query_id, cand_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
-         |  FROM scored)
-         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
-         |FROM ranked WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin,
-    "similarity_ivf_ann" ->
-      s"""WITH $qElems,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |cellsums AS (
-         |  SELECT l.label AS cell, q.i, CAST(sum(q.v) AS BIGINT) AS s
-         |  FROM qe q JOIN lab l ON l.vec_id = q.vec_id
-         |  GROUP BY 1, 2),
-         |cellnorm AS (SELECT cell, CAST(sum(s * s) AS BIGINT) AS ss
-         |  FROM cellsums GROUP BY cell),
-         |aff AS (
-         |  SELECT q.vec_id, c.cell,
-         |    CAST(sum(q.v * c.s) AS BIGINT) AS dot
-         |  FROM qe q JOIN cellsums c ON q.i = c.i
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT a.vec_id, a.cell,
-         |    row_number() OVER (PARTITION BY a.vec_id
-         |      ORDER BY CAST(a.dot AS DOUBLE) / sqrt(CAST(n.ss AS DOUBLE)) DESC,
-         |               a.cell ASC) AS rn
-         |  FROM aff a JOIN cellnorm n ON n.cell = a.cell),
-         |assign AS (SELECT vec_id AS cand_id, cell FROM ranked WHERE rn = 1),
-         |probes AS (SELECT vec_id AS query_id, cell FROM ranked
-         |           WHERE rn <= 2 AND vec_id < 8),
-         |cand AS (
-         |  SELECT DISTINCT p.query_id, a.cand_id
-         |  FROM probes p JOIN assign a ON a.cell = p.cell
-         |  WHERE a.cand_id <> p.query_id),
-         |dots AS (
-         |  SELECT c.query_id, c.cand_id, CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM cand c
-         |  JOIN qe a ON a.vec_id = c.query_id
-         |  JOIN qe b ON b.vec_id = c.cand_id AND a.i = b.i
-         |  GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT query_id, cand_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(qn.n2 AS DOUBLE) * CAST(cn.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms qn ON qn.vec_id = query_id
-         |  JOIN norms cn ON cn.vec_id = cand_id),
-         |final AS (
-         |  SELECT query_id, cand_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rn
-         |  FROM scored)
-         |SELECT query_id, CAST(rn AS BIGINT) AS rn, cand_id, cosine
-         |FROM final WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin,
-    "dedup_embedding_cosine" ->
-      s"""WITH $qElems,
-         |dots AS (
-         |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |         CAST(sum(a.v * b.v) AS BIGINT) AS dot
-         |  FROM qe a JOIN qe b ON a.i = b.i
-         |  WHERE a.vec_id < 200 AND a.vec_id < b.vec_id
-         |  GROUP BY 1, 2),
-         |sc AS (
-         |  SELECT a_id, b_id,
-         |    CAST(dot AS DOUBLE) / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
-         |  FROM dots
-         |  JOIN norms na ON na.vec_id = a_id
-         |  JOIN norms nb ON nb.vec_id = b_id)
-         |SELECT a_id, b_id, cosine FROM sc
-         |WHERE cosine >= 0.4 ORDER BY a_id, b_id""".stripMargin,
-    "similarity_label_centroids" ->
-      """SELECT label, CAST(i - 1 AS BIGINT) AS dim,
-        |  CAST(sum(CAST(round(CAST(e AS DOUBLE) * 1000) AS BIGINT)) AS DOUBLE) /
-        |    CAST(count(*) * 1000 AS DOUBLE) AS centroid,
-        |  count(*) AS n_vectors
-        |FROM (SELECT label, unnest(embedding) AS e,
-        |             generate_subscripts(embedding, 1) AS i FROM embeddings) t
-        |GROUP BY label, i ORDER BY label, dim""".stripMargin,
+         |ORDER BY method""".stripMargin),
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 
 /** Skew-mitigation utilities for the 100 TB posture.
   *
@@ -80,15 +81,11 @@ object Skew {
       Seq("event_type"), "vc", saltBuckets = 16)
       .orderBy(col("event_type"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "skew_salted_agg" -> skewSaltedEvents _,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "skew_salted_agg" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("skew_salted_agg", skewSaltedEvents _,
       """SELECT event_type,
         |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_vc,
         |  count(*) AS n_rows
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Temporal join operators — as-of join and range join, the canonical
@@ -231,19 +232,10 @@ object Temporal {
       .orderBy(col("event_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_asof_nearest" -> eventsAsofNearest _,
-    "events_range_bucketed" -> eventsRangeBucketed _,
-    "events_asof_attribution" -> eventsAsofAttribution _,
-    "events_range_pairs" -> eventsRangePairs _,
-    "events_resample_locf" -> eventsResampleLocf _,
-    "events_resample_interp" -> eventsResampleInterp _,
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
     // nearest as-of: explicit candidate ranking (gap, view_us, view_id)
     // within the +-10min tolerance; LEFT JOIN keeps unmatched purchases
-    "events_asof_nearest" ->
+    Declared("events_asof_nearest", eventsAsofNearest _,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS us FROM events
         |  WHERE event_type = 'purchase'),
@@ -263,8 +255,8 @@ object Temporal {
         |SELECT p.event_id, p.user_id, p.us,
         |  b.view_id AS nearest_view_id, b.delta AS delta_us
         |FROM p LEFT JOIN best b ON b.event_id = p.event_id AND b.rn = 1
-        |ORDER BY p.event_id""".stripMargin,
-    "events_range_bucketed" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Declared("events_range_bucketed", eventsRangeBucketed _,
       """WITH p AS (
         |  SELECT event_id, epoch_us(ts) AS us FROM events
         |  WHERE event_type = 'purchase')
@@ -272,8 +264,8 @@ object Temporal {
         |  abs(a.us - b.us) AS gap_us
         |FROM p a JOIN p b
         |  ON a.event_id < b.event_id AND abs(a.us - b.us) <= 600000000
-        |ORDER BY a_id, b_id""".stripMargin,
-    "events_asof_attribution" ->
+        |ORDER BY a_id, b_id""".stripMargin),
+    Declared("events_asof_attribution", eventsAsofAttribution _,
       """WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS us FROM events)
         |SELECT p.event_id, p.user_id, p.us,
         |  (SELECT max(v.event_id) FROM e v
@@ -282,15 +274,15 @@ object Temporal {
         |                 WHERE v2.event_type = 'view' AND v2.user_id = p.user_id
         |                   AND v2.us <= p.us)) AS asof_view_id
         |FROM e p WHERE p.event_type = 'purchase'
-        |ORDER BY p.event_id""".stripMargin,
-    "events_range_pairs" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Declared("events_range_pairs", eventsRangePairs _,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)
         |SELECT a.user_id, count(*) AS n_close_pairs,
         |  CAST(min(abs(b.us - a.us)) AS BIGINT) AS min_gap_us
         |FROM e a JOIN e b ON a.user_id = b.user_id AND a.event_id < b.event_id
         |WHERE abs(b.us - a.us) <= 300000000
-        |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin,
-    "events_resample_locf" ->
+        |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin),
+    Declared("events_resample_locf", eventsResampleLocf _,
       """WITH e AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
         |           CAST(round(value * 100) AS BIGINT) AS vc FROM events),
         |h AS (SELECT event_type, hour, CAST(sum(vc) AS BIGINT) AS sum_vc,
@@ -307,8 +299,8 @@ object Temporal {
         |  last_value(sum_vc IGNORE NULLS) OVER (PARTITION BY event_type
         |    ORDER BY hour ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS locf_sum_vc
-        |FROM j ORDER BY event_type, hour""".stripMargin,
-    "events_resample_interp" ->
+        |FROM j ORDER BY event_type, hour""".stripMargin),
+    Declared("events_resample_interp", eventsResampleInterp _,
       """WITH e AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hour,
         |           CAST(round(value * 100) AS BIGINT) AS vc FROM events),
         |h AS (SELECT event_type, hour, CAST(sum(vc) AS BIGINT) AS sum_vc,
@@ -339,6 +331,6 @@ object Temporal {
         |          CAST(pv AS DOUBLE) + CAST(nv - pv AS DOUBLE) *
         |          CAST(hour - ph AS DOUBLE) / CAST(nh - ph AS DOUBLE)
         |        END, 4) AS interp_vc
-        |FROM w ORDER BY event_type, hour""".stripMargin,
+        |FROM w ORDER BY event_type, hour""".stripMargin),
   )
 }

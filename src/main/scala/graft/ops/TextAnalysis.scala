@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** Text-analysis operators over `documents`: quality scoring, token
@@ -108,7 +109,8 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
 
   /** Polynomial rolling hash over tokens, mod 1e9+7 (overflow-free in
-    * either ANSI mode). Spark-side only — DuckDB lacks a seeded reduce. */
+    * either ANSI mode). Spark-side only — DuckDB lacks a seeded reduce —
+    * so no declared query serves it; DedupSpec checks it is deterministic. */
   def rollingFingerprint(df: DataFrame): DataFrame =
     df.select(col("doc_id"),
       expr("""aggregate(split(text, ' '), 0L,
@@ -523,7 +525,7 @@ object TextAnalysis {
   }
 
   /** True iff [[textTfidfPairsRouted]] takes the exact route — exposed
-    * for the StressScale route probe. */
+    * for TextAnalysisSpec's route checks and the StressScale route probe. */
   private[graft] def tfidfRouteIsExact(s: SparkSession, dir: String): Boolean =
     tfidfGuardOk(s, dir, tfidfWeighted(s, dir))
 
@@ -1158,39 +1160,6 @@ object TextAnalysis {
           col("pass_stopwords") && col("pass_top2gram") && col("pass_dup5gram"))
       .orderBy(col("doc_id"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_winnow_fingerprints" -> textWinnowFingerprints _,
-    "text_ks_drift" -> textKsDrift _,
-    "text_gopher_rules" -> textGopherRules _,
-    "text_salience_monitor" -> textSalienceMonitor _,
-    "text_tvd_drift" -> textTvdDrift _,
-    "text_vocab_growth" -> textVocabGrowth _,
-    "text_tfidf_cosine_lsh" -> textTfidfCosineLsh _,
-    "text_tfidf_cosine_minhash" -> textTfidfCosineMinhash _,
-    "text_tfidf_pairs_routed" -> textTfidfPairsRouted _,
-    "text_bm25_topk" -> textBm25TopK _,
-    "text_tfidf_lsh_recall" -> textTfidfLshRecall _,
-    "text_freq_spectrum" -> textFreqSpectrum _,
-    "text_vocab_build" -> textVocabBuild _,
-    "text_simpson_diversity" -> textSimpsonDiversity _,
-    "text_pmi_collocations" -> textPmiCollocations _,
-    "text_sample_pergroup" -> textSamplePergroup _,
-    "text_chunk_overlap" -> textChunkOverlap _,
-    "text_decontaminate" -> textDecontaminate _,
-    "text_lm_quality" -> textLmQuality _,
-    "text_length_deciles" -> textLengthDeciles _,
-    "text_tfidf_topterms" -> textTfidfTopterms _,
-    "text_tfidf_cosine" -> textTfidfCosine _,
-    "text_word_count" -> textWordCount _,
-    "text_sample_stratified" -> textSampleStratified _,
-    "text_sample_hash" -> textSampleHash _,
-    "text_sample_weighted" -> textSampleWeighted _,
-    "text_quality" -> textQuality _,
-    "text_token_count" -> textTokenCount _,
-    "text_langid" -> textLangid _,
-    "text_fingerprint" -> textFingerprint _,
-  )
-
   /** Shared oracle CTE block for the tf-idf LSH path: salient weights
     * (w MATERIALIZED — referenced by buckets, verify, and norms), SRP
     * buckets from the md5-term-hash LCG planes, candidate pairs, and
@@ -1277,371 +1246,61 @@ object TextAnalysis {
         |  JOIN norms nb ON nb.doc_id = b_id)
         |WHERE cosine >= 0.5 ORDER BY a_id, b_id""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    // same global df·10 ≤ N cap as every tf-idf oracle; exact integers
-    "text_salience_monitor" ->
-      """WITH tf AS MATERIALIZED (
-        |  SELECT source, doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT source, doc_id, unnest(string_split(text, ' ')) AS term
-        |        FROM documents) t
-        |  GROUP BY 1, 2, 3),
-        |n AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n_all FROM documents),
-        |df AS MATERIALIZED (
-        |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-        |sal AS (
-        |  SELECT tf.source, tf.term FROM tf JOIN df USING (term), n
-        |  WHERE df.df * 10 <= n.n_all),
-        |st AS (SELECT source, term, CAST(count(*) AS BIGINT) AS p
-        |       FROM sal GROUP BY 1, 2),
-        |src AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-        |        FROM documents GROUP BY 1),
-        |per AS (
-        |  SELECT src.source, src.n_docs,
-        |    CAST(count(st.term) AS BIGINT) AS n_salient_terms,
-        |    CAST(coalesce(sum(st.p), 0) AS BIGINT) AS posting_volume,
-        |    CAST(coalesce(sum(st.p * st.p), 0) AS BIGINT) AS join_volume
-        |  FROM src LEFT JOIN st USING (source) GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT '__all__' AS source, (SELECT n_all FROM n) AS n_docs,
-        |    CAST(count(*) AS BIGINT) AS n_salient_terms,
-        |    CAST(coalesce(sum(df.df), 0) AS BIGINT) AS posting_volume,
-        |    CAST(coalesce(sum(df.df * df.df), 0) AS BIGINT) AS join_volume
-        |  FROM df, n WHERE df.df * 10 <= n.n_all)
-        |SELECT source, n_docs, n_salient_terms, posting_volume, join_volume,
-        |  join_volume <= n_docs * 100 AS guard_ok
-        |FROM (SELECT * FROM per UNION ALL SELECT * FROM tot)
-        |ORDER BY source""".stripMargin,
-    "text_tfidf_cosine_lsh" ->
-      s"""WITH $tfidfLshCte
-         |SELECT a_id, b_id, cosine FROM lshpairs
-         |ORDER BY a_id, b_id""".stripMargin,
-    "text_tfidf_lsh_recall" ->
-      s"""WITH $tfidfLshCte,
-         |edots AS (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |    CAST(sum(a.w * b.w) AS BIGINT) AS dot
-         |  FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |epairs AS (
-         |  SELECT a_id, b_id FROM (
-         |    SELECT d.a_id, d.b_id,
-         |      CAST(d.dot AS DOUBLE) /
-         |        sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
-         |    FROM edots d
-         |    JOIN norms na ON na.doc_id = d.a_id
-         |    JOIN norms nb ON nb.doc_id = d.b_id)
-         |  WHERE cosine >= 0.5)
-         |SELECT
-         |  CAST((SELECT count(*) FROM epairs) AS BIGINT) AS n_exact,
-         |  CAST((SELECT count(*) FROM lshpairs) AS BIGINT) AS n_found,
-         |  CAST((SELECT count(*) FROM lshpairs) AS DOUBLE) /
-         |    CAST((SELECT count(*) FROM epairs) AS DOUBLE) AS recall""".stripMargin,
-    "text_tvd_drift" ->
-      """WITH tok AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
-        |per_src AS (SELECT source, token, count(*) AS c_s FROM tok GROUP BY 1, 2),
-        |corpus AS (SELECT token, count(*) AS c_t FROM tok GROUP BY 1),
-        |ns AS (SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM per_src GROUP BY 1),
-        |n AS (SELECT CAST(sum(n_s) AS BIGINT) AS n_total FROM ns),
-        |terms AS (
-        |  SELECT p.source, ns.n_s AS n_s, n.n_total - ns.n_s AS n_r,
-        |    CAST(sum(abs(p.c_s * (n.n_total - ns.n_s) - (c.c_t - p.c_s) * ns.n_s))
-        |      AS BIGINT) AS present_term,
-        |    CAST(sum(c.c_t - p.c_s) AS BIGINT) AS rest_mass
-        |  FROM per_src p
-        |  JOIN corpus c USING (token)
-        |  JOIN ns USING (source)
-        |  CROSS JOIN n
-        |  GROUP BY 1, 2, 3)
-        |SELECT source, n_s AS n_tokens_src, n_r AS n_tokens_rest,
-        |  CAST(present_term + n_s * (n_r - rest_mass) AS DOUBLE) /
-        |    (2.0 * CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE)) AS tvd
-        |FROM terms ORDER BY source""".stripMargin,
-    "text_vocab_growth" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |nt AS (
-        |  SELECT first_doc // 50 AS bucket, count(*) AS n_new_types FROM (
-        |    SELECT token, min(doc_id) AS first_doc FROM tok GROUP BY token)
-        |  GROUP BY 1),
-        |vol AS (
-        |  SELECT doc_id // 50 AS bucket, count(*) AS n_tokens,
-        |         count(DISTINCT doc_id) AS n_docs
-        |  FROM tok GROUP BY 1)
-        |SELECT v.bucket, v.n_docs, v.n_tokens,
-        |  COALESCE(nt.n_new_types, 0) AS n_new_types,
-        |  CAST(sum(v.n_tokens) OVER (ORDER BY v.bucket) AS BIGINT) AS cum_tokens,
-        |  CAST(sum(COALESCE(nt.n_new_types, 0)) OVER (ORDER BY v.bucket)
-        |    AS BIGINT) AS cum_types
-        |FROM vol v LEFT JOIN nt ON nt.bucket = v.bucket
-        |ORDER BY v.bucket""".stripMargin,
-    "text_freq_spectrum" ->
-      """WITH c AS (
-        |  SELECT token, count(*) AS r FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |  GROUP BY token),
-        |sp AS (SELECT r, count(*) AS n_types FROM c GROUP BY r)
-        |SELECT r, n_types, r * n_types AS total_tokens,
-        |  CASE WHEN lead(r) OVER (ORDER BY r) = r + 1
-        |    THEN CAST(r + 1 AS DOUBLE) *
-        |         CAST(lead(n_types) OVER (ORDER BY r) AS DOUBLE) /
-        |         CAST(n_types AS DOUBLE)
-        |  END AS gt_r_star
-        |FROM sp ORDER BY r""".stripMargin,
-    "text_vocab_build" ->
-      """WITH c AS (
-        |  SELECT token, count(*) AS n FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |  GROUP BY token),
-        |top AS (SELECT token, n FROM c ORDER BY n DESC, token LIMIT 1000)
-        |SELECT CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT)
-        |    AS vocab_id,
-        |  token, n
-        |FROM top ORDER BY vocab_id""".stripMargin,
-    "text_simpson_diversity" ->
-      """WITH tc AS (
-        |  SELECT doc_id, tok, count(*) AS c FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents)
-        |  GROUP BY doc_id, tok),
-        |agg AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-        |    CAST(sum(c * (c - 1)) AS BIGINT) AS collisions
-        |  FROM tc GROUP BY doc_id)
-        |SELECT doc_id, n, collisions,
-        |  CAST(collisions AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)
-        |    AS simpson_index
-        |FROM agg WHERE n >= 2 ORDER BY doc_id""".stripMargin,
-    "text_pmi_collocations" ->
-      """WITH w AS (SELECT string_split(text, ' ') AS words FROM documents),
-        |toks AS (SELECT unnest(words) AS w FROM w),
-        |uni AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
-        |n AS (SELECT sum(c) AS n FROM uni),
-        |bgx AS (
-        |  SELECT unnest([array_to_string(words[i:i+1], ' ')
-        |                 FOR i IN range(1, len(words))]) AS bigram
-        |  FROM w WHERE len(words) >= 2),
-        |bgc AS (
-        |  SELECT bigram, count(*) AS c_xy FROM bgx GROUP BY bigram
-        |  HAVING count(*) >= 5),
-        |parts AS (
-        |  SELECT bigram, c_xy,
-        |    string_split(bigram, ' ')[1] AS w1,
-        |    string_split(bigram, ' ')[2] AS w2
-        |  FROM bgc)
-        |SELECT bigram, c_xy,
-        |  CAST(c_xy * n.n AS DOUBLE) / CAST(u1.c * u2.c AS DOUBLE) AS lift
-        |FROM parts CROSS JOIN n
-        |JOIN uni u1 ON parts.w1 = u1.w
-        |JOIN uni u2 ON parts.w2 = u2.w
-        |ORDER BY lift DESC, bigram LIMIT 50""".stripMargin,
-    "text_sample_pergroup" ->
-      """SELECT lang, doc_id, rk FROM (
-        |  SELECT lang, doc_id,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 20 ORDER BY lang, rk""".stripMargin,
-    "text_chunk_overlap" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, string_split(text, ' ') AS toks,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id, toks, n,
-         |    unnest(range(0, n, $ChunkStride)) AS chunk_start
-         |  FROM d WHERE n >= 1)
-         |SELECT doc_id,
-         |  CAST(chunk_start // $ChunkStride AS BIGINT) AS chunk_idx,
-         |  chunk_start,
-         |  CAST(least($ChunkSize, n - chunk_start) AS BIGINT) AS chunk_tokens,
-         |  ('0x' || substr(md5(array_to_string(
-         |     toks[CAST(chunk_start + 1 AS INT):CAST(chunk_start + $ChunkSize AS INT)],
-         |     ' ')), 1, 8))::BIGINT AS chunk_sig
-         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-    "text_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(words[i:i+2], ' ')
-        |                   FOR i IN range(1, len(words) - 1)]) AS shingles
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |  WHERE len(words) >= 3),
-        |hits AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_intersect(shingles,
-        |      ['key agg row', 'batch window spark', 'the row a',
-        |       'data query small', 'join batch table', 'spark order data'])) AS BIGINT)
-        |      AS n_hits
-        |  FROM sh)
-        |SELECT doc_id, n_hits FROM hits WHERE n_hits >= 1 ORDER BY doc_id""".stripMargin,
-    "text_lm_quality" ->
-      """WITH bg AS (
-        |  SELECT doc_id,
-        |    [array_to_string(words[i:i+1], ' ') FOR i IN range(1, len(words))] AS bigrams
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-        |  WHERE len(words) >= 2),
-        |ex AS (SELECT doc_id, unnest(bigrams) AS bigram FROM bg),
-        |vocab AS (
-        |  SELECT bigram FROM (
-        |    SELECT bigram, count(*) AS c FROM ex GROUP BY bigram
-        |    ORDER BY c DESC, bigram LIMIT 100)),
-        |per AS (
-        |  SELECT ex.doc_id, count(*) AS n_bigrams,
-        |    CAST(sum(CASE WHEN vocab.bigram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-        |  FROM ex LEFT JOIN vocab ON ex.bigram = vocab.bigram
-        |  GROUP BY ex.doc_id)
-        |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, n_hits,
-        |  CAST(n_hits AS DOUBLE) / CAST(n_bigrams AS DOUBLE) AS hit_rate
-        |FROM per ORDER BY doc_id""".stripMargin,
-    "text_length_deciles" ->
-      """WITH t AS (
-        |  SELECT lang, n_chars,
-        |    ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS decile
-        |  FROM documents)
-        |SELECT lang, CAST(decile AS BIGINT) AS decile, count(*) AS n_docs,
-        |  CAST(min(n_chars) AS BIGINT) AS min_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM t GROUP BY lang, decile ORDER BY lang, decile""".stripMargin,
-    "text_tfidf_topterms" ->
-      """WITH n AS (SELECT count(*) AS n_docs FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |        FROM documents) t
-        |  GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM tf GROUP BY term),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |    (tf.tf * n.n_docs * 1000000) // df.df AS score_q
-        |  FROM tf JOIN df ON tf.term = df.term, n),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, score_q,
-        |    CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score_q DESC, term ASC) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, rnk, term, tf, df, score_q
-        |FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "text_word_count" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-        |GROUP BY token ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
-    // integer tf-idf weights (same monotone idf transform as topterms)
-    // make dots/norms exact Longs; cosine is one IEEE division
-    "text_tfidf_cosine" -> TfidfCosineExactSql,
-    // the fixture passes the salience guard, so the routed query's
-    // contract THERE is the exact posting join bit-for-bit; the LSH
-    // fallback is exercised by StressScale's route probe on the
-    // vocabulary-drift corpus (where no sub-quadratic oracle exists)
-    "text_tfidf_pairs_routed" -> TfidfCosineExactSql,
-    // quantized BM25: every arithmetic step is a Long floor-div (// in
-    // DuckDB ≡ div in Spark) and the per-doc sum is exact-integer
-    "text_bm25_topk" ->
-      """WITH docs AS (SELECT * FROM documents),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |               CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS l
-        |        FROM docs),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS f
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM docs) t
-        |  GROUP BY 1, 2),
-        |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-        |       FROM docs),
-        |q AS (SELECT doc_id AS query_id,
-        |             unnest(list_distinct(string_split(text, ' ')[1:5])) AS term
-        |      FROM docs WHERE doc_id < 3),
-        |scored AS (
-        |  SELECT q.query_id, tf.doc_id,
-        |    CAST(sum((((tot.n * 1000) // df.df) * tf.f * 2200)
-        |        // ((1000 * tf.f) + 300 + ((900 * dl.dl * tot.n) // tot.l)))
-        |      AS BIGINT) AS score
-        |  FROM q JOIN tf USING (term) JOIN df USING (term)
-        |       JOIN dl ON dl.doc_id = tf.doc_id, tot
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rnk, doc_id, score FROM (
-        |  SELECT query_id, doc_id, score,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, doc_id) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin,
-    // MinHash-banded candidates + the SAME exact verify reproduce the
-    // full exact pair set (dedup_minhash_lsh discipline: verified-subset
-    // + ~1e-9 false-negative odds ⇒ the exact SQL IS the oracle)
-    "text_tfidf_cosine_minhash" -> TfidfCosineExactSql,
-    // text_sample_stratified: the sampled SET is engine-RNG-specific, but
-    // the per-stratum fraction verdict is oracle-checkable
-    "text_sample_stratified" ->
-      """SELECT lang, count(*) AS n_total, true AS frac_ok
-        |FROM documents WHERE lang IN ('en', 'fr', 'es', 'de', 'zh')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same LCG coin as text_sample_hash -> DuckDB replays the exact
-    // exponential-race selection (keys differ at the top-50 boundary by
-    // ~1/n relative gaps, far beyond any 1-ulp libm ln() divergence)
-    "text_sample_weighted" ->
-      """SELECT doc_id, lang, n_chars FROM (
-        |  SELECT doc_id, lang, n_chars,
-        |    -ln((((doc_id * 1103515245 + 12345) % 2147483647) + 1)
-        |        / 2147483648.0) / n_chars AS k
-        |  FROM documents ORDER BY k LIMIT 50)
-        |ORDER BY doc_id""".stripMargin,
-    "text_sample_hash" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE ((doc_id * 1103515245 + 12345) % 2147483647) % 100 <
-        |      (CASE WHEN lang IN ('en', 'fr') THEN 50 ELSE 20 END)
-        |ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
-      s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-         |f AS (SELECT doc_id, lang,
-         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-         |  CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS chars_in_tokens,
-         |  CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in'], t))) AS BIGINT) AS n_stopwords
-         |FROM t)
-         |SELECT doc_id, lang, n_tokens, n_distinct, chars_in_tokens, n_stopwords,
-         |  CAST(chars_in_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_token_len,
-         |  CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS distinct_ratio,
-         |  CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
-         |  (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) * 50.0 +
-         |  (CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE)) * 30.0 +
-         |  (CASE WHEN n_tokens >= 50 AND n_tokens <= 2000 THEN 20.0 ELSE 0.0 END) AS quality_score
-         |FROM f ORDER BY doc_id""".stripMargin,
-    "text_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-        |  CAST(list_sum(list_transform(string_split(text, ' '),
-        |       t -> (length(t) + 3) // 4)) AS BIGINT) AS bpe_est_tokens,
-        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+', 0)) AS BIGINT) AS regex_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_langid" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |  CAST(len(list_filter(toks, x -> list_contains(['the','a','and','of'], x))) AS BIGINT) AS score_en,
-        |  CAST(len(list_filter(toks, x -> list_contains(['el','la','los','que'], x))) AS BIGINT) AS score_es,
-        |  CAST(len(list_filter(toks, x -> list_contains(['der','die','das','und'], x))) AS BIGINT) AS score_de,
-        |  CAST(len(list_filter(toks, x -> list_contains(['le','les','des','une'], x))) AS BIGINT) AS score_fr,
-        |  CAST(len(list_filter(toks, x -> list_contains(['的','是','了','和'], x))) AS BIGINT) AS score_zh
-        |FROM t),
-        |p AS (SELECT lang,
-        |  CASE
-        |    WHEN greatest(score_en, score_es, score_de, score_fr, score_zh) = 0 THEN 'und'
-        |    WHEN score_en = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'en'
-        |    WHEN score_es = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'es'
-        |    WHEN score_de = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'de'
-        |    WHEN score_fr = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'fr'
-        |    ELSE 'zh' END AS predicted
-        |FROM s)
-        |SELECT lang, predicted, count(*) AS n_docs FROM p
-        |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
+  val declared: Seq[Declared] = Seq(
+    // winnowing: same (hash,pos)->single-long encoding, plain window min,
+    // distinct, decode. 40-bit md5-prefix hash, 2^20 position space.
+    Declared("text_winnow_fingerprints", textWinnowFingerprints _,
+      """WITH w AS (
+        |  SELECT doc_id, string_split(text, ' ') AS words FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 3),
+        |g AS (
+        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+        |    ('0x' || substr(md5(array_to_string(words[i:i+2], ' ')), 1, 10))::BIGINT
+        |      * 1048576 + (1048575 - CAST(i - 1 AS BIGINT)) AS key
+        |  FROM (SELECT doc_id, words,
+        |               unnest(range(1, len(words) - 1)) AS i FROM w)),
+        |m AS (
+        |  SELECT doc_id, pos,
+        |    min(key) OVER (PARTITION BY doc_id ORDER BY pos
+        |                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mk
+        |  FROM g),
+        |sel AS (SELECT DISTINCT doc_id, mk FROM m WHERE pos >= 3)
+        |SELECT doc_id, 1048575 - (mk % 1048576) AS pos, mk // 1048576 AS fp
+        |FROM sel ORDER BY doc_id, pos""".stripMargin),
+    // KS drift: (source x n_chars) histogram, per-source cumulative CDF
+    // forward-filled over the union value grid, pairwise max gap.
+    // hist/filled are each referenced more than once -> MATERIALIZED.
+    Declared("text_ks_drift", textKsDrift _,
+      """WITH hist AS MATERIALIZED (
+        |  SELECT source, n_chars, count(*) AS c FROM documents GROUP BY 1, 2),
+        |srcn AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM hist GROUP BY 1),
+        |cum AS (
+        |  SELECT source, n_chars,
+        |    sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum
+        |  FROM hist),
+        |grid AS (
+        |  SELECT v.n_chars, s.source, s.n
+        |  FROM (SELECT DISTINCT n_chars FROM hist) v CROSS JOIN srcn s),
+        |filled AS MATERIALIZED (
+        |  SELECT g.source, g.n_chars,
+        |    CAST(coalesce(max(cum.cum) OVER (PARTITION BY g.source
+        |      ORDER BY g.n_chars), 0) AS DOUBLE) / CAST(g.n AS DOUBLE) AS cdf,
+        |    g.n
+        |  FROM grid g LEFT JOIN cum
+        |    ON cum.source = g.source AND cum.n_chars = g.n_chars)
+        |SELECT a.source AS source_a, b.source AS source_b,
+        |  a.n AS n_a, b.n AS n_b,
+        |  max(abs(a.cdf - b.cdf)) AS ks,
+        |  max(abs(a.cdf - b.cdf)) > 1.36 * sqrt(CAST(a.n + b.n AS DOUBLE) /
+        |    CAST(a.n * b.n AS DOUBLE)) AS drift
+        |FROM filled a JOIN filled b ON a.n_chars = b.n_chars
+        |WHERE a.source < b.source
+        |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2""".stripMargin),
     // Gopher rule bundle: per-word rules from one projection; top-2-gram
     // and duplicate-5-gram char mass from per-doc gram counts. w feeds
     // three consumers -> MATERIALIZED. DuckDB allows lateral alias reuse,
     // so `keep` references the pass_* aliases directly.
-    "text_gopher_rules" ->
+    Declared("text_gopher_rules", textGopherRules _,
       """WITH w AS MATERIALIZED (
         |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_raw,
         |         string_split(text, ' ') AS toks FROM documents),
@@ -1691,55 +1350,365 @@ object TextAnalysis {
         |FROM base b
         |LEFT JOIN top2 USING (doc_id)
         |LEFT JOIN dup5 USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    // KS drift: (source x n_chars) histogram, per-source cumulative CDF
-    // forward-filled over the union value grid, pairwise max gap.
-    // hist/filled are each referenced more than once -> MATERIALIZED.
-    "text_ks_drift" ->
-      """WITH hist AS MATERIALIZED (
-        |  SELECT source, n_chars, count(*) AS c FROM documents GROUP BY 1, 2),
-        |srcn AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM hist GROUP BY 1),
-        |cum AS (
-        |  SELECT source, n_chars,
-        |    sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum
-        |  FROM hist),
-        |grid AS (
-        |  SELECT v.n_chars, s.source, s.n
-        |  FROM (SELECT DISTINCT n_chars FROM hist) v CROSS JOIN srcn s),
-        |filled AS MATERIALIZED (
-        |  SELECT g.source, g.n_chars,
-        |    CAST(coalesce(max(cum.cum) OVER (PARTITION BY g.source
-        |      ORDER BY g.n_chars), 0) AS DOUBLE) / CAST(g.n AS DOUBLE) AS cdf,
-        |    g.n
-        |  FROM grid g LEFT JOIN cum
-        |    ON cum.source = g.source AND cum.n_chars = g.n_chars)
-        |SELECT a.source AS source_a, b.source AS source_b,
-        |  a.n AS n_a, b.n AS n_b,
-        |  max(abs(a.cdf - b.cdf)) AS ks,
-        |  max(abs(a.cdf - b.cdf)) > 1.36 * sqrt(CAST(a.n + b.n AS DOUBLE) /
-        |    CAST(a.n * b.n AS DOUBLE)) AS drift
-        |FROM filled a JOIN filled b ON a.n_chars = b.n_chars
-        |WHERE a.source < b.source
-        |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2""".stripMargin,
-    // winnowing: same (hash,pos)->single-long encoding, plain window min,
-    // distinct, decode. 40-bit md5-prefix hash, 2^20 position space.
-    "text_winnow_fingerprints" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 3),
-        |g AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |    ('0x' || substr(md5(array_to_string(words[i:i+2], ' ')), 1, 10))::BIGINT
-        |      * 1048576 + (1048575 - CAST(i - 1 AS BIGINT)) AS key
-        |  FROM (SELECT doc_id, words,
-        |               unnest(range(1, len(words) - 1)) AS i FROM w)),
-        |m AS (
-        |  SELECT doc_id, pos,
-        |    min(key) OVER (PARTITION BY doc_id ORDER BY pos
-        |                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mk
-        |  FROM g),
-        |sel AS (SELECT DISTINCT doc_id, mk FROM m WHERE pos >= 3)
-        |SELECT doc_id, 1048575 - (mk % 1048576) AS pos, mk // 1048576 AS fp
-        |FROM sel ORDER BY doc_id, pos""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin),
+    // same global df·10 ≤ N cap as every tf-idf oracle; exact integers
+    Declared("text_salience_monitor", textSalienceMonitor _,
+      """WITH tf AS MATERIALIZED (
+        |  SELECT source, doc_id, term, CAST(count(*) AS BIGINT) AS tf
+        |  FROM (SELECT source, doc_id, unnest(string_split(text, ' ')) AS term
+        |        FROM documents) t
+        |  GROUP BY 1, 2, 3),
+        |n AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n_all FROM documents),
+        |df AS MATERIALIZED (
+        |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+        |sal AS (
+        |  SELECT tf.source, tf.term FROM tf JOIN df USING (term), n
+        |  WHERE df.df * 10 <= n.n_all),
+        |st AS (SELECT source, term, CAST(count(*) AS BIGINT) AS p
+        |       FROM sal GROUP BY 1, 2),
+        |src AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+        |        FROM documents GROUP BY 1),
+        |per AS (
+        |  SELECT src.source, src.n_docs,
+        |    CAST(count(st.term) AS BIGINT) AS n_salient_terms,
+        |    CAST(coalesce(sum(st.p), 0) AS BIGINT) AS posting_volume,
+        |    CAST(coalesce(sum(st.p * st.p), 0) AS BIGINT) AS join_volume
+        |  FROM src LEFT JOIN st USING (source) GROUP BY 1, 2),
+        |tot AS (
+        |  SELECT '__all__' AS source, (SELECT n_all FROM n) AS n_docs,
+        |    CAST(count(*) AS BIGINT) AS n_salient_terms,
+        |    CAST(coalesce(sum(df.df), 0) AS BIGINT) AS posting_volume,
+        |    CAST(coalesce(sum(df.df * df.df), 0) AS BIGINT) AS join_volume
+        |  FROM df, n WHERE df.df * 10 <= n.n_all)
+        |SELECT source, n_docs, n_salient_terms, posting_volume, join_volume,
+        |  join_volume <= n_docs * 100 AS guard_ok
+        |FROM (SELECT * FROM per UNION ALL SELECT * FROM tot)
+        |ORDER BY source""".stripMargin),
+    Declared("text_tvd_drift", textTvdDrift _,
+      """WITH tok AS (
+        |  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
+        |per_src AS (SELECT source, token, count(*) AS c_s FROM tok GROUP BY 1, 2),
+        |corpus AS (SELECT token, count(*) AS c_t FROM tok GROUP BY 1),
+        |ns AS (SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM per_src GROUP BY 1),
+        |n AS (SELECT CAST(sum(n_s) AS BIGINT) AS n_total FROM ns),
+        |terms AS (
+        |  SELECT p.source, ns.n_s AS n_s, n.n_total - ns.n_s AS n_r,
+        |    CAST(sum(abs(p.c_s * (n.n_total - ns.n_s) - (c.c_t - p.c_s) * ns.n_s))
+        |      AS BIGINT) AS present_term,
+        |    CAST(sum(c.c_t - p.c_s) AS BIGINT) AS rest_mass
+        |  FROM per_src p
+        |  JOIN corpus c USING (token)
+        |  JOIN ns USING (source)
+        |  CROSS JOIN n
+        |  GROUP BY 1, 2, 3)
+        |SELECT source, n_s AS n_tokens_src, n_r AS n_tokens_rest,
+        |  CAST(present_term + n_s * (n_r - rest_mass) AS DOUBLE) /
+        |    (2.0 * CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE)) AS tvd
+        |FROM terms ORDER BY source""".stripMargin),
+    Declared("text_vocab_growth", textVocabGrowth _,
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+        |nt AS (
+        |  SELECT first_doc // 50 AS bucket, count(*) AS n_new_types FROM (
+        |    SELECT token, min(doc_id) AS first_doc FROM tok GROUP BY token)
+        |  GROUP BY 1),
+        |vol AS (
+        |  SELECT doc_id // 50 AS bucket, count(*) AS n_tokens,
+        |         count(DISTINCT doc_id) AS n_docs
+        |  FROM tok GROUP BY 1)
+        |SELECT v.bucket, v.n_docs, v.n_tokens,
+        |  COALESCE(nt.n_new_types, 0) AS n_new_types,
+        |  CAST(sum(v.n_tokens) OVER (ORDER BY v.bucket) AS BIGINT) AS cum_tokens,
+        |  CAST(sum(COALESCE(nt.n_new_types, 0)) OVER (ORDER BY v.bucket)
+        |    AS BIGINT) AS cum_types
+        |FROM vol v LEFT JOIN nt ON nt.bucket = v.bucket
+        |ORDER BY v.bucket""".stripMargin),
+    Declared("text_tfidf_cosine_lsh", textTfidfCosineLsh _,
+      s"""WITH $tfidfLshCte
+         |SELECT a_id, b_id, cosine FROM lshpairs
+         |ORDER BY a_id, b_id""".stripMargin),
+    // MinHash-banded candidates + the SAME exact verify reproduce the
+    // full exact pair set (dedup_minhash_lsh discipline: verified-subset
+    // + ~1e-9 false-negative odds ⇒ the exact SQL IS the oracle)
+    Declared("text_tfidf_cosine_minhash", textTfidfCosineMinhash _, TfidfCosineExactSql),
+    // the fixture passes the salience guard, so the routed query's
+    // contract THERE is the exact posting join bit-for-bit; the LSH
+    // fallback is exercised by StressScale's route probe on the
+    // vocabulary-drift corpus (where no sub-quadratic oracle exists)
+    Declared("text_tfidf_pairs_routed", textTfidfPairsRouted _, TfidfCosineExactSql),
+    // quantized BM25: every arithmetic step is a Long floor-div (// in
+    // DuckDB ≡ div in Spark) and the per-doc sum is exact-integer
+    Declared("text_bm25_topk", textBm25TopK _,
+      """WITH docs AS (SELECT * FROM documents),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |               CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS l
+        |        FROM docs),
+        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS f
+        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM docs) t
+        |  GROUP BY 1, 2),
+        |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
+        |       FROM docs),
+        |q AS (SELECT doc_id AS query_id,
+        |             unnest(list_distinct(string_split(text, ' ')[1:5])) AS term
+        |      FROM docs WHERE doc_id < 3),
+        |scored AS (
+        |  SELECT q.query_id, tf.doc_id,
+        |    CAST(sum((((tot.n * 1000) // df.df) * tf.f * 2200)
+        |        // ((1000 * tf.f) + 300 + ((900 * dl.dl * tot.n) // tot.l)))
+        |      AS BIGINT) AS score
+        |  FROM q JOIN tf USING (term) JOIN df USING (term)
+        |       JOIN dl ON dl.doc_id = tf.doc_id, tot
+        |  GROUP BY 1, 2)
+        |SELECT query_id, rnk, doc_id, score FROM (
+        |  SELECT query_id, doc_id, score,
+        |    row_number() OVER (PARTITION BY query_id
+        |                       ORDER BY score DESC, doc_id) AS rnk
+        |  FROM scored)
+        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin),
+    Declared("text_tfidf_lsh_recall", textTfidfLshRecall _,
+      s"""WITH $tfidfLshCte,
+         |edots AS (
+         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+         |    CAST(sum(a.w * b.w) AS BIGINT) AS dot
+         |  FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2),
+         |epairs AS (
+         |  SELECT a_id, b_id FROM (
+         |    SELECT d.a_id, d.b_id,
+         |      CAST(d.dot AS DOUBLE) /
+         |        sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE)) AS cosine
+         |    FROM edots d
+         |    JOIN norms na ON na.doc_id = d.a_id
+         |    JOIN norms nb ON nb.doc_id = d.b_id)
+         |  WHERE cosine >= 0.5)
+         |SELECT
+         |  CAST((SELECT count(*) FROM epairs) AS BIGINT) AS n_exact,
+         |  CAST((SELECT count(*) FROM lshpairs) AS BIGINT) AS n_found,
+         |  CAST((SELECT count(*) FROM lshpairs) AS DOUBLE) /
+         |    CAST((SELECT count(*) FROM epairs) AS DOUBLE) AS recall""".stripMargin),
+    Declared("text_freq_spectrum", textFreqSpectrum _,
+      """WITH c AS (
+        |  SELECT token, count(*) AS r FROM (
+        |    SELECT unnest(string_split(text, ' ')) AS token FROM documents)
+        |  GROUP BY token),
+        |sp AS (SELECT r, count(*) AS n_types FROM c GROUP BY r)
+        |SELECT r, n_types, r * n_types AS total_tokens,
+        |  CASE WHEN lead(r) OVER (ORDER BY r) = r + 1
+        |    THEN CAST(r + 1 AS DOUBLE) *
+        |         CAST(lead(n_types) OVER (ORDER BY r) AS DOUBLE) /
+        |         CAST(n_types AS DOUBLE)
+        |  END AS gt_r_star
+        |FROM sp ORDER BY r""".stripMargin),
+    Declared("text_vocab_build", textVocabBuild _,
+      """WITH c AS (
+        |  SELECT token, count(*) AS n FROM (
+        |    SELECT unnest(string_split(text, ' ')) AS token FROM documents)
+        |  GROUP BY token),
+        |top AS (SELECT token, n FROM c ORDER BY n DESC, token LIMIT 1000)
+        |SELECT CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT)
+        |    AS vocab_id,
+        |  token, n
+        |FROM top ORDER BY vocab_id""".stripMargin),
+    Declared("text_simpson_diversity", textSimpsonDiversity _,
+      """WITH tc AS (
+        |  SELECT doc_id, tok, count(*) AS c FROM (
+        |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+        |    FROM documents)
+        |  GROUP BY doc_id, tok),
+        |agg AS (
+        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
+        |    CAST(sum(c * (c - 1)) AS BIGINT) AS collisions
+        |  FROM tc GROUP BY doc_id)
+        |SELECT doc_id, n, collisions,
+        |  CAST(collisions AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)
+        |    AS simpson_index
+        |FROM agg WHERE n >= 2 ORDER BY doc_id""".stripMargin),
+    Declared("text_pmi_collocations", textPmiCollocations _,
+      """WITH w AS (SELECT string_split(text, ' ') AS words FROM documents),
+        |toks AS (SELECT unnest(words) AS w FROM w),
+        |uni AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
+        |n AS (SELECT sum(c) AS n FROM uni),
+        |bgx AS (
+        |  SELECT unnest([array_to_string(words[i:i+1], ' ')
+        |                 FOR i IN range(1, len(words))]) AS bigram
+        |  FROM w WHERE len(words) >= 2),
+        |bgc AS (
+        |  SELECT bigram, count(*) AS c_xy FROM bgx GROUP BY bigram
+        |  HAVING count(*) >= 5),
+        |parts AS (
+        |  SELECT bigram, c_xy,
+        |    string_split(bigram, ' ')[1] AS w1,
+        |    string_split(bigram, ' ')[2] AS w2
+        |  FROM bgc)
+        |SELECT bigram, c_xy,
+        |  CAST(c_xy * n.n AS DOUBLE) / CAST(u1.c * u2.c AS DOUBLE) AS lift
+        |FROM parts CROSS JOIN n
+        |JOIN uni u1 ON parts.w1 = u1.w
+        |JOIN uni u2 ON parts.w2 = u2.w
+        |ORDER BY lift DESC, bigram LIMIT 50""".stripMargin),
+    Declared("text_sample_pergroup", textSamplePergroup _,
+      """SELECT lang, doc_id, rk FROM (
+        |  SELECT lang, doc_id,
+        |    row_number() OVER (PARTITION BY lang
+        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents)
+        |WHERE rk <= 20 ORDER BY lang, rk""".stripMargin),
+    Declared("text_chunk_overlap", textChunkOverlap _,
+      s"""WITH d AS (
+         |  SELECT doc_id, string_split(text, ' ') AS toks,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+         |  FROM documents),
+         |s AS (
+         |  SELECT doc_id, toks, n,
+         |    unnest(range(0, n, $ChunkStride)) AS chunk_start
+         |  FROM d WHERE n >= 1)
+         |SELECT doc_id,
+         |  CAST(chunk_start // $ChunkStride AS BIGINT) AS chunk_idx,
+         |  chunk_start,
+         |  CAST(least($ChunkSize, n - chunk_start) AS BIGINT) AS chunk_tokens,
+         |  ('0x' || substr(md5(array_to_string(
+         |     toks[CAST(chunk_start + 1 AS INT):CAST(chunk_start + $ChunkSize AS INT)],
+         |     ' ')), 1, 8))::BIGINT AS chunk_sig
+         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin),
+    Declared("text_decontaminate", textDecontaminate _,
+      """WITH sh AS (
+        |  SELECT doc_id,
+        |    list_distinct([array_to_string(words[i:i+2], ' ')
+        |                   FOR i IN range(1, len(words) - 1)]) AS shingles
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
+        |  WHERE len(words) >= 3),
+        |hits AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_intersect(shingles,
+        |      ['key agg row', 'batch window spark', 'the row a',
+        |       'data query small', 'join batch table', 'spark order data'])) AS BIGINT)
+        |      AS n_hits
+        |  FROM sh)
+        |SELECT doc_id, n_hits FROM hits WHERE n_hits >= 1 ORDER BY doc_id""".stripMargin),
+    Declared("text_lm_quality", textLmQuality _,
+      """WITH bg AS (
+        |  SELECT doc_id,
+        |    [array_to_string(words[i:i+1], ' ') FOR i IN range(1, len(words))] AS bigrams
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
+        |  WHERE len(words) >= 2),
+        |ex AS (SELECT doc_id, unnest(bigrams) AS bigram FROM bg),
+        |vocab AS (
+        |  SELECT bigram FROM (
+        |    SELECT bigram, count(*) AS c FROM ex GROUP BY bigram
+        |    ORDER BY c DESC, bigram LIMIT 100)),
+        |per AS (
+        |  SELECT ex.doc_id, count(*) AS n_bigrams,
+        |    CAST(sum(CASE WHEN vocab.bigram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+        |  FROM ex LEFT JOIN vocab ON ex.bigram = vocab.bigram
+        |  GROUP BY ex.doc_id)
+        |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, n_hits,
+        |  CAST(n_hits AS DOUBLE) / CAST(n_bigrams AS DOUBLE) AS hit_rate
+        |FROM per ORDER BY doc_id""".stripMargin),
+    Declared("text_length_deciles", textLengthDeciles _,
+      """WITH t AS (
+        |  SELECT lang, n_chars,
+        |    ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS decile
+        |  FROM documents)
+        |SELECT lang, CAST(decile AS BIGINT) AS decile, count(*) AS n_docs,
+        |  CAST(min(n_chars) AS BIGINT) AS min_chars,
+        |  CAST(max(n_chars) AS BIGINT) AS max_chars,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |FROM t GROUP BY lang, decile ORDER BY lang, decile""".stripMargin),
+    Declared("text_tfidf_topterms", textTfidfTopterms _,
+      """WITH n AS (SELECT count(*) AS n_docs FROM documents),
+        |tf AS (
+        |  SELECT doc_id, term, count(*) AS tf
+        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |        FROM documents) t
+        |  GROUP BY doc_id, term),
+        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+        |       FROM tf GROUP BY term),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
+        |    (tf.tf * n.n_docs * 1000000) // df.df AS score_q
+        |  FROM tf JOIN df ON tf.term = df.term, n),
+        |ranked AS (
+        |  SELECT doc_id, term, tf, df, score_q,
+        |    CAST(row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY score_q DESC, term ASC) AS BIGINT) AS rnk
+        |  FROM scored)
+        |SELECT doc_id, rnk, term, tf, df, score_q
+        |FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
+    // integer tf-idf weights (same monotone idf transform as topterms)
+    // make dots/norms exact Longs; cosine is one IEEE division
+    Declared("text_tfidf_cosine", textTfidfCosine _, TfidfCosineExactSql),
+    Declared("text_word_count", textWordCount _,
+      """SELECT token, count(*) AS n
+        |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
+        |GROUP BY token ORDER BY n DESC, token ASC LIMIT 20""".stripMargin),
+    // text_sample_stratified: the sampled SET is engine-RNG-specific, but
+    // the per-stratum fraction verdict is oracle-checkable
+    Declared("text_sample_stratified", textSampleStratified _,
+      """SELECT lang, count(*) AS n_total, true AS frac_ok
+        |FROM documents WHERE lang IN ('en', 'fr', 'es', 'de', 'zh')
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Declared("text_sample_hash", textSampleHash _,
+      """SELECT doc_id, lang FROM documents
+        |WHERE ((doc_id * 1103515245 + 12345) % 2147483647) % 100 <
+        |      (CASE WHEN lang IN ('en', 'fr') THEN 50 ELSE 20 END)
+        |ORDER BY doc_id""".stripMargin),
+    // same LCG coin as text_sample_hash -> DuckDB replays the exact
+    // exponential-race selection (keys differ at the top-50 boundary by
+    // ~1/n relative gaps, far beyond any 1-ulp libm ln() divergence)
+    Declared("text_sample_weighted", textSampleWeighted _,
+      """SELECT doc_id, lang, n_chars FROM (
+        |  SELECT doc_id, lang, n_chars,
+        |    -ln((((doc_id * 1103515245 + 12345) % 2147483647) + 1)
+        |        / 2147483648.0) / n_chars AS k
+        |  FROM documents ORDER BY k LIMIT 50)
+        |ORDER BY doc_id""".stripMargin),
+    Declared("text_quality", textQuality _,
+      s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
+         |f AS (SELECT doc_id, lang,
+         |  CAST(len(toks) AS BIGINT) AS n_tokens,
+         |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+         |  CAST(list_sum(list_transform(toks, t -> length(t))) AS BIGINT) AS chars_in_tokens,
+         |  CAST(len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in'], t))) AS BIGINT) AS n_stopwords
+         |FROM t)
+         |SELECT doc_id, lang, n_tokens, n_distinct, chars_in_tokens, n_stopwords,
+         |  CAST(chars_in_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_token_len,
+         |  CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS distinct_ratio,
+         |  CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
+         |  (CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE)) * 50.0 +
+         |  (CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE)) * 30.0 +
+         |  (CASE WHEN n_tokens >= 50 AND n_tokens <= 2000 THEN 20.0 ELSE 0.0 END) AS quality_score
+         |FROM f ORDER BY doc_id""".stripMargin),
+    Declared("text_token_count", textTokenCount _,
+      """SELECT doc_id,
+        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
+        |  CAST(list_sum(list_transform(string_split(text, ' '),
+        |       t -> (length(t) + 3) // 4)) AS BIGINT) AS bpe_est_tokens,
+        |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+', 0)) AS BIGINT) AS regex_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Declared("text_langid", textLangid _,
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
+        |s AS (SELECT doc_id, lang,
+        |  CAST(len(list_filter(toks, x -> list_contains(['the','a','and','of'], x))) AS BIGINT) AS score_en,
+        |  CAST(len(list_filter(toks, x -> list_contains(['el','la','los','que'], x))) AS BIGINT) AS score_es,
+        |  CAST(len(list_filter(toks, x -> list_contains(['der','die','das','und'], x))) AS BIGINT) AS score_de,
+        |  CAST(len(list_filter(toks, x -> list_contains(['le','les','des','une'], x))) AS BIGINT) AS score_fr,
+        |  CAST(len(list_filter(toks, x -> list_contains(['的','是','了','和'], x))) AS BIGINT) AS score_zh
+        |FROM t),
+        |p AS (SELECT lang,
+        |  CASE
+        |    WHEN greatest(score_en, score_es, score_de, score_fr, score_zh) = 0 THEN 'und'
+        |    WHEN score_en = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'en'
+        |    WHEN score_es = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'es'
+        |    WHEN score_de = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'de'
+        |    WHEN score_fr = greatest(score_en, score_es, score_de, score_fr, score_zh) THEN 'fr'
+        |    ELSE 'zh' END AS predicted
+        |FROM s)
+        |SELECT lang, predicted, count(*) AS n_docs FROM p
+        |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin),
+    Declared("text_fingerprint", textFingerprint _,
+      """SELECT doc_id,
+        |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint
+        |FROM documents ORDER BY doc_id""".stripMargin),
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Declared
 import graft.Tables._
 
 /** The remaining classic TPC-H plan shapes (Q2/Q9/Q11/Q12/Q14/Q16/Q20/Q21)
@@ -240,19 +241,8 @@ object Tpch {
       .orderBy(col("numwait").desc, col("s_name"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q2_min_cost_supplier" -> q2MinCostSupplier _,
-    "q9_product_profit" -> q9ProductProfit _,
-    "q11_important_parts" -> q11ImportantParts _,
-    "q12_shipping_delay" -> q12ShippingDelay _,
-    "q14_promo_revenue" -> q14PromoRevenue _,
-    "q16_supplier_counts" -> q16SupplierCounts _,
-    "q20_excess_shippers" -> q20ExcessShippers _,
-    "q21_waiting_suppliers" -> q21WaitingSuppliers _,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q2_min_cost_supplier" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q2_min_cost_supplier", q2MinCostSupplier _,
       """WITH ps AS (
         |  SELECT l_partkey, l_suppkey,
         |    CAST(min(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS cost_cents
@@ -270,8 +260,8 @@ object Tpch {
         |FROM eligible e
         |WHERE cost_cents = (SELECT min(cost_cents) FROM eligible i
         |                    WHERE i.p_partkey = e.p_partkey)
-        |ORDER BY s_acctbal_cents DESC, n_name, s_name, p_partkey""".stripMargin,
-    "q9_product_profit" ->
+        |ORDER BY s_acctbal_cents DESC, n_name, s_name, p_partkey""".stripMargin),
+    Declared("q9_product_profit", q9ProductProfit _,
       """SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  CAST(sum(CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS BIGINT)
         |    AS profit_cents
@@ -282,8 +272,8 @@ object Tpch {
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%red%'
         |GROUP BY n_name, o_year
-        |ORDER BY n_name, o_year DESC""".stripMargin,
-    "q11_important_parts" ->
+        |ORDER BY n_name, o_year DESC""".stripMargin),
+    Declared("q11_important_parts", q11ImportantParts _,
       """WITH val AS (
         |  SELECT l_partkey,
         |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS BIGINT) AS value_cents
@@ -294,8 +284,8 @@ object Tpch {
         |SELECT CAST(l_partkey AS BIGINT) AS p_partkey, value_cents
         |FROM val
         |WHERE value_cents * 500 > (SELECT CAST(sum(value_cents) AS BIGINT) FROM val)
-        |ORDER BY value_cents DESC, p_partkey""".stripMargin,
-    "q12_shipping_delay" ->
+        |ORDER BY value_cents DESC, p_partkey""".stripMargin),
+    Declared("q12_shipping_delay", q12ShippingDelay _,
       """SELECT CASE WHEN datediff('day', o_orderdate, l_shipdate) <= 30 THEN 'fast'
         |            WHEN datediff('day', o_orderdate, l_shipdate) <= 90 THEN 'medium'
         |            ELSE 'slow' END AS delay_bucket,
@@ -305,8 +295,8 @@ object Tpch {
         |    AS low_line_count
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE year(l_shipdate) = 1996
-        |GROUP BY delay_bucket ORDER BY delay_bucket""".stripMargin,
-    "q14_promo_revenue" ->
+        |GROUP BY delay_bucket ORDER BY delay_bucket""".stripMargin),
+    Declared("q14_promo_revenue", q14PromoRevenue _,
       """SELECT
         |  CAST(sum(CASE WHEN p_type = 'PROMO'
         |    THEN CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT) ELSE 0 END) AS BIGINT)
@@ -318,8 +308,8 @@ object Tpch {
         |    / CAST(sum(CAST(round(l_extendedprice*(1.0-l_discount)*100) AS BIGINT)) AS DOUBLE)
         |    AS promo_pct
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= DATE '1996-03-01' AND l_shipdate < DATE '1996-04-01'""".stripMargin,
-    "q16_supplier_counts" ->
+        |WHERE l_shipdate >= DATE '1996-03-01' AND l_shipdate < DATE '1996-04-01'""".stripMargin),
+    Declared("q16_supplier_counts", q16SupplierCounts _,
       """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
         |SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
@@ -327,8 +317,8 @@ object Tpch {
         |WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO' AND p_size IN (1,4,9,16,25,36,49)
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_excess_shippers" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    Declared("q20_excess_shippers", q20ExcessShippers _,
       """WITH vol AS (
         |  SELECT l_partkey, l_suppkey,
         |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS supp_qty
@@ -347,8 +337,8 @@ object Tpch {
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE 2 * supp_qty > part_qty
         |GROUP BY s_name, n_name
-        |ORDER BY n_parts DESC, s_name""".stripMargin,
-    "q21_waiting_suppliers" ->
+        |ORDER BY n_parts DESC, s_name""".stripMargin),
+    Declared("q21_waiting_suppliers", q21WaitingSuppliers _,
       """WITH l1 AS (
         |  SELECT l_orderkey, l_suppkey,
         |    CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END AS late
@@ -362,6 +352,6 @@ object Tpch {
         |  AND NOT EXISTS (SELECT 1 FROM l1 o WHERE o.l_orderkey = w.l_orderkey
         |              AND o.l_suppkey <> w.l_suppkey AND o.late = 1)
         |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name""".stripMargin,
+        |ORDER BY numwait DESC, s_name""".stripMargin),
   )
 }

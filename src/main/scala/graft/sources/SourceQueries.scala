@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Declared
 import graft.GraftSession.tempDir
 import graft.Tables._
 
@@ -288,71 +289,60 @@ object SourceQueries {
     path
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_csv_corrupt_roundtrip" -> sourceCsvCorruptRoundtrip _,
-    "source_schema_evolution" -> sourceSchemaEvolution _,
-    "source_orc_roundtrip" -> sourceOrcRoundtrip _,
-    "source_bloom_roundtrip" -> sourceBloomRoundtrip _,
-    "source_json_roundtrip" -> sourceJsonRoundtrip _,
-    "source_bucketed_join" -> sourceBucketedJoin _,
-    "source_dpp_join" -> sourceDppJoin _,
-    "scan_agg_pushdown" -> scanAggPushdown _,
-  )
-
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
     // the malformed lines are dropped by contract, so the oracle is
     // simply the 100 good rows the engine wrote
-    "source_csv_corrupt_roundtrip" ->
+    Declared("source_csv_corrupt_roundtrip", sourceCsvCorruptRoundtrip _,
       """SELECT o_orderkey,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
         |  o_orderpriority
-        |FROM orders ORDER BY o_orderkey LIMIT 100""".stripMargin,
-    // bloom skipping is false-positive-only, so the round-trip must
-    // reproduce the plain filter exactly
-    "source_bloom_roundtrip" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS total_cents
-        |FROM orders WHERE o_custkey IN (1, 7, 42, 999)
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "source_schema_evolution" ->
+        |FROM orders ORDER BY o_orderkey LIMIT 100""".stripMargin),
+    Declared("source_schema_evolution", sourceSchemaEvolution _,
       """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority
         |            ELSE '<legacy>' END AS priority,
         |  count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS total_cents,
         |  min(o_orderkey) AS min_orderkey
-        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin,
-    "source_orc_roundtrip" ->
+        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin),
+    Declared("source_orc_roundtrip", sourceOrcRoundtrip _,
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS total_cents,
         |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_customers
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "source_json_roundtrip" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    // bloom skipping is false-positive-only, so the round-trip must
+    // reproduce the plain filter exactly
+    Declared("source_bloom_roundtrip", sourceBloomRoundtrip _,
+      """SELECT o_custkey, count(*) AS n_orders,
+        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS total_cents
+        |FROM orders WHERE o_custkey IN (1, 7, 42, 999)
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    Declared("source_json_roundtrip", sourceJsonRoundtrip _,
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS total_cents,
         |  max(o_orderkey) AS max_orderkey
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "source_bucketed_join" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Declared("source_bucketed_join", sourceBucketedJoin _,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS total_cents,
         |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_customers
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "source_dpp_join" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Declared("source_dpp_join", sourceDppJoin _,
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |  count(*) AS n_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS total_cents
         |FROM orders WHERE year(o_orderdate) % 2 = 0
-        |GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "scan_agg_pushdown" ->
+        |GROUP BY 1 ORDER BY o_year""".stripMargin),
+    Declared("scan_agg_pushdown", scanAggPushdown _,
       """SELECT count(*) AS n_rows,
         |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
         |  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin),
   )
 }

@@ -40,10 +40,6 @@ object Sources {
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).json(path)
 
-  def writeParquet(df: DataFrame, path: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).parquet(path)
-
   def writeOrc(df: DataFrame, path: String,
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).orc(path)

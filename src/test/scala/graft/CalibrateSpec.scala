@@ -16,12 +16,12 @@ class CalibrateSpec extends AnyFunSuite {
 
   test("pure rules: planes formula, tables lookup monotone and clamped") {
     // planes = clamp(4, 24, ceil(log2(ceil(n/16))))
-    assert(Calibrate.srpPlanesFor(1) === 4)
-    assert(Calibrate.srpPlanesFor(256) === 4) // ceil(256/16)=16 -> 4
-    assert(Calibrate.srpPlanesFor(257) === 5) // ceil -> 17 -> 5
-    assert(Calibrate.srpPlanesFor(500) === 5)
-    assert(Calibrate.srpPlanesFor(5000) === 9)
-    assert(Calibrate.srpPlanesFor(Long.MaxValue / 2) === 24) // clamp
+    assert(Twins.srpPlanesFor(1) === 4)
+    assert(Twins.srpPlanesFor(256) === 4) // ceil(256/16)=16 -> 4
+    assert(Twins.srpPlanesFor(257) === 5) // ceil -> 17 -> 5
+    assert(Twins.srpPlanesFor(500) === 5)
+    assert(Twins.srpPlanesFor(5000) === 9)
+    assert(Twins.srpPlanesFor(Long.MaxValue / 2) === 24) // clamp
     // tables: monotone nondecreasing in planes, clamped to [4, 64]
     val tables = (4 to 24).map(Calibrate.srpTablesFor)
     assert(tables === tables.sorted)
@@ -29,26 +29,26 @@ class CalibrateSpec extends AnyFunSuite {
     // more planes -> fewer per-table collisions -> needs MORE tables
     assert(Calibrate.srpTablesFor(12) > Calibrate.srpTablesFor(4))
     // simhash width ladder: md5 64 -> md5 128 -> sha256 256
-    assert(Calibrate.simhashWidthFor(4) === 64)
-    assert(Calibrate.simhashWidthFor(5) === 128)
-    assert(Calibrate.simhashWidthFor(9) === 128)
+    assert(Twins.simhashWidthFor(4) === 64)
+    assert(Twins.simhashWidthFor(5) === 128)
+    assert(Twins.simhashWidthFor(9) === 128)
     // the r13 10x-probe measurement: 50k docs calibrate to 12 bits/band,
     // past md5's 128/13 = 9 ceiling -> the sha256 ladder rung
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(50000)) === 256)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(50000)) === 256)
     // the r13 1000x probe sat exactly at planes 19 = the 256-bit
     // layout's weakest-band ceiling; the next decade now routes to the
     // 512 rung (r14) instead of firing the saturation flag
-    assert(Calibrate.simhashWidthFor(19) === 256)
-    assert(Calibrate.simhashWidthFor(20) === 512)
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(50000000L)) === 512)
+    assert(Twins.simhashWidthFor(19) === 256)
+    assert(Twins.simhashWidthFor(20) === 512)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(50000000L)) === 512)
     // and the ladder now covers the SRP rule's whole clamped range
-    assert(Calibrate.simhashWidthFor(24) === 512)
+    assert(Twins.simhashWidthFor(24) === 512)
   }
 
   test("fixture row: one row, rules reproduced, caps floored") {
     val r = Calibrate.params(spark, dir)
     assert(r.nDocs === 500)
-    assert(r.srpPlanes === Calibrate.srpPlanesFor(r.nDocs))
+    assert(r.srpPlanes === Twins.srpPlanesFor(r.nDocs))
     assert(r.srpTables === Calibrate.srpTablesFor(r.srpPlanes))
     // 500 docs need 5 bits per band > the 64-bit layout's 4 -> 128
     assert(r.simhashBits === 128 && r.simhashBandBits === 9)
@@ -190,7 +190,7 @@ class CalibrateSpec extends AnyFunSuite {
     // the n_docs = 0 guard: the un-guarded formula would evaluate
     // bin(-1) and clamp to MaxPlanes, spuriously saturating the ladder
     assert(p0.srpPlanes === 4 && p0.simhashBits === 64 && !p0.simhashSaturated)
-    assert(p0.srpPlanes === Calibrate.srpPlanesFor(0))
+    assert(p0.srpPlanes === Twins.srpPlanesFor(0))
     // all-short docs: no shingles/grams survive the length gates
     val shorts = Seq((1L, "one"), (2L, "two wd")).toDF("doc_id", "text")
     val p1 = Calibrate.paramsFromDocs(Calibrate.calibrateFromDocs(shorts))
@@ -200,11 +200,10 @@ class CalibrateSpec extends AnyFunSuite {
 
   test("calibrated consumers: width routing and LSH output subset of exact") {
     val p = Calibrate.params(spark, dir)
+    // the width the routed query serves (pinned end to end in the
+    // declared rung routing test) follows the ladder from the planes
     assert(p.simhashBits === 128)
-    // auto-routing serves the 128-bit query's exact result
-    val auto = Calibrate.dedupSimhashAuto(spark, dir).collect().toSeq
-    val direct = ops.Dedup.dedupSimhash128(spark, dir).collect().toSeq
-    assert(auto === direct)
+    assert(p.simhashBits === Twins.simhashWidthFor(p.srpPlanes))
     // the auto-parameterized SRP-LSH leg verifies candidates exactly, so
     // its pairs are a subset of the exact posting-join pairs
     val lsh = Calibrate.textTfidfCosineLshAuto(spark, dir)
@@ -227,10 +226,10 @@ class CalibrateSpec extends AnyFunSuite {
     assert(got.map(t => (t._1, t._2, t._3)).toSeq === direct.toSeq)
     // selection rule: each rung reachable at its corpus decade (the
     // integer mirror the routed query and its oracle both consume)
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(100)) === 64)
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(500)) === 128)
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(50000)) === 256)
-    assert(Calibrate.simhashWidthFor(Calibrate.srpPlanesFor(50000000L)) === 512)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(100)) === 64)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(500)) === 128)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(50000)) === 256)
+    assert(Twins.simhashWidthFor(Twins.srpPlanesFor(50000000L)) === 512)
   }
 
   test("jaccard routing: fixture exceeds the budget and serves the prefix join") {

@@ -111,20 +111,20 @@ class DedupSpec extends AnyFunSuite {
         .wordShingles(col("text"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), md5(col("bg")).as("m"))
     // hashInput = true (text bigrams, md5 computed inside the expression)
-    val agg64 = Dedup.simhashFromFeatures(feats).collect()
+    val agg64 = Twins.simhashFromFeatures(feats).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fused64 = Dedup.simhashSignatures(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fused64 === agg64)
     assert(fused64.nonEmpty)
-    val agg128 = Dedup.simhash128FromFeatures(feats).collect()
+    val agg128 = Twins.simhash128FromFeatures(feats).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val fused128 = Dedup.simhash128Signatures(docs).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(fused128 === agg128)
     // hashInput = false (media path: CDC chunk fingerprints ARE md5 hex)
     val media = ops.Multimodal.mediaTable(spark, dir)
-    val aggMedia = Dedup.simhash128FromFeatures(
+    val aggMedia = Twins.simhash128FromFeatures(
       ops.Multimodal.cdcChunksOf(media)
         .select(col("doc_id"), col("chunk_md5").as("m"))).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -150,7 +150,7 @@ class DedupSpec extends AnyFunSuite {
     // recall floor: byte-identical texts (identical feature streams)
     // must pair at hamming 0 in the 128-bit space too
     val p128 = ops.Dedup.simhash128BandedPairs(
-      ops.Dedup.simhash128FromFeatures(feats)).collect()
+      Twins.simhash128FromFeatures(feats)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val dupGroups = Tables.documents(spark, dir)
       .select("doc_id", "text").collect()
@@ -165,7 +165,7 @@ class DedupSpec extends AnyFunSuite {
     def bucketVolume(banded: org.apache.spark.sql.DataFrame): Long = banded
       .groupBy(col("band"), col("bits")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n") * col("n"))).head().getLong(0)
-    val v64 = bucketVolume(ops.Dedup.simhashFromFeatures(feats)
+    val v64 = bucketVolume(Twins.simhashFromFeatures(feats)
       .select(col("doc_id"),
         explode(array((0 until 13).map { b =>
           val lo = b * 5; val w = math.min(5, 64 - lo)
@@ -176,7 +176,7 @@ class DedupSpec extends AnyFunSuite {
     // PRODUCTION band extraction (not a reimplementation — the r10 bug
     // was invisible because this test used to copy the same expression)
     val v128 = bucketVolume(ops.Dedup.simhash128Banded(
-      ops.Dedup.simhash128FromFeatures(feats)))
+      Twins.simhash128FromFeatures(feats)))
     assert(v128 * 2 <= v64,
       s"10-bit bands must at least halve candidate volume: 64-bit=$v64 128-bit=$v128")
   }
@@ -240,7 +240,7 @@ class DedupSpec extends AnyFunSuite {
       .select(col("doc_id"), explode(graft.functions.VectorExpressions
         .wordShingles(col("text"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), sha2(col("bg"), 256).as("m"))
-    val agg256 = Dedup.simhash256FromFeatures(feats).collect()
+    val agg256 = Twins.simhash256FromFeatures(feats).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val fused256 = Dedup.simhash256Signatures(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -271,9 +271,9 @@ class DedupSpec extends AnyFunSuite {
         .wordShingles(col("text"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), md5(col("bg")).as("m"))
     val v128 = bucketVolume(Dedup.simhash128Banded(
-      Dedup.simhash128FromFeatures(mdFeats)))
-    val v256 = bucketVolume(Dedup.simhash256Banded(
-      Dedup.simhash256FromFeatures(feats)))
+      Twins.simhash128FromFeatures(mdFeats)))
+    val v256 = bucketVolume(Dedup.simhashArrayBanded(
+      Twins.simhash256FromFeatures(feats), 256))
     assert(v256 <= v128,
       s"20-bit bands must not concentrate buckets: 128-bit=$v128 256-bit=$v256")
   }
@@ -292,7 +292,7 @@ class DedupSpec extends AnyFunSuite {
       5L -> Seq(0x8000000000000000L, 0x0000000000000001L,
         0x8000000000000000L, 0x0000000000000001L))
     val sigs = fixtures.toDF("doc_id", "sig")
-    val got = ops.Dedup.simhash256Banded(sigs)
+    val got = Dedup.simhashArrayBanded(sigs, 256)
       .select(col("doc_id"), col("band"), col("bits")).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     // independent reimplementation of the BALANCED layout rule: the
@@ -321,7 +321,7 @@ class DedupSpec extends AnyFunSuite {
         .wordShingles(col("text"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), concat(sha2(col("bg"), 256),
         sha2(concat(lit("#"), col("bg")), 256)).as("m"))
-    val agg512 = Dedup.simhash512FromFeatures(feats).collect()
+    val agg512 = Twins.simhash512FromFeatures(feats).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val fused512 = Dedup.simhash512Signatures(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -345,10 +345,10 @@ class DedupSpec extends AnyFunSuite {
       .select(col("doc_id"), explode(graft.functions.VectorExpressions
         .wordShingles(col("text"), 2, distinct = false)).as("bg"))
       .select(col("doc_id"), sha2(col("bg"), 256).as("m"))
-    val v256 = bucketVolume(Dedup.simhash256Banded(
-      Dedup.simhash256FromFeatures(shaFeats)))
+    val v256 = bucketVolume(Dedup.simhashArrayBanded(
+      Twins.simhash256FromFeatures(shaFeats), 256))
     val v512 = bucketVolume(Dedup.simhashArrayBanded(
-      Dedup.simhash512FromFeatures(feats), 512))
+      Twins.simhash512FromFeatures(feats), 512))
     assert(v512 <= v256,
       s"40-bit bands must not concentrate buckets: 256-bit=$v256 512-bit=$v512")
   }

@@ -45,8 +45,6 @@ class InsightsRandomizedSpec extends AnyFunSuite {
         .collect().map(_.getString(0)).toSet
       val hybrid = InsightsEngine.insightsHybrid(df, cfg, n, highCard = Set("num"))
         .collect().map(_.getString(0)).toSet
-      val dict = InsightsEngine.insightsCube(df, cfg, n, dictValues = true)
-        .collect().map(_.getString(0)).toSet
       val native = InsightsEngine.insightsCubeNative(df, cfg, n)
         .collect().map(_.getString(0)).toSet
       val nativeDict = InsightsEngine.insightsCubeNativeDict(df, cfg, n)
@@ -65,7 +63,6 @@ class InsightsRandomizedSpec extends AnyFunSuite {
       assert(cube === loop, s"cube != loop at seed $seed")
       assert(incremental === loop, s"incremental != loop at seed $seed")
       assert(hybrid === loop, s"hybrid != loop at seed $seed")
-      assert(dict === loop, s"dict != loop at seed $seed")
       assert(native === loop, s"native != loop at seed $seed")
       assert(nativeDict === loop, s"nativeDict != loop at seed $seed")
       assert(iceberg1 === loop, s"iceberg(num) != loop at seed $seed")
@@ -140,7 +137,7 @@ class InsightsRandomizedSpec extends AnyFunSuite {
       .reduce(_ unionAll _).collect().map(_.getString(0)).toSet
     val cube = InsightsEngine.insightsCube(df, cfg4, n)
       .collect().map(_.getString(0)).toSet
-    val dict = InsightsEngine.insightsCube(df, cfg4, n, dictValues = true)
+    val dict = InsightsEngine.insightsCubeNativeDict(df, cfg4, n)
       .collect().map(_.getString(0)).toSet
     val pruned = InsightsEngine.insightsPruned(df, cfg4)
       .collect().map(_.getString(0)).toSet

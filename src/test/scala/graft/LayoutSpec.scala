@@ -18,8 +18,8 @@ class LayoutSpec extends AnyFunSuite {
       .toDF("x", "y")
     val out = grid.select(col("x"), col("y"),
         Layout.zValue(col("x"), col("y"), bits = 4).as("z"))
-      .withColumn("x2", Layout.zExtract(col("z"), odd = false, bits = 4))
-      .withColumn("y2", Layout.zExtract(col("z"), odd = true, bits = 4))
+      .withColumn("x2", Twins.zExtract(col("z"), odd = false, bits = 4))
+      .withColumn("y2", Twins.zExtract(col("z"), odd = true, bits = 4))
       .collect()
     assert(out.map(_.getLong(2)).toSet.size === 256) // injective
     assert(out.map(_.getLong(2)).forall(z => z >= 0 && z < 256)) // onto

@@ -89,7 +89,7 @@ class MultimodalSpec extends AnyFunSuite {
     // fixture media (ASCII-range bytes)
     val media = Multimodal.mediaTable(spark, dir)
     val got = chunks(Multimodal.cdcChunksOf(media))
-    val want = chunks(Multimodal.cdcChunksDeclarative(media))
+    val want = chunks(Twins.cdcChunksDeclarative(media))
     assert(got === want)
     assert(got.nonEmpty)
     // adversarial binaries covering the full unsigned byte range
@@ -99,7 +99,7 @@ class MultimodalSpec extends AnyFunSuite {
       "concat(unhex(md5(string(id))), unhex(md5(string(id + 1)))," +
         " unhex(md5(string(id * 7)))) AS media")
     assert(chunks(Multimodal.cdcChunksOf(bin)) ===
-      chunks(Multimodal.cdcChunksDeclarative(bin)))
+      chunks(Twins.cdcChunksDeclarative(bin)))
   }
 
   test("CDC chunking re-synchronizes after a front insertion; fixed-offset does not") {

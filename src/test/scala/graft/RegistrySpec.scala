@@ -1,17 +1,16 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The declared-query registry: every query has a DuckDB oracle, and no
-  * module's query is lost to a name collision in the merged maps. */
+/** The declared-query registry: the surface is 234 queries, and a name
+  * declared twice fails when the registry is built. */
 class RegistrySpec extends AnyFunSuite {
   test("every declared query has an oracle and no name collides across modules") {
-    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.moduleQueries.map(_.size).sum === SparkEntry.queries.size)
-    assert(SparkEntry.moduleOracles.map(_.size).sum === SparkEntry.oracleSql.size)
-    assert(SparkEntry.moduleQueries.size === SparkEntry.moduleOracles.size)
-    SparkEntry.moduleQueries.zip(SparkEntry.moduleOracles).foreach { case (q, o) =>
-      assert(q.keySet === o.keySet)
-    }
+    assert(SparkEntry.declared.size === 234)
+    assert(SparkEntry.queries.size === 234)
+    val d = Declared("q", (s: SparkSession, _: String) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(Seq(d, d.copy(oracleSql = "SELECT 2"))))
+    assert(e.getMessage.contains("declared more than once: q"))
   }
 }

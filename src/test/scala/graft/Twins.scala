@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.TextAnalysis
 
-/** Equivalence twins: earlier formulations of declared bodies, kept only
-  * so the specs can pin the current body against them. */
+/** Equivalence twins: independent formulations of declared bodies and
+  * rules (earlier plans, oracle-shaped expression trees, plain-Scala
+  * mirrors), kept only so the specs can pin the current code against them. */
 object Twins {
   /** The r16 explode-per-plane SRP bucket formulation — equivalence twin
     * for `TextAnalysis.tfidfBuckets` (the r17 single-aggregate rewrite),
@@ -110,5 +111,106 @@ object Twins {
       .select(col("l_returnflag"), col("total_weight"),
         col("weighted_median_cents"))
       .orderBy(col("l_returnflag"))
+  }
+
+  /** Scala mirror of the calibrator's SRP planes rule
+    * (`Calibrate.planesCol`): ceil(log2(ceil(n / 16))) clamped to
+    * [MinPlanes, MaxPlanes], MinPlanes for an empty corpus. */
+  def srpPlanesFor(nDocs: Long): Int = {
+    import graft.ops.Calibrate.{MaxPlanes, MinPlanes, TargetBucketDocs}
+    if (nDocs <= 0) return MinPlanes
+    val buckets = (nDocs + TargetBucketDocs - 1) / TargetBucketDocs
+    val ceilLog2 =
+      if (buckets <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)
+    math.min(MaxPlanes, math.max(MinPlanes, ceilLog2))
+  }
+
+  /** Scala mirror of the calibrator's simhash width ladder
+    * (`simhash_bits` of the calibrated row). */
+  def simhashWidthFor(planes: Int): Int =
+    if (planes <= 4) 64 else if (planes <= 9) 128
+    else if (planes <= 19) 256 else 512
+
+  /** The explode + vote-aggregate SimHash formulation the DuckDB oracles
+    * mirror 1:1 — equivalence twin of the fused `SimhashVotes` kernel
+    * behind `Dedup.simhash{,128,256,512}Signatures`, pinned bit-for-bit
+    * in DedupSpec (text and media features). Input (doc_id, m), m the hex digest
+    * of each feature occurrence; vote bit k reads bit k % 32 of the
+    * 32-bit hex word `words(k / 32)`. Output (doc_id, sig), one long per
+    * 64 vote bits, lowest bits first. */
+  def simhashVoteAggregate(feats: DataFrame, words: Seq[Int]): DataFrame = {
+    val nBits = 32 * words.size
+    val tok = feats.select(col("doc_id") +: words.distinct.map(wd =>
+      conv(substring(col("m"), wd * 8 + 1, 8), 16, 10).cast("long").as(s"h$wd")): _*)
+    val bitSums = (0 until nBits).map { k =>
+      sum(when(shiftright(col(s"h${words(k / 32)}"), k % 32).bitwiseAND(1) === 1, 1)
+        .otherwise(-1)).as(s"s_$k")
+    }
+    val sigWords = (0 until nBits / 64).map { wd =>
+      (0 until 64).map { b =>
+        when(col(s"s_${64 * wd + b}") > 0, shiftleft(lit(1L), b)).otherwise(0L)
+      }.reduce(_.bitwiseOR(_))
+    }
+    tok.groupBy(col("doc_id"))
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"), array(sigWords: _*).as("sig"))
+  }
+
+  /** 64-bit twin of `Dedup.simhashFromFeatureArray` over md5 hex:
+    * (doc_id, simhash), bits 0..31 from the second md5 word. */
+  def simhashFromFeatures(feats: DataFrame): DataFrame =
+    simhashVoteAggregate(feats, Seq(1, 0))
+      .select(col("doc_id"), element_at(col("sig"), 1).as("simhash"))
+
+  /** 128-bit twin of `Dedup.simhash128FromFeatureArray` over md5 hex:
+    * (doc_id, sig_hi, sig_lo). */
+  def simhash128FromFeatures(feats: DataFrame): DataFrame =
+    simhashVoteAggregate(feats, 0 until 4)
+      .select(col("doc_id"), element_at(col("sig"), 2).as("sig_hi"),
+        element_at(col("sig"), 1).as("sig_lo"))
+
+  /** 256-bit twin of `Dedup.simhash256FromFeatureArray` over sha256 hex. */
+  def simhash256FromFeatures(feats: DataFrame): DataFrame =
+    simhashVoteAggregate(feats, 0 until 8)
+
+  /** 512-bit twin of `Dedup.simhash512FromFeatureArray` over the
+    * 128-char doubled-sha256 hex. */
+  def simhash512FromFeatures(feats: DataFrame): DataFrame =
+    simhashVoteAggregate(feats, 0 until 16)
+
+  /** Inverse of `Layout.zValue` (LayoutSpec): extract the even (x) or odd (y) bit lanes. */
+  def zExtract(z: Column, odd: Boolean, bits: Int = 8): Column =
+    (0 until bits).map { k =>
+      shiftleft(shiftright(z, 2 * k + (if (odd) 1 else 0)).bitwiseAND(1), k)
+    }.reduce(_.bitwiseOR(_))
+
+  /** The declarative per-offset twin of `Multimodal.cdcChunksOf`: the same
+    * polynomial window-hash boundary rule spelled as array expressions
+    * (a materialized byte array + an 8-term sum per offset — the shape
+    * the DuckDB oracle replays). MultimodalSpec pins bit-for-bit
+    * equality with the compiled rolling-hash expression. */
+  def cdcChunksDeclarative(media: DataFrame): DataFrame = {
+    val win = 8
+    // 257^(7-j) mod 1000003 for j = 0..7
+    val cs = Seq(709659L, 107820L, 529604L, 457315L, 974545L, 66049L, 257L, 1L)
+    val sumExpr = cs.zipWithIndex
+      .map { case (c, j) => s"element_at(B, i - ${7 - j}) * ${c}L" }
+      .mkString(" + ")
+    media
+      .select(col("doc_id"), lower(hex(col("media"))).as("hx"))
+      .withColumn("nb", (length(col("hx")) / 2).cast("int"))
+      .filter(col("nb") >= win)
+      .withColumn("B", expr(
+        "transform(sequence(0, nb - 1), t -> CAST(conv(substring(hx, t * 2 + 1, 2), 16, 10) AS BIGINT))"))
+      .withColumn("bounds", expr(
+        s"filter(sequence($win, nb), i -> (($sumExpr) % 1000003L) % 16 = 0)"))
+      .withColumn("starts", expr("concat(array(0), bounds)"))
+      .withColumn("ends", expr("concat(bounds, array(nb))"))
+      .select(col("doc_id"), explode(expr(
+        """filter(zip_with(starts, ends,
+          |              (st, en) -> IF(en > st,
+          |                             md5(substring(hx, st * 2 + 1, (en - st) * 2)),
+          |                             NULL)),
+          |       x -> x IS NOT NULL)""".stripMargin)).as("chunk_md5"))
   }
 }

@@ -84,11 +84,11 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
   }
 
-  test("HashOrderPrefix == transform/array_sort/slice HOF form") {
+  test("HashOrderKeys == HOF sort order, hot last, both eval paths") {
     // the expression's (is_hot, xxhash64 seed-42, value) order is
     // exactly the lexicographic struct order of (h, k, v), so default
-    // array_sort is the reference; prefix length = n - ceil(t*n) + 1
-    val t = 0.8
+    // array_sort is the reference; its first |S| − ceil(t·|S|) + 1 keys
+    // are then the prefix the containment join's `pos` filter keeps
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         VectorExpressions.wordShingles(col("text"), 3, distinct = true)
@@ -101,33 +101,32 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .orderBy(col("df").desc, col("s")).limit(5)
       .agg(array_union(collect_list(col("s")),
         array(lit("\u0000absent"))).as("hot"))
+    val hofKeys = expr("""transform(
+             |  array_sort(transform(shingles, s -> struct(
+             |    CASE WHEN array_contains(hot, s) THEN 1 ELSE 0 END AS h,
+             |    xxhash64(s) AS k, s AS v))),
+             |  x -> x.k)""".stripMargin)
     val both = docs.crossJoin(broadcast(hot)).select(col("doc_id"),
-      VectorExpressions.hashOrderPrefix(col("shingles"), col("hot"), t)
-        .as("native"),
-      expr(s"""slice(
-             |  transform(
-             |    array_sort(transform(shingles, s -> struct(
-             |      CASE WHEN array_contains(hot, s) THEN 1 ELSE 0 END AS h,
-             |      xxhash64(s) AS k, s AS v))),
-             |    x -> x.v),
-             |  1, CAST(size(shingles) - ceil(size(shingles) * $t) + 1 AS INT))"""
-        .stripMargin).as("hof"))
+      VectorExpressions.hashOrderKeys(col("shingles"), col("hot")).as("keys"),
+      hofKeys.as("full_hof"))
     assert(both.count() > 0)
-    assert(both.filter(col("native") =!= col("hof")).count() === 0)
+    assert(both.filter(col("keys") =!= col("full_hof")).count() === 0)
     // interpreted path agrees too
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(both.filter(col("native") =!= col("hof")).count() === 0)
+    try assert(both.filter(col("keys") =!= col("full_hof")).count() === 0)
     finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    // hot members sort LAST: with every shingle hot, the prefix is still
-    // produced (order falls back to hash within the hot class)
-    val allHot = docs.select(col("doc_id"),
-      VectorExpressions.hashOrderPrefix(col("shingles"), col("shingles"), t)
-        .as("p"), size(col("shingles")).as("n"))
-      .withColumn("expect", col("n") - ceil(col("n") * t) + 1)
-    assert(allHot.filter(size(col("p")) =!= col("expect")).count() === 0)
+    // with every shingle hot the order falls back to hash within the
+    // hot class, and every element is still keyed
+    val allHot = docs.withColumn("hot", col("shingles")).select(
+      VectorExpressions.hashOrderKeys(col("shingles"), col("hot")).as("keys"),
+      hofKeys.as("full_hof"), size(col("shingles")).as("n"))
+    assert(allHot.filter(col("keys") =!= col("full_hof") ||
+      size(col("keys")) =!= col("n")).count() === 0)
   }
 
   test("HashOrderKeys: prefix slice == xxhash64 of HashOrderPrefix; full == HOF sort") {
+    // HashOrderPrefix is the value prefix of the (h, k, v) sort: its
+    // first n − ceil(t·n) + 1 shingles, here in its HOF form
     val t = 0.8
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -140,9 +139,14 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .agg(collect_list(col("s")).as("hot"))
     val both = docs.crossJoin(broadcast(hot)).select(col("doc_id"),
       VectorExpressions.hashOrderKeys(col("shingles"), col("hot")).as("keys"),
-      transform(
-        VectorExpressions.hashOrderPrefix(col("shingles"), col("hot"), t),
-        s => xxhash64(s)).as("prefix_hof"),
+      expr(s"""transform(slice(
+             |  transform(
+             |    array_sort(transform(shingles, s -> struct(
+             |      CASE WHEN array_contains(hot, s) THEN 1 ELSE 0 END AS h,
+             |      xxhash64(s) AS k, s AS v))),
+             |    x -> x.v),
+             |  1, CAST(size(shingles) - ceil(size(shingles) * $t) + 1 AS INT)),
+             |  s -> xxhash64(s))""".stripMargin).as("prefix_hof"),
       expr("""transform(
              |  array_sort(transform(shingles, s -> struct(
              |    CASE WHEN array_contains(hot, s) THEN 1 ELSE 0 END AS h,
@@ -151,13 +155,37 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(both.count() > 0)
     // the full ordered key array is the HOF sort's key projection
     assert(both.filter(col("keys") =!= col("full_hof")).count() === 0)
-    // and its first |S| − ceil(t·|S|) + 1 keys ARE HashOrderPrefix's
-    // prefix (hashed) — so pos < that bound over a posexplode of keys
-    // is exactly the prefix relation the containment join uses
+    // and its first |S| − ceil(t·|S|) + 1 keys are the hashed prefix, so
+    // pos < that bound over a posexplode of keys is exactly the prefix
+    // relation the containment join uses
     val sliced = both.withColumn("k",
         (size(col("keys")) - ceil(size(col("keys")) * t) + 1).cast("int"))
       .filter(slice(col("keys"), lit(1), col("k")) =!= col("prefix_hof"))
     assert(sliced.count() === 0)
+  }
+
+  test("Digests refuses a nested lease of the same algorithm on one thread") {
+    import VectorExpressions.Digests
+    val outer = Digests.get("MD5")
+    try {
+      val e = intercept[IllegalStateException](Digests.get("MD5"))
+      assert(e.getMessage.contains("nested Digests.get(MD5)"))
+      // another algorithm is a different digest and may be held at once
+      Digests.get("SHA-256").release()
+    } finally outer.release()
+    // once released, the next holder on this thread gets it, reset
+    val again = Digests.get("MD5")
+    try assert(again.md eq outer.md)
+    finally again.release()
+    // the kernels release in a finally: Md5HeadLong evaluated twice in a
+    // row on this thread (interpreted path) leaves nothing lent
+    val row = org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString("abc"))
+    val head = VectorExpressions.Md5HeadLong(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(
+        0, org.apache.spark.sql.types.StringType, nullable = false), 8)
+    assert(head.eval(row) === head.eval(row))
+    Digests.get("MD5").release()
   }
 
   test("LongArrayIntersectCount == size(array_intersect) on distinct arrays") {
